@@ -8,12 +8,12 @@ import org.apache.spark.storage.StorageLevel
   * Operators like MinHash-LSH and sign-LSH ANN materialize an
   * intermediate (signatures, prepared corpus) that both sides of a
   * self-join read. Bare `persist()` leaks: every invocation in a long
-  * session (bench warm+timed pass, scale-probe loops over growing
-  * replicas) registers another cached table, bounded only by the cache
+  * session (repeated passes over one input, loops over growing
+  * inputs) registers another cached table, bounded only by the cache
   * manager's plan-dedup. Routing the persist through `swap` keeps at
   * most ONE live table per call-site key: re-invoking the operator on a
   * NEW input unpersists the previous round's table; re-invoking on the
-  * SAME input (plan-equal — the bench warm/timed case) keeps the shared
+  * SAME input (plan-equal — a repeated pass) keeps the shared
   * cache entry hot.
   *
   * SINGLE-SLOT CONTRACT: `swap`/`swapKeyed` keep exactly ONE live

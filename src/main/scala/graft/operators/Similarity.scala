@@ -264,9 +264,9 @@ object Similarity {
   }
 
   // Evicted via OpCache.clear(): entries hold localCheckpoint'd tables
-  // keyed by (session, plan hash) — without eviction, scale-probe
-  // loops and per-test sessions would retain one table per distinct
-  // input plan for the JVM lifetime.
+  // keyed by (session, plan hash) — without eviction, loops over
+  // growing inputs and per-test sessions would retain one table per
+  // distinct input plan for the JVM lifetime.
   private val kmeansMemo = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int),
       (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]

@@ -27,9 +27,9 @@ object CoreQueries {
 
   /** Fixture-table loader. The driver's `events.parquet` carries a
     * TIMESTAMP(NANOS) column, which Spark only reads as a nanos Long
-    * (`spark.sql.legacy.parquet.nanosAsLong=true`, set in Verify/Bench
-    * sessions); convert it back to a microsecond timestamp here —
-    * lossless, the generated data is µs-precision.
+    * (`spark.sql.legacy.parquet.nanosAsLong=true`, set in the Verify,
+    * Explain and benchmark sessions); convert it back to a microsecond
+    * timestamp here — lossless, the generated data is µs-precision.
     */
   def t(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = s.read.parquet(s"$dir/$name.parquet")

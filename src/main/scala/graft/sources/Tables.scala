@@ -2,33 +2,14 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** IO layer (SURVEY §7.1 item 2): sources, sinks, catalog bootstrap —
   * the engine-native replacements for the reference's pandas/psycopg2
-  * plumbing (SURVEY §2.1 / §2.8).
+  * plumbing (SURVEY §2.1 / §2.8). The CSV source is
+  * `CityBike.readRides` and the parquet source is `CoreQueries.t`.
   */
 object Tables {
-
-  /** S1 generalization: CSV source with explicit schema (never
-    * inference — determinism) and configurable delimiter.
-    * Reference: create_db_from_csv.py:10.
-    */
-  def readCsv(spark: SparkSession, path: String, schema: StructType, sep: String = ";"): DataFrame =
-    spark.read.option("header", "true").option("sep", sep).schema(schema).csv(path)
-
-  /** Parquet source; `nanos-as-long` timestamp columns are normalized
-    * back to microsecond timestamps (driver fixture quirk).
-    */
-  def readParquet(spark: SparkSession, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
-    df.schema.fields.foldLeft(df) {
-      case (acc, f) if f.name == "ts" && f.dataType == LongType =>
-        acc.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      case (acc, _) => acc
-    }
-  }
 
   /** JSON-lines source with an explicit schema (never inference — a
     * schema-inference pass reads the whole input twice and locks in

@@ -686,11 +686,9 @@ object EventStreams {
     } else healMemo.put(mk, java.lang.Boolean.TRUE)
   }
 
-  // private[graft]: the scale probe's untouched-bucket assertion must
-  // compute buckets with the SAME hash/modulus expression the fold
-  // uses — a re-implemented copy there diverged silently if either
-  // changed (the r14 review finding)
-  private[graft] def bucketOf(keys: Seq[String], nBuckets: Int) =
+  // the one bucket expression: bootstrap, staging, the touched-bucket
+  // scan and the re-pin check must all hash with the SAME modulus
+  private def bucketOf(keys: Seq[String], nBuckets: Int) =
     pmod(xxhash64(keys.map(col): _*), lit(nBuckets.toLong)).cast("int")
 
   // Last watermark this JVM read or wrote, per (SparkContext, wm
@@ -847,21 +845,13 @@ object EventStreams {
     val staging = stateTable + "__staging"
     val wm = stateTable + "__wm"
     val touchedTbl = stateTable + "__touched"
-    // ops diagnostics: SPARK_GRAFT_FOLD_PROF=1 prints per-step fold
-    // timings (the knob the verify recipe documents); free when unset
-    def prof[A](l: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (sys.env.contains("SPARK_GRAFT_FOLD_PROF"))
-        println(f"[fold] $l%-16s ${(System.nanoTime()-t0)/1e9}%6.3f s")
-      r
-    }
     // crash recovery first: an orphaned staging table means the
     // previous fold died mid-publish — replay its (idempotent) bucket
     // copy so the watermark check below sees a consistent table. The
     // touched-bucket list was persisted BEFORE staging, so emptied
     // buckets (touched but absent from staging — a full-bucket
     // delete) are replayed too.
-    if (prof("stg-exists")(spark.catalog.tableExists(staging))) {
+    if (spark.catalog.tableExists(staging)) {
       if (spark.catalog.tableExists(stateTable)) {
         val touched =
           if (spark.catalog.tableExists(touchedTbl))
@@ -890,7 +880,7 @@ object EventStreams {
         spark.catalog.refreshTable(stateTable)
         spark.sql(s"DROP TABLE IF EXISTS $touchedTbl")
       }
-    } else prof("touched-probe") {
+    } else {
       // no staging: a touched table here is residue of a crash after
       // its publish was fully consumed (or before its staging was
       // written — rewritten on replay either way); it describes no
@@ -909,14 +899,14 @@ object EventStreams {
     // a compaction swap that died after its RENAME leaves the table
     // EXISTING with stale partition metadata and no staging — only its
     // marker betrays it; repair + re-pin before reading anything
-    prof("compact-heal")(healCompaction(spark, stateTable))
+    healCompaction(spark, stateTable)
     // Replay check. The wm-table read is skipped when this JVM already
     // knows the watermark (wmMemo, updated on every read and write):
     // the fold contract is single-writer per state table — the
     // foreachBatch sink — so in-session the memo cannot go stale while
     // the table exists; an external drop (test teardown, rebuild)
     // clears it via the tableExists probe below.
-    val applied = prof("wm-check") {
+    val applied = {
       if (!spark.catalog.tableExists(wm)) { wmMemo.remove(ctxKey(spark, wm)); false }
       else if (!spark.catalog.tableExists(stateTable)) {
         // ORPHANED watermark: the state table was dropped externally
@@ -1005,11 +995,11 @@ object EventStreams {
       }
       // touched buckets + may-this-batch-empty-one in ONE delta scan:
       // ≤ nBuckets result rows — partition metadata, not data
-      val perBucket = prof("perbucket")(batch
+      val perBucket = batch
         .select(bucketOf(keys, nBuckets).as("__bucket"),
           when(col(opCol) === "D", 1).otherwise(0).as("__d"))
         .groupBy("__bucket").agg(max(col("__d")).as("__d"))
-        .collect())
+        .collect()
       val touched = perBucket.map(_.getInt(0)).sorted
       val mayEmpty = perBucket.exists(_.getInt(1) == 1)
       if (touched.isEmpty) {
@@ -1022,7 +1012,7 @@ object EventStreams {
         // next to it. Skipped entirely for delete-free batches: with
         // no 'D' in the delta no bucket can be emptied, so staging
         // alone replays the publish completely.
-        if (mayEmpty) prof("touched-write") {
+        if (mayEmpty) {
           import spark.implicits._
           graft.sources.Tables.overwriteTable(
             touched.toSeq.toDF("bucket").coalesce(1), touchedTbl)
@@ -1037,29 +1027,25 @@ object EventStreams {
         // writes a fragment into every bucket directory — files =
         // tasks × buckets, the small-file churn the compaction
         // maintenance would otherwise have to clean per batch)
-        prof("staging-write")(next.withColumn("__bucket", bucketOf(keys, nBuckets))
+        next.withColumn("__bucket", bucketOf(keys, nBuckets))
           .repartition(math.max(1, touched.length), col("__bucket"))
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .format("parquet").partitionBy("__bucket").saveAsTable(staging))
-        prof("publish")(copyBuckets(spark, staging, stateTable,
-          if (mayEmpty) touched else Array.empty[Int]))
+          .format("parquet").partitionBy("__bucket").saveAsTable(staging)
+        copyBuckets(spark, staging, stateTable,
+          if (mayEmpty) touched else Array.empty[Int])
       }
     }
     // watermark strictly last: only a fully-published batch advances
     // it. insertInto-overwrite after first creation: truncate+write in
     // place, no drop/create catalog churn per micro-batch
-    prof("wm-write") {
-      val wmRow = spark.sql(s"SELECT CAST($batchId AS BIGINT) AS last_batch")
-      if (spark.catalog.tableExists(wm))
-        wmRow.write.mode(org.apache.spark.sql.SaveMode.Overwrite).insertInto(wm)
-      else graft.sources.Tables.overwriteTable(wmRow, wm)
-      wmMemo.put(ctxKey(spark, wm), batchId)
-    }
-    prof("drops") {
-      // touched first — see the recovery block's ordering comment
-      spark.sql(s"DROP TABLE IF EXISTS $touchedTbl")
-      spark.sql(s"DROP TABLE IF EXISTS $staging")
-    }
+    val wmRow = spark.sql(s"SELECT CAST($batchId AS BIGINT) AS last_batch")
+    if (spark.catalog.tableExists(wm))
+      wmRow.write.mode(org.apache.spark.sql.SaveMode.Overwrite).insertInto(wm)
+    else graft.sources.Tables.overwriteTable(wmRow, wm)
+    wmMemo.put(ctxKey(spark, wm), batchId)
+    // touched first — see the recovery block's ordering comment
+    spark.sql(s"DROP TABLE IF EXISTS $touchedTbl")
+    spark.sql(s"DROP TABLE IF EXISTS $staging")
   }
 
   /** Partition-scoped publish of `staging` into `target` by

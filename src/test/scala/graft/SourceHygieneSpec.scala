@@ -55,8 +55,6 @@ class SourceHygieneSpec extends AnyFunSuite {
         "1-row watermark marker; touched-bucket list, SHOW PARTITIONS, and the " +
           "once-per-unpinned-table re-pin layout check (all <= nBuckets rows)"),
       "sources/Tables.scala" -> (1, "SHOW PARTITIONS (partition-count rows)"),
-      "Bench.scala" -> (2, "the yardstick probe's 1-row aggregates"),
-      "ScaleProbe.scala" -> (1, "probe touched-bucket distinct (<= nBuckets rows)"),
       "Explain.scala" -> (2,
         "exec-mode audit collects: execute-to-read-the-final-AQE-plan, an audit " +
           "tool run at small SF by its own contract — never a query path"))
@@ -67,5 +65,23 @@ class SourceHygieneSpec extends AnyFunSuite {
       s"collect() site drift — audited ${audited.map { case (f, (n, _)) => f -> n }}, " +
         s"found $counts. A data-path collect is a scale-killer; if the new site is a " +
         "bounded metadata read, add it here WITH its bound.")
+  }
+
+  test("only the CLI mains read the environment or system properties") {
+    // engine behavior is set by arguments and Spark conf, never by a
+    // hidden env knob; Verify and Explain read SPARK_GRAFT_CPUS, and
+    // Verify its query filter
+    val mains = Set("Verify.scala", "Explain.scala")
+    val hits = for {
+      (f, text) <- sources if !mains(f)
+      (line, i) <- text.linesIterator.zipWithIndex
+      if line.contains("sys.env") || line.contains("System.getenv") ||
+        line.contains("sys.props")
+    } yield s"$f:${i + 1}: ${line.trim.take(100)}"
+    assert(sources.exists { case (f, _) => mains(f) },
+      "CLI mains not found — the walk is broken, not the code clean")
+    assert(hits.isEmpty,
+      "environment/property reads outside the CLI mains (pass the value as an " +
+        "argument instead):\n" + hits.mkString("\n"))
   }
 }

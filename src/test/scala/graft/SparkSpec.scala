@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites — mirrors the Verify/Bench
+/** Shared local SparkSession for all suites — mirrors the Verify/Explain
   * session configs (non-ANSI, UTC, nanos-as-long parquet).
   */
 trait SparkSpec extends AnyFunSuite {
