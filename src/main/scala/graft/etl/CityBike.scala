@@ -232,11 +232,12 @@ object CityBike {
     */
   def clearMemo(): Unit = memo.synchronized {
     import scala.jdk.CollectionConverters._
-    memo.values.asScala.foreach(_.values.foreach { wh =>
-      Seq(wh.rides, wh.memberDim, wh.rideableDim, wh.stationDim, wh.dateDim, wh.fact)
-        .foreach(_.unpersist(blocking = false))
-    })
+    val whs = memo.values.asScala.flatMap(_.values).toSeq
     memo.clear()
+    whs.foreach { wh =>
+      Seq(wh.rides, wh.memberDim, wh.rideableDim, wh.stationDim, wh.dateDim, wh.fact)
+        .foreach(graft.operators.OpCache.release)
+    }
   }
 
   def build(spark: SparkSession, path: String = DefaultCsvPath): Warehouse = memo.synchronized {

@@ -232,15 +232,24 @@ object OpCache {
     clearHooks += hook
   }
 
-  /** Drop every live operator table (end-of-session / test teardown). */
+  /** Drop every live operator table (end-of-session / test teardown).
+    * Safe after `spark.stop()`: every map is emptied and every hook runs
+    * before any unpersist, and frames of a stopped context are skipped.
+    */
   def clear(): Unit = synchronized {
-    live.values.foreach(_.unpersist(blocking = false))
+    val frames = live.values.toSeq ++ keyed.values.map(_._2) ++ byInput.values.map(_._2)
     live.clear()
-    keyed.values.foreach(_._2.unpersist(blocking = false))
     keyed.clear()
-    byInput.values.foreach(_._2.unpersist(blocking = false))
     byInput.clear()
     builtByInput.clear()
     clearHooks.foreach(_.apply())
+    frames.foreach(release)
   }
+
+  /** Unpersist `df` unless its context is stopped — the block manager is
+    * gone then (unpersist throws a NullPointerException) and so is the
+    * cached data.
+    */
+  private[graft] def release(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped) df.unpersist(blocking = false)
 }

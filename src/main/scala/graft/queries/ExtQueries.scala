@@ -39,6 +39,26 @@ object ExtQueries {
         col("doc_id"), col("lang"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
 
+  /** The fold certification shared by the streaming-fold queries:
+    * drop `state` and its staging twin, split `src` on
+    * `splitCol % 3` into micro-batches 0..2 and fold each under its
+    * index, then fold batch 1 again under id 1 — the foreachBatch
+    * replay of a checkpointed restart, which the watermark must make a
+    * no-op. Returns the maintained state without its `__last_batch`
+    * stamp.
+    */
+  private def certifyFold(
+      s: org.apache.spark.sql.SparkSession, state: String,
+      src: org.apache.spark.sql.DataFrame, splitCol: String)(
+      fold: (org.apache.spark.sql.DataFrame, Long, String) => Unit)
+      : org.apache.spark.sql.DataFrame = {
+    Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
+    val batches = (0 to 2).map(i => src.filter(col(splitCol) % 3 === i))
+    batches.zipWithIndex.foreach { case (b, i) => fold(b, i.toLong, state) }
+    fold(batches(1), 1L, state)
+    s.table(state).drop("__last_batch")
+  }
+
   /** Shared oracle CTE: whitespace tokens with empties dropped. */
   private val toksCte =
     """WITH t AS (
@@ -1830,7 +1850,7 @@ object ExtQueries {
     ),
 
     // Streaming rollup maintenance, certified cross-engine: the
-    // EXACT batch-side fold maintainRollup runs per micro-batch
+    // EXACT batch-side fold EventStreams.maintain runs per micro-batch
     // (recoverStaged → watermark check → delta rollup → decimal merge
     // → staged overwrite) replayed over three deterministic batches
     // PLUS a replayed batch id (the checkpointed-restart case — the
@@ -1850,19 +1870,11 @@ object ExtQueries {
           "ext.x66.src",
           t(s, d, "orders").select(
             col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")))
-        val state = "graft_x66_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
         val keys = Seq("o_orderpriority")
         val measures = Seq("o_totalprice")
-        val batches = (0 to 2).map(i => orders.filter(col("o_orderkey") % 3 === i))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldRollupBatch(b, i.toLong, state, keys, measures)
-        }
-        // foreachBatch replay: batch 1 arrives again with its original
-        // id; the watermark must make this fold a no-op.
-        EventStreams.foldRollupBatch(batches(1), 1L, state, keys, measures)
-        graft.operators.IncrementalAgg.finalizeState(
-          s.table(state).drop("__last_batch"), keys, measures)
+        val st = certifyFold(s, "graft_x66_state", orders, "o_orderkey")(
+          EventStreams.foldRollupBatch(_, _, _, keys, measures))
+        graft.operators.IncrementalAgg.finalizeState(st, keys, measures)
           .orderBy("o_orderpriority")
       },
       Some("""SELECT o_orderpriority, COUNT(*) AS n,
@@ -1873,7 +1885,7 @@ object ExtQueries {
     ),
 
     // Streaming histogram maintenance, certified the same way: the
-    // maintainHistogram fold (same idempotent skeleton, bucket-count
+    // foldHistogramBatch fold (same idempotent skeleton, bucket-count
     // states) over three batches + a replayed id, decoded to p50/p95 —
     // must equal quantiles from the from-scratch histogram over all
     // rows (the x57 oracle replay).
@@ -1887,17 +1899,11 @@ object ExtQueries {
           "ext.x67.src",
           t(s, d, "lineitem").select(
             col("l_orderkey"), col("l_returnflag"), col("l_extendedprice")))
-        val state = "graft_x67_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
         val keys = Seq("l_returnflag")
         val (lo, hi, nb) = (900.0, 105000.0, 128)
-        val batches = (0 to 2).map(i => li.filter(col("l_orderkey") % 3 === i))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldHistogramBatch(b, i.toLong, state, keys, col("l_extendedprice"), lo, hi, nb)
-        }
-        EventStreams.foldHistogramBatch(batches(1), 1L, state, keys, col("l_extendedprice"), lo, hi, nb)
-        graft.operators.QuantileSketch.quantiles(
-          s.table(state).drop("__last_batch"), keys, Seq(0.5, 0.95), lo, hi, nb)
+        val st = certifyFold(s, "graft_x67_state", li, "l_orderkey")(
+          EventStreams.foldHistogramBatch(_, _, _, keys, col("l_extendedprice"), lo, hi, nb))
+        graft.operators.QuantileSketch.quantiles(st, keys, Seq(0.5, 0.95), lo, hi, nb)
           .orderBy("l_returnflag", "q")
       },
       Some("""WITH h AS (
@@ -2245,18 +2251,10 @@ object ExtQueries {
         // pass; filtering on doc_id commutes with the per-doc explode,
         // so each slice is the same token multiset as before.
         val dt = docTokens(s, d)
-        val state = "graft_x79_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
-        val batches = (0 to 2).map(i =>
-          dt.filter(col("doc_id") % 3 === i).select(col("tok")))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldSketchBatch(b, i.toLong, state, "tok", k = 30)
-        }
-        // foreachBatch replay: batch 1 arrives again with its original
-        // id; the watermark must make this fold a no-op.
-        EventStreams.foldSketchBatch(batches(1), 1L, state, "tok", k = 30)
+        val st = certifyFold(s, "graft_x79_state", dt, "doc_id")((b, id, state) =>
+          EventStreams.foldSketchBatch(b.select(col("tok")), id, state, "tok", k = 30))
         graft.operators.HeavyHitters.frequentFromSketch(
-          s.table(state).drop("__last_batch"), dt.select(col("tok")), "tok", k = 30)
+          st, dt.select(col("tok")), "tok", k = 30)
       },
       Some(s"""$toksCte,
         |u AS (SELECT unnest(toks) AS tok FROM t),
@@ -2408,7 +2406,7 @@ object ExtQueries {
 
     // Streaming leaderboard fold certification (the x66/x67/x79
     // pattern): three uneven micro-batches + one replayed batch id
-    // folded through maintainTopK's skeleton; bounded top-k is
+    // folded through foldTopKBatch's skeleton; bounded top-k is
     // mergeable, so the state must EQUAL the from-scratch x80 pass —
     // which is exactly the oracle it shares.
     GraftQuery(
@@ -2420,17 +2418,8 @@ object ExtQueries {
         val ev = graft.operators.OpCache.swap(
           "ext.x85.src",
           t(s, d, "events").select(col("event_type"), col("value"), col("event_id")))
-        val state = "graft_x85_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
-        val batches = (0 to 2).map(i => ev.filter(col("event_id") % 3 === i))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldTopKBatch(b, i.toLong, state, Seq("event_type"), "value", "event_id", 3)
-        }
-        // foreachBatch replay: batch 1 arrives again with its original
-        // id; the watermark must make this fold a no-op.
-        EventStreams.foldTopKBatch(
-          batches(1), 1L, state, Seq("event_type"), "value", "event_id", 3)
-        s.table(state).drop("__last_batch")
+        certifyFold(s, "graft_x85_state", ev, "event_id")(
+          EventStreams.foldTopKBatch(_, _, _, Seq("event_type"), "value", "event_id", 3))
           .select(
             col("event_type"), col("rank"), col("event_id"),
             round(col("value"), 4).as("value"))
@@ -2580,7 +2569,7 @@ object ExtQueries {
 
     // Streaming cardinality fold certification: the token stream
     // split into three uneven batches (+ one replayed id) folded
-    // through maintainDistinct's skeleton; register max-merge is
+    // through foldDistinctBatch's skeleton; register max-merge is
     // idempotent and order-free, so the state's estimates must carry
     // the same error-bound booleans — x88's oracle, shared.
     GraftQuery(
@@ -2590,15 +2579,8 @@ object ExtQueries {
         // shared tokenized fixture — see x79 (one cached (doc_id,
         // lang, tok) table serves both folds' every pass)
         val dt = docTokens(s, d)
-        val state = "graft_x89_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
-        val batches = (0 to 2).map(i =>
-          dt.filter(col("doc_id") % 3 === i).select(col("lang"), col("tok")))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldDistinctBatch(b, i.toLong, state, Seq("lang"), "tok")
-        }
-        EventStreams.foldDistinctBatch(batches(1), 1L, state, Seq("lang"), "tok")
-        val est = s.table(state).drop("__last_batch")
+        val est = certifyFold(s, "graft_x89_state", dt, "doc_id")((b, id, state) =>
+          EventStreams.foldDistinctBatch(b.select(col("lang"), col("tok")), id, state, Seq("lang"), "tok"))
           .select(col("lang"), graft.operators.Hll.estimate(col("registers")).as("est"))
         val exact = dt.select(col("lang"), col("tok"))
           .groupBy("lang").agg(countDistinct(col("tok")).as("exact_toks"))
@@ -4543,17 +4525,9 @@ object ExtQueries {
         val ev = graft.operators.OpCache.swap(
           "ext.x145.src",
           t(s, d, "events").select("event_type", "user_id", "event_id"))
-        val state = "graft_x145_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
-        val batches = (0 to 2).map(i => ev.filter(col("event_id") % 3 === i))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldBitmapBatch(b, i.toLong, state, Seq("event_type"), "user_id")
-        }
-        // foreachBatch replay: batch 1 arrives again with its original
-        // id; the watermark must make this fold a no-op.
-        EventStreams.foldBitmapBatch(batches(1), 1L, state, Seq("event_type"), "user_id")
-        graft.operators.Bitmap.countsFromWords(
-            s.table(state).drop("__last_batch"), Seq("event_type"))
+        val st = certifyFold(s, "graft_x145_state", ev, "event_id")(
+          EventStreams.foldBitmapBatch(_, _, _, Seq("event_type"), "user_id"))
+        graft.operators.Bitmap.countsFromWords(st, Seq("event_type"))
           .orderBy("event_type")
       },
       Some("""SELECT event_type, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_distinct
@@ -4578,17 +4552,9 @@ object ExtQueries {
           t(s, d, "lineitem").select(
             col("l_orderkey"), col("l_shipdate"),
             col("l_extendedprice"), col("l_quantity")))
-        val state = "graft_x146_state"
-        Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
         val zone = "year(l_shipdate) * 100 + month(l_shipdate)"
-        val batches = (0 to 2).map(i => li.filter(col("l_orderkey") % 3 === i))
-        batches.zipWithIndex.foreach { case (b, i) =>
-          EventStreams.foldZoneMapBatch(b, i.toLong, state, zone,
-            Seq("l_extendedprice", "l_quantity"))
-        }
-        EventStreams.foldZoneMapBatch(batches(1), 1L, state, zone,
-          Seq("l_extendedprice", "l_quantity"))
-        s.table(state).drop("__last_batch")
+        certifyFold(s, "graft_x146_state", li, "l_orderkey")(
+          EventStreams.foldZoneMapBatch(_, _, _, zone, Seq("l_extendedprice", "l_quantity")))
           .select(
             col("zone").cast("long").as("zone"), col("n_rows"),
             round(col("min_l_extendedprice"), 2).as("min_price"),

@@ -1174,7 +1174,7 @@ object ExtQueries2 {
     ),
 
     // Streaming CDC certification: the x186 change log folded through
-    // the maintainSnapshot foreachBatch face — base snapshot as batch
+    // the foldSnapshotBatch foreachBatch face — base snapshot as batch
     // 0, the log key-sliced into two micro-batches, one batch id
     // replayed (must be a watermark no-op) — then the same per-segment
     // rollup. Streamed application must equal the one-shot batch

@@ -193,44 +193,38 @@ object EventStreams {
       keyCol: String): DataFrame =
     stream.join(broadcast(blocklist.select(col(keyCol))), Seq(keyCol), "left_anti")
 
-  /** Streaming incremental-rollup maintenance — the streaming face of
-    * [[graft.operators.IncrementalAgg]] (x53): each micro-batch is
-    * reduced to a decimal-exact re-aggregatable state and merged into
-    * a persisted state table. Per batch the cost is one partial-agg
-    * groupBy over the BATCH plus a merge against |keys| state rows —
-    * the base data is never rescanned, so the maintained rollup stays
-    * O(batch) while the table it summarizes grows without bound.
-    * State-table overwrite is staged (see `Tables.stagedOverwrite`:
-    * the state feeds its own merge plan).
+  /** Maintained state, for every fold in this file: each micro-batch
+    * of `stream` goes to `fold` with its batch id, e.g.
+    * `maintain(s, Some(ckpt))(foldRollupBatch(_, _, table, keys, measures))`.
     *
-    * EXACTLY-ONCE under replay: the decimal merge is not naturally
-    * idempotent, so every state row is stamped with the highest batch
-    * id folded in (`__last_batch`), and [[foldRollupBatch]] skips any
-    * batch id ≤ that watermark. With a `checkpointLocation`, a
-    * restarted query replays the in-flight batch with its ORIGINAL
-    * id (the foreachBatch contract), the stamp check drops it, and
-    * the rollup is applied exactly once.
+    * EXACTLY-ONCE under replay: every fold stamps its state with the
+    * highest batch id folded in (`__last_batch`, or the snapshot's
+    * `<state>__wm` table) and skips any batch id ≤ that stamp. With a
+    * `checkpointLocation`, a restarted query replays the in-flight
+    * batch with its ORIGINAL id (the foreachBatch contract), the stamp
+    * check drops it, and the batch is applied exactly once. Without
+    * one, a restarted source replays from scratch with batch ids RESET
+    * to 0, and the stamp would wrongly skip genuinely-new batches that
+    * reuse low ids — only a single uninterrupted query may omit it.
     */
-  def maintainRollup(
-      stream: DataFrame,
-      stateTable: String,
-      keys: Seq[String],
-      measures: Seq[String],
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldRollupBatch(batch, id, stateTable, keys, measures)
+  def maintain(stream: DataFrame, checkpointLocation: Option[String] = None)(
+      fold: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    // the typed function value selects the Scala foreachBatch overload
     val w = stream.writeStream.foreachBatch(fold)
-    // Without a checkpoint a restarted source replays from scratch
-    // with batch ids RESET to 0 — the __last_batch watermark would
-    // then wrongly skip genuinely-new batches that reuse low ids. The
-    // exactly-once guarantee holds only checkpointed; tests that run
-    // a single uninterrupted query may omit it.
     checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
   }
 
-  /** One idempotent fold step of [[maintainRollup]]: merge `batch`
-    * into `stateTable` unless a batch with this id (or later) was
-    * already folded in.
+  /** One idempotent fold step of the incremental rollup — the
+    * streaming face of [[graft.operators.IncrementalAgg]] (x53): each
+    * micro-batch is reduced to a decimal-exact re-aggregatable state
+    * and merged into a persisted state table. Per batch the cost is one
+    * partial-agg groupBy over the BATCH plus a merge against |keys|
+    * state rows — the base data is never rescanned, so the maintained
+    * rollup stays O(batch) while the table it summarizes grows without
+    * bound. State-table overwrite is staged (see
+    * `Tables.stagedOverwrite`: the state feeds its own merge plan). The
+    * decimal merge is not naturally idempotent, so the batch is skipped
+    * when a batch with this id (or later) was already folded in.
     */
   def foldRollupBatch(
       batch: DataFrame,
@@ -287,29 +281,11 @@ object EventStreams {
     }
   }
 
-  /** Streaming histogram-quantile maintenance — the
-    * [[graft.operators.QuantileSketch]] face of [[maintainRollup]]:
-    * per-key bucket counts folded per micro-batch through the same
-    * idempotent skeleton. Read quantiles any time with
+  /** One idempotent fold step of histogram-quantile maintenance — the
+    * [[graft.operators.QuantileSketch]] sibling of [[foldRollupBatch]]:
+    * per-key bucket counts folded through the same idempotent skeleton.
+    * Read quantiles any time with
     * `QuantileSketch.quantiles(spark.table(stateTable).drop("__last_batch"), …)`.
-    */
-  def maintainHistogram(
-      stream: DataFrame,
-      stateTable: String,
-      keys: Seq[String],
-      value: org.apache.spark.sql.Column,
-      lo: Double,
-      hi: Double,
-      nb: Int = 128,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit = (batch, id) =>
-      foldHistogramBatch(batch, id, stateTable, keys, value, lo, hi, nb)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainHistogram]] (the histogram
-    * sibling of [[foldRollupBatch]]).
     */
   def foldHistogramBatch(
       batch: DataFrame,
@@ -324,28 +300,13 @@ object EventStreams {
       b => graft.operators.QuantileSketch.rollup(b, keys, value, lo, hi, nb),
       (s, d) => graft.operators.QuantileSketch.merge(Seq(s, d), keys))
 
-  /** Streaming heavy-hitter maintenance — the
-    * [[graft.operators.HeavyHitters]] face of [[maintainRollup]]:
-    * a 1-row Misra-Gries state `(cand, total)` folded per
-    * micro-batch through the same idempotent skeleton. The no-miss
-    * guarantee is batching-independent, so
+  /** One idempotent fold step of heavy-hitter maintenance — the
+    * [[graft.operators.HeavyHitters]] sibling of [[foldRollupBatch]]:
+    * a 1-row Misra-Gries state `(cand, total)` folded through the same
+    * idempotent skeleton. The no-miss guarantee is
+    * batching-independent, so
     * `HeavyHitters.frequentFromSketch(state, corpus, key, k)` equals
     * a from-scratch pass at any point.
-    */
-  def maintainFrequentKeys(
-      stream: DataFrame,
-      stateTable: String,
-      keyCol: String,
-      k: Int,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldSketchBatch(batch, id, stateTable, keyCol, k)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainFrequentKeys]] (the sketch
-    * sibling of [[foldRollupBatch]]).
     */
   def foldSketchBatch(
       batch: DataFrame,
@@ -357,32 +318,14 @@ object EventStreams {
       b => graft.operators.HeavyHitters.sketchState(b, keyCol, k),
       (s, d) => graft.operators.HeavyHitters.mergeSketchStates(s, d, k))
 
-  /** Streaming per-group leaderboard maintenance — the
-    * [[graft.operators.TopK]] face of [[maintainRollup]]: the state
-    * is the current `(groupCols*, rank, id, score)` top-k table,
-    * folded per micro-batch through the same idempotent skeleton.
+  /** One idempotent fold step of per-group leaderboard maintenance —
+    * the [[graft.operators.TopK]] sibling of [[foldRollupBatch]]: the
+    * state is the current `(groupCols*, rank, id, score)` top-k table.
     * Bounded top-k is a mergeable summary
     * (`topk(A ∪ B) = topk(topk(A) ∪ topk(B))` for fixed k), so the
     * maintained state equals a from-scratch pass over everything
     * folded in — the watermark guarantees the union sides stay
     * id-disjoint under replay.
-    */
-  def maintainTopK(
-      stream: DataFrame,
-      stateTable: String,
-      groupCols: Seq[String],
-      scoreCol: String,
-      idCol: String,
-      k: Int,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldTopKBatch(batch, id, stateTable, groupCols, scoreCol, idCol, k)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainTopK]] (the leaderboard
-    * sibling of [[foldRollupBatch]]).
     */
   def foldTopKBatch(
       batch: DataFrame,
@@ -397,29 +340,13 @@ object EventStreams {
       (s, d) => graft.operators.TopK.topKPerGroup(
         s.drop("rank").unionByName(d.drop("rank")), groupCols, scoreCol, idCol, k))
 
-  /** Streaming cardinality maintenance — the [[graft.operators.Hll]]
-    * face of [[maintainRollup]]: per-group HLL register arrays folded
-    * per micro-batch through the same idempotent skeleton. The
-    * element-wise-max merge is idempotent on top of the watermark, so
-    * the maintained registers EQUAL the from-scratch sketch of
+  /** One idempotent fold step of cardinality maintenance — the
+    * [[graft.operators.Hll]] sibling of [[foldRollupBatch]]: per-group
+    * HLL register arrays folded through the same idempotent skeleton.
+    * The element-wise-max merge is idempotent on top of the watermark,
+    * so the maintained registers EQUAL the from-scratch sketch of
     * everything folded in. Estimate any time with
     * `Hll.estimate(spark.table(state).col("registers"))`.
-    */
-  def maintainDistinct(
-      stream: DataFrame,
-      stateTable: String,
-      groupCols: Seq[String],
-      keyCol: String,
-      p: Int = 12,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldDistinctBatch(batch, id, stateTable, groupCols, keyCol, p)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainDistinct]] (the
-    * cardinality sibling of [[foldRollupBatch]]).
     */
   def foldDistinctBatch(
       batch: DataFrame,
@@ -432,28 +359,15 @@ object EventStreams {
       b => graft.operators.Hll.distinctByGroup(b, groupCols, keyCol, p).drop("est"),
       (s, d) => graft.operators.Hll.mergeStates(Seq(s, d), groupCols))
 
-  /** Streaming EXACT-distinct maintenance — the
-    * [[graft.operators.Bitmap]] face of [[maintainRollup]]: the
-    * per-(group, 64-ID-word) mask table folded per micro-batch. Masks
-    * merge by bit-OR (idempotent + commutative), so the maintained
-    * state equals the from-scratch bitmap of everything folded in and
-    * the count it yields is EXACT — the dense-ID alternative to
-    * [[maintainDistinct]]'s HLL estimate. Read counts any time with
+  /** One idempotent fold step of EXACT-distinct maintenance — the
+    * [[graft.operators.Bitmap]] sibling of [[foldRollupBatch]]: the
+    * per-(group, 64-ID-word) mask table. Masks merge by bit-OR
+    * (idempotent + commutative), so the maintained state equals the
+    * from-scratch bitmap of everything folded in and the count it
+    * yields is EXACT — the dense-ID alternative to
+    * [[foldDistinctBatch]]'s HLL estimate. Read counts any time with
     * `Bitmap.countsFromWords(spark.table(state).drop("__last_batch"), …)`.
     */
-  def maintainBitmapDistinct(
-      stream: DataFrame,
-      stateTable: String,
-      groupCols: Seq[String],
-      idCol: String,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldBitmapBatch(batch, id, stateTable, groupCols, idCol)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainBitmapDistinct]]. */
   def foldBitmapBatch(
       batch: DataFrame,
       batchId: Long,
@@ -464,29 +378,16 @@ object EventStreams {
       b => graft.operators.Bitmap.wordsByGroup(b, groupCols, idCol),
       (s, d) => graft.operators.Bitmap.mergeWordStates(Seq(s, d), groupCols))
 
-  /** Streaming zone-map maintenance — the [[graft.operators.ZoneMap]]
-    * face of [[maintainRollup]]: per-zone min/max/non-null footer
-    * stats folded per micro-batch (sum/min/max are all associative +
-    * commutative, so the maintained state equals the from-scratch
-    * stats of everything folded in). This is the incremental
-    * footer-stats collection a lakehouse table service runs on
-    * ingest; audit any time with
+  /** One idempotent fold step of zone-map maintenance — the
+    * [[graft.operators.ZoneMap]] sibling of [[foldRollupBatch]]:
+    * per-zone min/max/non-null footer stats (sum/min/max are all
+    * associative + commutative, so the maintained state equals the
+    * from-scratch stats of everything folded in). This is the
+    * incremental footer-stats collection a lakehouse table service
+    * runs on ingest; audit any time with
     * `ZoneMap.pruneAudit(spark.table(state).drop("__last_batch"), …)`.
     * `zoneExprSql` is a SQL expression over the batch columns.
     */
-  def maintainZoneMaps(
-      stream: DataFrame,
-      stateTable: String,
-      zoneExprSql: String,
-      statCols: Seq[String],
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldZoneMapBatch(batch, id, stateTable, zoneExprSql, statCols)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainZoneMaps]]. */
   def foldZoneMapBatch(
       batch: DataFrame,
       batchId: Long,
@@ -497,29 +398,13 @@ object EventStreams {
       b => graft.operators.ZoneMap.stats(b, expr(zoneExprSql), statCols),
       (s, d) => graft.operators.ZoneMap.mergeStats(Seq(s, d), statCols))
 
-  /** Streaming point-frequency maintenance — the
-    * [[graft.operators.CountMin]] face of [[maintainRollup]]: the
-    * (j, idx, cnt) counter table folded per micro-batch through the
-    * same idempotent skeleton. Counters are sums, so the maintained
-    * sketch EQUALS the single-pass sketch of everything folded in
-    * (counter-level, not just estimate-level). Estimate any time with
+  /** One idempotent fold step of point-frequency maintenance — the
+    * [[graft.operators.CountMin]] sibling of [[foldRollupBatch]]: the
+    * (j, idx, cnt) counter table folded through the same idempotent
+    * skeleton. Counters are sums, so the maintained sketch EQUALS the
+    * single-pass sketch of everything folded in (counter-level, not
+    * just estimate-level). Estimate any time with
     * `CountMin.estimate(spark.table(state).drop("__last_batch"), …)`.
-    */
-  def maintainCountMin(
-      stream: DataFrame,
-      stateTable: String,
-      keyCol: String,
-      d: Int = 4,
-      w: Int = 512,
-      checkpointLocation: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldCountMinBatch(batch, id, stateTable, keyCol, d, w)
-    val wr = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(wr)(p => wr.option("checkpointLocation", p)).start()
-  }
-
-  /** One idempotent fold step of [[maintainCountMin]] (the
-    * point-frequency sibling of [[foldRollupBatch]]).
     */
   def foldCountMinBatch(
       batch: DataFrame,
@@ -531,30 +416,6 @@ object EventStreams {
     foldStateBatch(batch, batchId, stateTable)(
       b => graft.operators.CountMin.sketch(b, keyCol, d, w),
       (s, delta) => graft.operators.CountMin.merge(Seq(s, delta)))
-
-  /** Streaming CDC apply — the upsert/tombstone face of the
-    * maintained-state family: each micro-batch is a change-log slice
-    * (payload + `opCol` I/U/D + `ordCols`) folded into the snapshot
-    * table with [[graft.operators.Cdc.applyLog]]. Within a batch the
-    * latest entry per key wins by `ordCols`; across batches,
-    * application order is arrival order (the CDC source's contract).
-    * Idempotent under checkpointed replay via the `__last_batch`
-    * watermark and staged-overwrite crash recovery, like every fold
-    * face here.
-    */
-  def maintainSnapshot(
-      stream: DataFrame,
-      stateTable: String,
-      keys: Seq[String],
-      opCol: String,
-      ordCols: Seq[String],
-      checkpointLocation: Option[String] = None,
-      nBuckets: Int = 64): org.apache.spark.sql.streaming.StreamingQuery = {
-    val fold: (DataFrame, Long) => Unit =
-      (batch, id) => foldSnapshotBatch(batch, id, stateTable, keys, opCol, ordCols, nBuckets)
-    val w = stream.writeStream.foreachBatch(fold)
-    checkpointLocation.fold(w)(p => w.option("checkpointLocation", p)).start()
-  }
 
   /** The maintained snapshot, internal columns stripped — read this,
     * not `spark.table(stateTable)` (which carries the `__bucket`
@@ -806,11 +667,17 @@ object EventStreams {
   /** Test probe: is the marker-absent negative cache populated? */
   private[graft] def healMemoSize: Int = healMemo.size
 
-  /** One idempotent fold step of [[maintainSnapshot]]. Not routed
-    * through the mergeable-state skeleton: a CDC batch is not a
-    * mergeable delta (deletes don't commute with inserts), so the
-    * step applies the raw log slice to the current snapshot instead
-    * of merging two states.
+  /** One idempotent fold step of the streaming CDC apply — the
+    * upsert/tombstone face of the maintained-state family: each
+    * micro-batch is a change-log slice (payload + `opCol` I/U/D +
+    * `ordCols`) folded into the snapshot table with
+    * [[graft.operators.Cdc.applyLog]]. Within a batch the latest entry
+    * per key wins by `ordCols`; across batches, application order is
+    * arrival order (the CDC source's contract). Read the result with
+    * [[snapshot]]. Not routed through the mergeable-state skeleton: a
+    * CDC batch is not a mergeable delta (deletes don't commute with
+    * inserts), so the step applies the raw log slice to the current
+    * snapshot instead of merging two states.
     *
     * BUCKETED per-batch I/O (the 100 TB fix for the r6 full-rewrite
     * finding): the state table is hash-partitioned on

@@ -5,6 +5,8 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
@@ -368,8 +370,8 @@ class StreamingSpec extends SparkSpec {
       ("a", 0.0625), ("c", 7.75), ("c", 2.25), ("b", 0.125))
     val stream = MemoryStream[(String, Double)]
     spark.sql("DROP TABLE IF EXISTS stream_rollup_state")
-    val q = EventStreams.maintainRollup(
-      stream.toDF().toDF("k", "v"), "stream_rollup_state", Seq("k"), Seq("v"))
+    val q = EventStreams.maintain(stream.toDF().toDF("k", "v"))(
+      EventStreams.foldRollupBatch(_, _, "stream_rollup_state", Seq("k"), Seq("v")))
     // three uneven micro-batches
     stream.addData(rows.take(3): _*); q.processAllAvailable()
     stream.addData(rows.slice(3, 4): _*); q.processAllAvailable()
@@ -408,6 +410,54 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_rollup_state")
   }
 
+  test("checkpointed maintain restart replays the in-flight batch once and folds new files") {
+    import sqlImplicits._
+    import graft.operators.IncrementalAgg
+    val src = java.nio.file.Files.createTempDirectory("graft-fold-src")
+    val staged = java.nio.file.Files.createTempDirectory("graft-fold-staged")
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-fold-ckpt").toString
+    val state = "stream_ckpt_rollup_state"
+    spark.sql(s"DROP TABLE IF EXISTS $state")
+    val rows = (1 to 60).map(i => (s"k${i % 4}", i * 0.25))
+    val parts = rows.grouped(20).toSeq
+    // write each slice aside, then move its one parquet file into the
+    // source directory, so the stream never lists a half-written file
+    def addFile(i: Int): Unit = {
+      val out = staged.resolve(s"p$i")
+      parts(i).toDF("k", "v").coalesce(1).write.parquet(out.toString)
+      val file = java.nio.file.Files.list(out).iterator()
+        .asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+      java.nio.file.Files.move(file, src.resolve(s"p$i.parquet"))
+    }
+    def start() = EventStreams.maintain(
+      spark.readStream.schema("k STRING, v DOUBLE")
+        .option("maxFilesPerTrigger", "1").parquet(src.toString),
+      Some(ckpt))(EventStreams.foldRollupBatch(_, _, state, Seq("k"), Seq("v")))
+
+    addFile(0); addFile(1)
+    val q1 = start() // batch 0 = p0, batch 1 = p1
+    q1.processAllAvailable()
+    q1.stop()
+    // a crash after batch 1's fold but before its commit: without the
+    // commit entry the restart re-runs batch 1 under its original id
+    Seq("1", ".1.crc").foreach(f => new java.io.File(s"$ckpt/commits/$f").delete())
+    addFile(2)
+    val q2 = start() // batch 1 again (must be skipped), batch 2 = p2
+    q2.processAllAvailable()
+    q2.stop()
+    assert(q2.recentProgress.map(_.batchId).min == 1L,
+      "the restart must resume at the in-flight batch, not from batch 0")
+
+    def fin(df: org.apache.spark.sql.DataFrame) =
+      IncrementalAgg.finalizeState(df, Seq("k"), Seq("v"))
+        .orderBy("k").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    assert(fin(spark.table(state).drop("__last_batch")) ==
+      fin(IncrementalAgg.rollup(rows.toDF("k", "v"), Seq("k"), Seq("v"))))
+    assert(spark.table(state).agg(max(col("__last_batch"))).head().getLong(0) == 2L)
+    spark.sql(s"DROP TABLE IF EXISTS $state")
+  }
+
   test("streaming histogram maintenance answers the same quantiles as a single pass") {
     import sqlImplicits._
     implicit val sqlCtx = spark.sqlContext
@@ -415,8 +465,8 @@ class StreamingSpec extends SparkSpec {
     val vals = (1 to 400).map(i => ("a", (i * 37 % 1000) / 10.0))
     val stream = MemoryStream[(String, Double)]
     spark.sql("DROP TABLE IF EXISTS stream_hist_state")
-    val q = EventStreams.maintainHistogram(
-      stream.toDF().toDF("k", "v"), "stream_hist_state", Seq("k"), col("v"), 0.0, 100.0, 50)
+    val q = EventStreams.maintain(stream.toDF().toDF("k", "v"))(
+      EventStreams.foldHistogramBatch(_, _, "stream_hist_state", Seq("k"), col("v"), 0.0, 100.0, 50))
     stream.addData(vals.take(150): _*); q.processAllAvailable()
     stream.addData(vals.drop(150): _*); q.processAllAvailable()
     q.stop()
@@ -436,8 +486,8 @@ class StreamingSpec extends SparkSpec {
     val keys = (1 to 600).map(i => if (i % 3 == 0) "hot" else s"k${i % 97}")
     val stream = MemoryStream[String]
     spark.sql("DROP TABLE IF EXISTS stream_hh_state")
-    val q = EventStreams.maintainFrequentKeys(
-      stream.toDF().toDF("tok"), "stream_hh_state", "tok", k = 6)
+    val q = EventStreams.maintain(stream.toDF().toDF("tok"))(
+      EventStreams.foldSketchBatch(_, _, "stream_hh_state", "tok", k = 6))
     stream.addData(keys.take(250): _*); q.processAllAvailable()
     stream.addData(keys.drop(250): _*); q.processAllAvailable()
     q.stop()
@@ -457,8 +507,8 @@ class StreamingSpec extends SparkSpec {
     val keys = (1 to 700).map(i => if (i % 3 == 0) "hot" else s"k${(i * 13) % 89}")
     val stream = MemoryStream[String]
     spark.sql("DROP TABLE IF EXISTS stream_cms_state")
-    val q = EventStreams.maintainCountMin(
-      stream.toDF().toDF("k"), "stream_cms_state", "k", d = 4, w = 256)
+    val q = EventStreams.maintain(stream.toDF().toDF("k"))(
+      EventStreams.foldCountMinBatch(_, _, "stream_cms_state", "k", d = 4, w = 256))
     stream.addData(keys.take(200): _*); q.processAllAvailable()
     stream.addData(keys.slice(200, 201): _*); q.processAllAvailable()
     stream.addData(keys.drop(201): _*); q.processAllAvailable()
@@ -496,8 +546,8 @@ class StreamingSpec extends SparkSpec {
     val rows = (1 to 800).map(i => (s"g${i % 3}", s"u${(i * 31) % 157}"))
     val stream = MemoryStream[(String, String)]
     spark.sql("DROP TABLE IF EXISTS stream_hll_state")
-    val q = EventStreams.maintainDistinct(
-      stream.toDF().toDF("g", "u"), "stream_hll_state", Seq("g"), "u", p = 10)
+    val q = EventStreams.maintain(stream.toDF().toDF("g", "u"))(
+      EventStreams.foldDistinctBatch(_, _, "stream_hll_state", Seq("g"), "u", p = 10))
     // three uneven micro-batches (incl. a single-row one)
     stream.addData(rows.take(300): _*); q.processAllAvailable()
     stream.addData(rows.slice(300, 301): _*); q.processAllAvailable()
@@ -538,8 +588,8 @@ class StreamingSpec extends SparkSpec {
     val rows = (1 to 900).map(i => (s"g${i % 2}", ((i * 7) % 500 - 120).toLong))
     val stream = MemoryStream[(String, Long)]
     spark.sql("DROP TABLE IF EXISTS stream_bm_state")
-    val q = EventStreams.maintainBitmapDistinct(
-      stream.toDF().toDF("g", "id"), "stream_bm_state", Seq("g"), "id")
+    val q = EventStreams.maintain(stream.toDF().toDF("g", "id"))(
+      EventStreams.foldBitmapBatch(_, _, "stream_bm_state", Seq("g"), "id"))
     stream.addData(rows.take(400): _*); q.processAllAvailable()
     stream.addData(rows.slice(400, 401): _*); q.processAllAvailable()
     stream.addData(rows.drop(401): _*); q.processAllAvailable()
@@ -576,8 +626,8 @@ class StreamingSpec extends SparkSpec {
       (i.toLong, (i % 7).toLong, if (i % 11 == 0) None else Some(i * 1.5)))
     val stream = MemoryStream[(Long, Long, Option[Double])]
     spark.sql("DROP TABLE IF EXISTS stream_zm_state")
-    val q = EventStreams.maintainZoneMaps(
-      stream.toDF().toDF("id", "z", "v"), "stream_zm_state", "z", Seq("v"))
+    val q = EventStreams.maintain(stream.toDF().toDF("id", "z", "v"))(
+      EventStreams.foldZoneMapBatch(_, _, "stream_zm_state", "z", Seq("v")))
     stream.addData(rows.take(200): _*); q.processAllAvailable()
     stream.addData(rows.slice(200, 201): _*); q.processAllAvailable()
     stream.addData(rows.drop(201): _*); q.processAllAvailable()
@@ -624,9 +674,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val rows = (1L to 120L).map(i => (s"g${i % 4}", i, (i % 11).toDouble))
     val stream = MemoryStream[(String, Long, Double)]
-    val q = EventStreams.maintainTopK(
-      stream.toDF().toDF("g", "id", "score"), "stream_topk_state",
-      Seq("g"), "score", "id", k = 5)
+    val q = EventStreams.maintain(stream.toDF().toDF("g", "id", "score"))(
+      EventStreams.foldTopKBatch(_, _, "stream_topk_state", Seq("g"), "score", "id", k = 5))
     stream.addData(rows.take(50): _*); q.processAllAvailable()
     stream.addData(rows.slice(50, 51): _*); q.processAllAvailable()
     stream.addData(rows.drop(51): _*); q.processAllAvailable()
@@ -698,8 +747,8 @@ class StreamingSpec extends SparkSpec {
     val state = "stream_cdc_state"
     Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
     val stream = MemoryStream[(Long, String, String, Long)]
-    val q = EventStreams.maintainSnapshot(
-      stream.toDF().toDF("k", "v", "op", "ord"), state, Seq("k"), "op", Seq("ord"))
+    val q = EventStreams.maintain(stream.toDF().toDF("k", "v", "op", "ord"))(
+      EventStreams.foldSnapshotBatch(_, _, state, Seq("k"), "op", Seq("ord")))
     // batch 0: insert k1, k2; in-batch latest-wins on k1 (ord 2 beats 1)
     stream.addData((1L, "a0", "I", 1L), (1L, "a1", "U", 2L), (2L, "b", "I", 1L))
     q.processAllAvailable()

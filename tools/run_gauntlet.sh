@@ -25,3 +25,6 @@ echo "no cartesians, no failures"
 # EmptyRelation with nothing to codegen): queries with no codegen span
 grep -v "wscg=" /tmp/gauntlet_audit.txt \
   | sed 's/^.*\[audit\] /[no-codegen] /' || true
+
+echo "== benchmark self-tests (perfbench compiles and calls the engine sources) =="
+python3 perfbench/test_bench.py
