@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,16 +12,17 @@ import graft.functions.CoreFunctions._
   * (the v4 dataflow: CSV scan → 4 dimensions → 6 left joins → derived
   * measures → fact), with the deliberate divergences documented in
   * SURVEY.md:
-  *  - deterministic sha2 surrogate keys instead of uuid4 (F17);
+  *  - deterministic sha2 surrogate keys instead of uuid4 (F17), so the
+  *    fact derives its foreign keys by projection instead of the six
+  *    re-keying joins;
   *  - the station dimension dedups on the natural key BEFORE key
   *    assignment, fixing the reference's fanout bug (§2.3 note);
   *  - the date dimension re-derives its parts from the distinct
   *    timestamp set, making A2's keep-one-row dedup deterministic.
   *
   * Everything is lazy DataFrame composition: one Spark action per
-  * sink, Catalyst prunes/pushes, small dims broadcast (J1-J4), the
-  * date-dim joins are left to AQE (timestamp-grain dims grow with the
-  * data — at 100 TB they become sort-merge; here they broadcast).
+  * sink, Catalyst prunes/pushes, and the fact's one shuffle is its
+  * final distinct — no dimension, however large, is joined back.
   */
 object CityBike {
 
@@ -141,65 +142,47 @@ object CityBike {
       col("second"), col("minute"), col("hour"))
   }
 
-  /** ride_fact — v4.py:240-295: six left joins re-keying the raw frame
-    * against the dimensions (J1-J6), derived measures (F8/F13/F14 with
-    * the P8 null/inf repair), 9-column projection, distinct.
+  /** A fact foreign key computed in-row from the natural-key columns
+    * its dimension keys with `surrogateKey`. NULL when any part is
+    * NULL: v4's left join (J1-J6) never matches a NULL part, so the
+    * dimension's NULL-keyed row stays unreferenced.
+    */
+  private def foreignKey(parts: Column*): Column =
+    when(parts.map(_.isNotNull).reduce(_ && _), surrogateKey(parts: _*))
+
+  /** A float key part as the dimension's `distinct` leaves it: -0.0
+    * groups with 0.0 and keys as "0.0" (every NaN already keys "NaN").
+    */
+  private def unsignedZero(c: Column): Column = when(c === 0.0, lit(0.0)).otherwise(c)
+
+  /** ride_fact — v4.py:240-295: the raw frame re-keyed to the
+    * dimensions, derived measures (F8/F13/F14 with the P8 null/inf
+    * repair), 9-column projection, distinct.
     *
-    * Dimensions are aliased per join so no duplicate column names ever
-    * arise (the engine-side fix for v4.py:274's column repair).
+    * v4 re-keys through six left joins (J1-J6) because its uuid4 keys
+    * exist only in the dimension rows. Here every key is a pure
+    * function of the natural key (F17), so each foreign key is one
+    * projected expression and the fact plan reads no dimension.
     * trip_duration is stored INT per the declared DDL (v4.py:94) but
     * speed is computed from the unrounded fractional seconds, exactly
     * as v4.py:276-279 does — including its `/60/60` double division.
     */
-  def rideFact(
-      raw: DataFrame,
-      memberDim: DataFrame,
-      rideableDim: DataFrame,
-      stationDim: DataFrame,
-      dateDim: DataFrame): DataFrame = {
-
-    val member = memberDim.select(col("id").as("member_type_id"), col("type").as("m_type"))
-    val rideable = rideableDim.select(col("id").as("rideable_type_id"), col("type").as("r_type"))
-    val startSt = stationDim.select(
-      col("id").as("start_station_id_k"), col("name").as("ss_name"),
-      col("latitude").as("ss_lat"), col("longitude").as("ss_lng"))
-    val endSt = stationDim.select(
-      col("id").as("end_station_id_k"), col("name").as("es_name"),
-      col("latitude").as("es_lat"), col("longitude").as("es_lng"))
-    val startDt = dateDim.select(col("id").as("start_date_id"), col("date").as("sd_date"))
-    val endDt = dateDim.select(col("id").as("end_date_id"), col("date").as("ed_date"))
-
-    val joined = raw
-      .join(broadcast(member), raw("member_casual") === member("m_type"), "left")
-      .join(broadcast(rideable), raw("rideable_type") === rideable("r_type"), "left")
-      .join(
-        broadcast(startSt),
-        raw("start_station_name") === startSt("ss_name") &&
-          raw("start_lat") === startSt("ss_lat") &&
-          raw("start_lng") === startSt("ss_lng"),
-        "left")
-      .join(
-        broadcast(endSt),
-        raw("end_station_name") === endSt("es_name") &&
-          raw("end_lat") === endSt("es_lat") &&
-          raw("end_lng") === endSt("es_lng"),
-        "left")
-      .join(startDt, raw("started_at") === startDt("sd_date"), "left")
-      .join(endDt, raw("ended_at") === endDt("ed_date"), "left")
-
+  def rideFact(raw: DataFrame): DataFrame = {
+    def stationKey(side: String) = foreignKey(col(s"${side}_station_name"),
+      unsignedZero(col(s"${side}_lat")), unsignedZero(col(s"${side}_lng")))
     val durationS = durationSeconds(col("started_at"), col("ended_at"))
     val distance = haversineKm(col("start_lat"), col("start_lng"), col("end_lat"), col("end_lng"))
     // v4.py:279 writes distance / ((duration/60)/60) — keep the exact form.
     val speed = repairMeasure(try_divide(distance, durationS / lit(60.0) / lit(60.0)))
 
-    joined
+    raw
       .select(
-        col("member_type_id"),
-        col("rideable_type_id"),
-        col("start_station_id_k").as("start_station_id"),
-        col("end_station_id_k").as("end_station_id"),
-        col("start_date_id"),
-        col("end_date_id"),
+        foreignKey(col("member_casual")).as("member_type_id"),
+        foreignKey(col("rideable_type")).as("rideable_type_id"),
+        stationKey("start").as("start_station_id"),
+        stationKey("end").as("end_station_id"),
+        foreignKey(col("started_at").cast("string")).as("start_date_id"),
+        foreignKey(col("ended_at").cast("string")).as("end_date_id"),
         durationS.cast("int").as("trip_duration"),
         distance.as("distance"), // null coords → null distance (pandas: NaN), speed repair still yields 0
         speed.as("speed"))
@@ -235,7 +218,9 @@ object CityBike {
     val whs = memo.values.asScala.flatMap(_.values).toSeq
     memo.clear()
     whs.foreach { wh =>
-      Seq(wh.rides, wh.memberDim, wh.rideableDim, wh.stationDim, wh.dateDim, wh.fact)
+      // Dependents first: uncaching a frame re-plans every cached frame
+      // built on it, so releasing `rides` first re-plans all five.
+      Seq(wh.fact, wh.dateDim, wh.stationDim, wh.rideableDim, wh.memberDim, wh.rides)
         .foreach(graft.operators.OpCache.release)
     }
   }
@@ -245,7 +230,7 @@ object CityBike {
     // from the warehouse, and returning the SAME DataFrame objects
     // (not merely plan-equal ones, which the cache manager would dedup
     // on data but re-analyze and re-canonicalize per call) skips
-    // rebuilding + re-analyzing the 6-join fact plan on every query.
+    // rebuilding + re-analyzing the six table plans on every query.
     var perSession = memo.get(spark)
     if (perSession == null) {
       perSession = scala.collection.mutable.Map.empty
@@ -265,7 +250,7 @@ object CityBike {
       val r = rideableDimension(raw).persist(MEMORY_AND_DISK)
       val s = stationDimension(raw).persist(MEMORY_AND_DISK)
       val d = dateDimension(raw).persist(MEMORY_AND_DISK)
-      val f = rideFact(raw, m, r, s, d).persist(MEMORY_AND_DISK)
+      val f = rideFact(raw).persist(MEMORY_AND_DISK)
       Warehouse(raw, m, r, s, d, f)
     })
   }

@@ -11,7 +11,9 @@ import graft.functions.CoreFunctions._
   *
   * The DuckDB oracles recompute each result straight from the raw CSV
   * fixture — so a pass checks the whole pipeline: CSV parse, dimension
-  * builds, surrogate keys, all six joins, and the derived measures.
+  * builds, surrogate keys (the fact's projected foreign keys must equal
+  * the dimensions' keys for these joins to match), and the derived
+  * measures.
   * (The fixture has no natural-key fact duplicates, verified, so the
   * final distinct is a no-op and raw-level recomputation is exact.)
   */

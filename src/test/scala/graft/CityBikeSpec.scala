@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.CityBike
+import graft.functions.CoreFunctions._
 
 /** Pipeline-fidelity goldens + referential integrity for the star
   * schema (SURVEY §5.2 items 4-5) on the 50,611-row dump fixture.
@@ -11,12 +13,86 @@ class CityBikeSpec extends SparkSpec {
 
   private lazy val wh = CityBike.build(spark)
 
+  /** v4's re-keying (v4.py:240-270, J1-J6): six left joins of the raw
+    * rides against their own dimensions, then the same measures,
+    * projection and distinct as `CityBike.rideFact`.
+    */
+  private def joinedFact(raw: DataFrame): DataFrame = {
+    val member = CityBike.memberDimension(raw)
+      .select(col("id").as("member_type_id"), col("type").as("m_type"))
+    val rideable = CityBike.rideableDimension(raw)
+      .select(col("id").as("rideable_type_id"), col("type").as("r_type"))
+    val st = CityBike.stationDimension(raw)
+    val startSt = st.select(col("id").as("start_station_id_k"), col("name").as("ss_name"),
+      col("latitude").as("ss_lat"), col("longitude").as("ss_lng"))
+    val endSt = st.select(col("id").as("end_station_id_k"), col("name").as("es_name"),
+      col("latitude").as("es_lat"), col("longitude").as("es_lng"))
+    val dt = CityBike.dateDimension(raw)
+    val startDt = dt.select(col("id").as("start_date_id"), col("date").as("sd_date"))
+    val endDt = dt.select(col("id").as("end_date_id"), col("date").as("ed_date"))
+    val durationS = durationSeconds(col("started_at"), col("ended_at"))
+    val distance = haversineKm(col("start_lat"), col("start_lng"), col("end_lat"), col("end_lng"))
+    raw
+      .join(member, raw("member_casual") === member("m_type"), "left")
+      .join(rideable, raw("rideable_type") === rideable("r_type"), "left")
+      .join(startSt, raw("start_station_name") === startSt("ss_name") &&
+        raw("start_lat") === startSt("ss_lat") && raw("start_lng") === startSt("ss_lng"), "left")
+      .join(endSt, raw("end_station_name") === endSt("es_name") &&
+        raw("end_lat") === endSt("es_lat") && raw("end_lng") === endSt("es_lng"), "left")
+      .join(startDt, raw("started_at") === startDt("sd_date"), "left")
+      .join(endDt, raw("ended_at") === endDt("ed_date"), "left")
+      .select(
+        col("member_type_id"), col("rideable_type_id"),
+        col("start_station_id_k").as("start_station_id"), col("end_station_id_k").as("end_station_id"),
+        col("start_date_id"), col("end_date_id"),
+        durationS.cast("int").as("trip_duration"),
+        distance.as("distance"),
+        repairMeasure(try_divide(distance, durationS / lit(60.0) / lit(60.0))).as("speed"))
+      .distinct()
+  }
+
+  /** Rows of `a` missing from `b`, and of `b` missing from `a`. */
+  private def bothWays(a: DataFrame, b: DataFrame): (Long, Long) =
+    (a.exceptAll(b).count(), b.exceptAll(a).count())
+
   test("dimension and fact cardinalities match the dump profile") {
     assert(wh.memberDim.count() == 2)
     assert(wh.rideableDim.count() == 2)
     assert(wh.stationDim.count() == 172)
     assert(wh.dateDim.count() == 101201)
     assert(wh.fact.count() == 50611)
+  }
+
+  test("projected fact keys equal the six-left-join re-keying on the fixture") {
+    assert(bothWays(CityBike.rideFact(wh.rides), joinedFact(wh.rides)) == ((0L, 0L)))
+  }
+
+  test("projected fact keys equal the six-left-join re-keying on edge rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-edgecsv")
+    val f = dir.resolve("rides.csv")
+    // NULL member and rideable; NULL station name with coordinates; NULL
+    // latitude; -0.0 vs 0.0 latitude (else identical: one fact row); NaN
+    // longitude; unparseable timestamp.
+    java.nio.file.Files.writeString(f,
+      """ride_id;rideable_type;started_at;ended_at;start_station_name;start_station_id;end_station_name;end_station_id;start_lat;start_lng;end_lat;end_lng;member_casual
+        |E1;electric_bike;2025-01-01 10:00:00.5;2025-01-01 10:10:00.5;A;1;B;2;40.7;-74.0;40.8;-74.1;member
+        |E2;;2025-01-01 11:00:00;2025-01-01 11:05:00;A;1;B;2;40.7;-74.0;40.8;-74.1;
+        |E3;classic_bike;2025-01-01 12:00:00;2025-01-01 12:05:00;;;B;2;40.7;-74.0;40.8;-74.1;casual
+        |E4;classic_bike;2025-01-01 13:00:00;2025-01-01 13:05:00;A;1;B;2;;-74.0;40.8;-74.1;casual
+        |E5;classic_bike;2025-01-01 14:00:00;2025-01-01 14:05:00;Z;9;B;2;-0.0;-74.0;40.8;-74.1;member
+        |E6;classic_bike;2025-01-01 14:00:00;2025-01-01 14:05:00;Z;9;B;2;0.0;-74.0;40.8;-74.1;member
+        |E7;electric_bike;2025-01-01 15:00:00;2025-01-01 15:05:00;A;1;N;3;40.7;-74.0;40.9;NaN;member
+        |E8;electric_bike;not-a-timestamp;2025-01-01 16:05:00;A;1;B;2;40.7;-74.0;40.8;-74.1;member
+        |""".stripMargin)
+    val raw = CityBike.readRides(spark, f.toString)
+    val fact = CityBike.rideFact(raw)
+    assert(bothWays(fact, joinedFact(raw)) == ((0L, 0L)))
+    assert(fact.count() == 7) // E5 and E6 collapse
+    // the edges really are edges: NULL keys where v4's join cannot match
+    assert(fact.filter(col("member_type_id").isNull && col("rideable_type_id").isNull).count() == 1)
+    assert(fact.filter(col("start_station_id").isNull).count() == 2) // E3, E4
+    assert(fact.filter(col("start_date_id").isNull).count() == 1) // E8
+    assert(fact.filter(col("end_station_id").isNull).count() == 0) // NaN matches NaN
   }
 
   test("referential integrity: every non-null fact FK resolves to its dimension") {
@@ -122,12 +198,7 @@ class CityBikeSpec extends SparkSpec {
     import graft.schema.Schemas._
     val dd = graft.etl.CityBike.dateDimension(rides).as[DateDimension].collect()
     assert(dd.exists(_.year.isEmpty), "the null-date dim row deserializes")
-    val m = graft.etl.CityBike.memberDimension(rides)
-    val r = graft.etl.CityBike.rideableDimension(rides)
-    val st = graft.etl.CityBike.stationDimension(rides)
-    val fact = graft.etl.CityBike
-      .rideFact(rides, m, r, st, graft.etl.CityBike.dateDimension(rides))
-      .as[RideFact].collect()
+    val fact = graft.etl.CityBike.rideFact(rides).as[RideFact].collect()
     assert(fact.exists(_.trip_duration.isEmpty), "BAD1's fact row deserializes")
   }
 }

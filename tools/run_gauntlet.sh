@@ -28,3 +28,13 @@ grep -v "wscg=" /tmp/gauntlet_audit.txt \
 
 echo "== benchmark self-tests (perfbench compiles and calls the engine sources) =="
 python3 perfbench/test_bench.py
+
+echo "== benchmark, uncorrupted: the star load and the queries over its tables pass their checks =="
+for w in citybike_load warehouse_queries; do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 2 --trace 0 2>/dev/null | tail -1 \
+    | python3 -c '
+import json, sys
+r = json.loads(sys.stdin.read())
+print("%s: correct=%s failed=%d/%d" % (sys.argv[1], r["correct"], r["failed"], r["attempted"]))
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$w"
+done
