@@ -124,24 +124,6 @@ object CityBike {
       dayofmonth(col("d")).as("day"))
   }
 
-  /** v3-era separate time dimension — check_and_create_db_v3.py:118-128:
-    * one row per distinct (hour, minute, second) of day.
-    */
-  def timeDimension(raw: DataFrame): DataFrame = {
-    val times = raw.select(
-      hour(col("started_at")).as("hour"),
-      minute(col("started_at")).as("minute"),
-      second(col("started_at")).as("second"))
-      .unionByName(raw.select(
-        hour(col("ended_at")).as("hour"),
-        minute(col("ended_at")).as("minute"),
-        second(col("ended_at")).as("second")))
-      .distinct()
-    times.select(
-      surrogateKey(col("hour"), col("minute"), col("second")).as("id"),
-      col("second"), col("minute"), col("hour"))
-  }
-
   /** A fact foreign key computed in-row from the natural-key columns
     * its dimension keys with `surrogateKey`. NULL when any part is
     * NULL: v4's left join (J1-J6) never matches a NULL part, so the

@@ -75,12 +75,6 @@ object CoreFunctions {
     sha2(concat_ws("\u0001",
       naturalKey.map(c => coalesce(c.cast("string"), lit("\u0002"))): _*), 256)
 
-  /** Reference-faithful uuid4 keys (v4.py:148) - nondeterministic per
-    * run, so golden tests and oracle comparison cannot use them; kept
-    * behind this explicit alternative for drop-in fidelity (F17).
-    */
-  def surrogateKeyUuid(): Column = expr("uuid()")
-
   /** The 8 date parts of the reference date dimension (v4.py:201-208),
     * as (name, column) pairs so callers control ordering.
     */

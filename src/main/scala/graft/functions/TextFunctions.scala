@@ -156,19 +156,6 @@ object TextFunctions {
     ("ipv4", "([0-9]{1,3}\\.){3}[0-9]{1,3}", "<IP>"),
     ("phone", "\\+[0-9]{1,3}-[0-9]{3}-[0-9]{4}", "<PHONE>"))
 
-  /** Rolling fingerprint over the token sequence — order sensitive
-    * and deterministic. The fold chains xxhash64(acc, token) (which
-    * wraps internally) instead of the previous FNV multiply-add: that
-    * multiply's Long overflow was a deliberate wrap with ANSI off but
-    * a runtime ARITHMETIC_OVERFLOW under ANSI on any document with
-    * ≥ 2 tokens — and this operator sits outside the declared query
-    * surface, so the ANSI sweep could never catch it. (Values change
-    * vs the FNV form; the contract — order sensitivity, determinism —
-    * is spec-pinned, not golden-pinned.)
-    */
-  def fingerprint64(toks: Column): Column =
-    aggregate(toks, lit(0L), (acc, t) => xxhash64(acc, t))
-
   /** Count of punctuation characters. */
   def punctCount(text: Column): Column =
     length(regexp_replace(text, "[^.,;:!?]", ""))

@@ -4,21 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Count-Min sketch (Cormode & Muthukrishnan 2005) as first-class
-  * mergeable state — the point-frequency face of the maintained-state
-  * family: [[HeavyHitters]] answers WHICH keys are frequent,
+  * rows — the point-frequency sibling of the sketches:
+  * [[HeavyHitters]] answers WHICH keys are frequent,
   * [[Hll]] answers HOW MANY distinct keys exist, and this answers
   * "how often did key k occur" for ANY k, from d·w counters
   * regardless of key cardinality.
   *
   * The sketch is a plain DataFrame of `(j, idx, cnt)` rows — depth
   * `d` hash rows × width `w` counters, stored sparsely (zero
-  * counters are absent). Counters are SUMS, so states merge by
-  * summing on (j, idx): commutative, associative, and
-  * batching-invariant — daily sketches union across tables/days and
-  * fold through the streaming skeleton
-  * ([[graft.streaming.EventStreams]]), and a merged sketch is
-  * IDENTICAL to the single-pass sketch of the concatenated data
-  * (exact counter equality, not just estimate equality).
+  * counters are absent).
   *
   * Point estimates take `min_j cnt[j][h_j(k)]` — always an
   * OVERestimate of the true count (each counter only ever adds), and
@@ -48,18 +42,6 @@ object CountMin {
         explode(array((0 until d).map(j => lit(j)): _*)).as("j"))
       .groupBy(col("j"), cell(col("__k"), col("j"), w).as("idx"))
       .agg(count(lit(1)).as("cnt"))
-  }
-
-  /** Merge sketch states built with the SAME (d, w): counters sum on
-    * (j, idx). Merged ≡ single-pass over the concatenated inputs.
-    */
-  def merge(states: Seq[DataFrame]): DataFrame = {
-    require(states.nonEmpty, "CountMin.merge: no states")
-    states
-      .map(_.select(col("j"), col("idx"), col("cnt")))
-      .reduce(_ unionByName _)
-      .groupBy("j", "idx")
-      .agg(sum(col("cnt")).as("cnt"))
   }
 
   /** Point estimates: one row `(keyCol, est)` per distinct probe key,

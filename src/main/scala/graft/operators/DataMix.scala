@@ -7,14 +7,10 @@ import org.apache.spark.sql.functions._
   * pipelines. `df.sample()` depends on partitioning and seed plumbing;
   * hash-gating on a stable key is reproducible row-exactly across
   * runs, partitionings, and cluster sizes — the property data-mix
-  * manifests need. Gate = pmod(xxhash64(salt, key), 1e6) < frac·1e6.
+  * manifests need. The md5 gates below are engine-portable: their
+  * DuckDB oracles replay every draw bit-for-bit.
   */
 object DataMix {
-
-  private val Buckets = 1000000L
-
-  private def gate(salt: Long, keyCols: Seq[Column]): Column =
-    pmod(xxhash64((lit(salt) +: keyCols): _*), lit(Buckets))
 
   /** Shared md5 draw: first 4 hex chars of md5 over the \u0001-joined
     * stringified key (separator prevents ("ab","c") vs ("a","bc")
@@ -41,20 +37,11 @@ object DataMix {
     if (t >= 65536L) "zzzz" else f"$t%04x"
   }
 
-  /** Keep a deterministic `frac` of rows, keyed by `keyCols`. */
-  def hashSample(df: DataFrame, frac: Double, salt: Long, keyCols: Seq[Column]): DataFrame = {
-    require(frac >= 0 && frac <= 1, s"frac $frac out of range")
-    df.filter(gate(salt, keyCols) < lit((frac * Buckets).toLong))
-  }
-
   /** Engine-portable deterministic sample: gate on the first 4 hex
     * chars of md5 over the stringified key — a 16-bit uniform draw any
     * SQL engine reproduces bit-identically (md5 of the same string is
     * the same everywhere), unlike xxhash64 whose seeding is
     * Spark-specific. Keep when prefix < floor(frac·65536) in hex.
-    * Slower than the xxhash gate (md5 + string materialization) — use
-    * `hashSample` in hot paths, this where cross-engine row-exact
-    * reproducibility is the contract.
     */
   def md5Sample(df: DataFrame, frac: Double, keyCols: Seq[Column]): DataFrame =
     df.filter(md5Prefix(keyCols) < lit(hexThreshold(frac)))
@@ -465,29 +452,6 @@ object DataMix {
       .filter(md5Prefix(keyCols) < col("__thr"))
       .drop("__src", "__thr")
   }
-
-  /** Disjoint, exhaustive train/test split on the same hash gate. */
-  def trainTestSplit(df: DataFrame, testFrac: Double, salt: Long, keyCols: Seq[Column]): (DataFrame, DataFrame) = {
-    val cut = lit((testFrac * Buckets).toLong)
-    val g = gate(salt, keyCols)
-    (df.filter(g >= cut), df.filter(g < cut))
-  }
-
-  /** Weighted mixture: each source contributes an independent
-    * deterministic sample at its own rate (rates in [0,1] are
-    * per-source keep fractions, not relative weights).
-    */
-  def weightedMix(sources: Seq[(DataFrame, Double)], salt: Long, keyCols: Seq[Column]): DataFrame =
-    sources.zipWithIndex.map { case ((df, frac), i) =>
-      hashSample(df, frac, salt + i, keyCols)
-    }.reduce(_ unionByName _)
-
-  /** Deterministic global shuffle: training-order randomization that
-    * is reproducible across runs and cluster sizes (a range-partition
-    * sort on the salted key hash — unlike orderBy(rand())).
-    */
-  def shuffleDeterministic(df: DataFrame, salt: Long, keyCols: Seq[Column]): DataFrame =
-    df.orderBy(xxhash64((lit(salt) +: keyCols): _*))
 
   /** The [[md5Hash]] draw widened to 52 bits as an EXACT double in
     * (0,1]: 13 hex nibbles → integer v ∈ [0, 2^52), then (v+1)/2^52.

@@ -919,29 +919,6 @@ object Dedup {
             .as("edit_sim"))
   }
 
-  /** Bounded-distance verification: keep candidates within `maxEdits`
-    * absolute edits. Uses the BANDED built-in (`levenshtein(l, r, k)`
-    * early-exits above the bound — O(maxEdits·len) per pair instead
-    * of O(len²)) plus the same length pre-filter; the shape for
-    * verification at scale when the acceptance bound is absolute
-    * rather than length-relative.
-    */
-  def editVerifiedPairsWithin(
-      candidates: DataFrame,
-      docs: DataFrame,
-      maxEdits: Int): DataFrame = {
-    require(maxEdits >= 0, s"maxEdits $maxEdits must be non-negative")
-    val t = docs.select(col("doc_id"), col("text"))
-    candidates.select("doc_a", "doc_b")
-      .join(t.select(col("doc_id").as("doc_a"), col("text").as("__ta")), Seq("doc_a"))
-      .join(t.select(col("doc_id").as("doc_b"), col("text").as("__tb")), Seq("doc_b"))
-      .filter(abs(length(col("__ta")) - length(col("__tb"))) <= maxEdits)
-      .select(
-        col("doc_a"), col("doc_b"),
-        levenshtein(col("__ta"), col("__tb"), maxEdits).as("lev"))
-      .filter(col("lev") >= 0) // banded form returns -1 above the bound
-  }
-
   /** Overlap-coefficient (containment) pairs: |A∩B| / min(|A|,|B|) —
     * the asymmetric near-dup measure that finds a SHORT document
     * embedded in a LONGER one (quotations, boilerplate inclusion,

@@ -129,14 +129,6 @@ object HeavyHitters {
       .orderBy(col("cnt").desc, col(keyCol))
   }
 
-  /** Heavy-hitter TOKENS of a document corpus: every token whose
-    * frequency exceeds 1/(k+1) of the total token stream.
-    */
-  def frequentTokens(docs: DataFrame, k: Int): DataFrame =
-    frequentKeys(
-      docs.select(explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")),
-      "tok", k)
-
   // ------------------------------------------------------- mergeable state
 
   /** The sketch as MAINTAINED STATE: one row

@@ -91,33 +91,6 @@ object Hll {
       .cast("long")
   }
 
-  /** Source-compatibility shim for callers built against the old
-    * two-arg signature (pre-r12, when m came from the caller instead
-    * of the sketch). The parameter is validated but otherwise ignored:
-    * the register count is authoritative — that is exactly the
-    * hardening that removed the parameter (a p mismatched with a
-    * persisted sketch inflated the harmonic estimate ~(m'/m)²
-    * silently). Kept one release for external persisted-sketch
-    * consumers; new code calls [[estimate(registers:org\.apache\.spark\.sql\.Column)*]].
-    */
-  @deprecated("p is derived from the sketch's own register count; use estimate(registers)", "r13")
-  def estimate(registers: Column, p: Int): Column = {
-    require(p >= 4 && p <= 18, s"estimate: p must be in [4,18], got $p")
-    estimate(registers)
-  }
-
-  /** Element-wise register merge of two sketch columns. Arrays of
-    * different length (sketches built with different p) RAISE —
-    * zip_with would otherwise null-pad and silently corrupt the
-    * merged registers.
-    */
-  def mergeRegisters(a: Column, b: Column): Column =
-    when(size(a) =!= size(b),
-      raise_error(concat(
-        lit("Hll.mergeRegisters: register arrays of different p ("),
-        size(a).cast("string"), lit(" vs "), size(b).cast("string"), lit(")"))))
-      .otherwise(zip_with(a, b, (x, y) => greatest(x, y)))
-
   /** Per-group distinct estimates: (groupCols*, registers, est). */
   def distinctByGroup(
       df: DataFrame,
@@ -180,10 +153,10 @@ object Hll {
         collect_list(col("registers")),
         // identity: a zero register loses every max
         array_repeat(lit(0), size(first(col("registers")))),
-        // mixed-p states RAISE (the mergeRegisters contract): zip_with
-        // null-pads the shorter array, and greatest() skips the null —
-        // a p=10 state merged into p=12 groups previously zeroed the
-        // tail registers SILENTLY, deflating every later estimate
+        // mixed-p states RAISE: zip_with null-pads the shorter array,
+        // and greatest() skips the null — a p=10 state merged into
+        // p=12 groups previously zeroed the tail registers SILENTLY,
+        // deflating every later estimate
         (acc, r) => when(size(r) =!= size(acc),
           raise_error(concat(
             lit("Hll.mergeStates: register arrays of different p ("),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,20 +52,4 @@ object Intervals {
         count(lit(1)).as("n_merged"))
       .drop("__island")
   }
-
-  /** Total covered time per key in seconds (union length of the
-    * interval set — overlaps counted once), via [[coalesce]].
-    */
-  def coveredSeconds(
-      df: DataFrame,
-      keyCols: Seq[String],
-      startCol: String,
-      endCol: String): DataFrame =
-    coalesce(df, keyCols, startCol, endCol)
-      .groupBy(keyCols.map(col): _*)
-      .agg(
-        ((sum(unix_micros(col("span_end")) - unix_micros(col("span_start"))))
-          .cast("double") / 1e6).as("covered_s"),
-        count(lit(1)).as("n_spans"),
-        sum(col("n_merged")).as("n_intervals"))
 }

@@ -8,12 +8,9 @@ import org.apache.spark.sql.functions._
   * cardinalities, bounds, value-length stats per column).
   *
   * All per-column statistics fold into ONE aggregate over ONE scan —
-  * the table is never read per column. With exact distincts Catalyst
-  * plans the multi-distinct aggregate via Expand (row multiplication
-  * ×|cols|, still a single scan); [[profileApprox]] swaps the
-  * distincts for HLL `approx_count_distinct` so the whole profile is
-  * one non-expanded pass — the 100 TB default, with exact mode kept
-  * for oracle-checked runs.
+  * the table is never read per column. Distincts are exact, so
+  * Catalyst plans the multi-distinct aggregate via Expand (row
+  * multiplication ×|cols|, still a single scan).
   *
   * min/max are computed in the column's NATIVE type (ordering
   * semantics preserved) and only then rendered to string for the
@@ -23,20 +20,20 @@ import org.apache.spark.sql.functions._
   */
 object Profile {
 
-  private def stats(c: String, exact: Boolean): Seq[Column] = {
-    val distinct =
-      if (exact) count_distinct(col(c)) else approx_count_distinct(col(c))
-    Seq(
-      count(col(c)).as(s"__nn_$c"),
-      distinct.as(s"__nd_$c"),
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c"),
-      avg(length(col(c).cast("string"))).as(s"__len_$c"))
-  }
+  private def stats(c: String): Seq[Column] = Seq(
+    count(col(c)).as(s"__nn_$c"),
+    count_distinct(col(c)).as(s"__nd_$c"),
+    min(col(c)).cast("string").as(s"__min_$c"),
+    max(col(c)).cast("string").as(s"__max_$c"),
+    avg(length(col(c).cast("string"))).as(s"__len_$c"))
 
-  private def run(df: DataFrame, cols: Seq[String], exact: Boolean): DataFrame = {
+  /** Exact profile of `cols`: one row per column,
+    * `(col_name, n_rows, n_null, n_distinct, min_value, max_value,
+    * avg_len)`. Single scan; exact distincts via Expand.
+    */
+  def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile: no columns requested")
-    val aggs = count(lit(1)).as("__n") +: cols.flatMap(stats(_, exact))
+    val aggs = count(lit(1)).as("__n") +: cols.flatMap(stats)
     val wide = df.agg(aggs.head, aggs.tail: _*)
     val rows = cols.map { c =>
       struct(
@@ -50,12 +47,6 @@ object Profile {
     }
     wide.select(explode(array(rows: _*)).as("p")).select(col("p.*"))
   }
-
-  /** Exact profile of `cols`: one row per column,
-    * `(col_name, n_rows, n_null, n_distinct, min_value, max_value,
-    * avg_len)`. Single scan; exact distincts via Expand.
-    */
-  def profile(df: DataFrame, cols: Seq[String]): DataFrame = run(df, cols, exact = true)
 
   /** Column-level drift report between two snapshots (the data-
     * contract check a pipeline runs on every refresh): per column,
@@ -108,11 +99,6 @@ object Profile {
           .otherwise(abs(col("null_micro_a") - col("null_micro_b")) > lit(nullRateMicroTol))
           .as("drift"))
   }
-
-  /** Same shape with HLL distincts: one non-expanded pass — the
-    * at-scale default (±~2% on n_distinct, everything else exact).
-    */
-  def profileApprox(df: DataFrame, cols: Seq[String]): DataFrame = run(df, cols, exact = false)
 
   /** Shannon entropy (nats) of each column's value distribution —
     * the information-content axis the count profile misses: near-zero

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   *
   * Exact percentiles (`percentile`, linear interpolation — the same
   * definition as DuckDB's `quantile_cont`) require per-group sorted
-  * aggregation: one shuffle per pass. [[iqrOutliers]] is two passes
+  * aggregation: one shuffle per pass. [[iqrSummary]] is two passes
   * (fences, then a broadcast join-back to classify) — at 100 TB swap
   * the exact percentile for [[QuantileSketch]] buckets and keep the
   * same two-pass shape; the contract here is the exact, oracled one.
@@ -23,7 +23,7 @@ object RobustStats {
     * group behaves exactly like a window PARTITION BY would. The
     * plain usingColumns equality these operators used silently
     * DROPPED every null-group row — from operators documented as
-    * row-preserving (imputeMedian, winsorize, iqrOutliers). The
+    * row-preserving (imputeMedian, winsorize). The
     * aggregate side is broadcast while it fits, and its key copies
     * are dropped after the join.
     */
@@ -65,24 +65,6 @@ object RobustStats {
           col("q1"), col("q3"), (col("q3") - col("q1")).as("iqr"),
           (col("q1") - lit(k) * (col("q3") - col("q1"))).as("lo_fence"),
           (col("q3") + lit(k) * (col("q3") - col("q1"))).as("hi_fence")): _*)
-  }
-
-  /** Rows classified against their group's fences: input columns plus
-    * `is_outlier`. The fence table is group-cardinality-sized —
-    * broadcast when small (the common case).
-    */
-  def iqrOutliers(
-      df: DataFrame,
-      groupCols: Seq[String],
-      valueCol: String,
-      k: Double = 1.5): DataFrame = {
-    val fences = iqrFences(df, groupCols, valueCol, k)
-      .select((groupCols.map(col) :+ col("lo_fence") :+ col("hi_fence")): _*)
-    joinBack(df, fences, groupCols)
-      .withColumn(
-        "is_outlier",
-        col(valueCol).isNotNull &&
-          (col(valueCol) < col("lo_fence") || col(valueCol) > col("hi_fence")))
   }
 
   /** Per-group robust summary: fences plus outlier counts —
@@ -127,7 +109,7 @@ object RobustStats {
   /** Rows with the value winsorized (clipped) to the group's
     * [pLo, pHi] exact percentiles: input columns plus `v_wins` and
     * `clipped` ∈ {-1, 0, 1} (below / kept / above). The same two-pass
-    * shape as [[iqrOutliers]]: percentile bounds, broadcast join-back.
+    * shape as [[iqrSummary]]: percentile bounds, broadcast join-back.
     */
   def winsorize(
       df: DataFrame, groupCols: Seq[String], valueCol: String,

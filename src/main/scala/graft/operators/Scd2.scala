@@ -114,7 +114,7 @@ object Scd2 {
     // Changed keys: the open row closes at the effective date. An
     // out-of-order batch (effective BEFORE the open row's valid_from)
     // would write an inverted interval overlapping already-closed
-    // history — breaking the disjointness invariant pitJoin/asOf rely
+    // history — breaking the disjointness invariant pitJoin relies
     // on ("at most one version covers any instant") and silently
     // double-counting facts. Fail loudly instead; late batches must
     // be merged in order.
@@ -149,16 +149,10 @@ object Scd2 {
       .unionByName(opened)
   }
 
-  /** Point-in-time slice: the dimension as of `at` (rows whose validity
-    * interval covers it) — the query every SCD2 consumer runs.
-    */
-  def asOf(dim: DataFrame, at: Column): DataFrame =
-    dim.filter(col("valid_from") <= at && (col("valid_to").isNull || at < col("valid_to")))
-
   /** Point-in-time JOIN: each fact row picks up the dimension version
     * that was valid AT ITS OWN event time — the temporally-correct
-    * star join ([[asOf]] freezes one instant; this honors every
-    * fact's). The SCD2 interval invariant (disjoint, contiguous
+    * star join (every fact's own instant, not one frozen instant).
+    * The SCD2 interval invariant (disjoint, contiguous
     * validity per key — enforced by [[merge]]) guarantees at most one
     * matching version per fact, so the join cannot fan out.
     *

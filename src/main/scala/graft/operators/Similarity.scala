@@ -531,27 +531,7 @@ object Similarity {
       .filter(col("cosine") >= minCosine)
   }
 
-  /** Per-vector atypicality for SemDeDup canonical selection: the
-    * NEGATED cosine to the assigned cell centroid, shaped for
-    * [[Dedup.dedupReportBest]] (which keeps the HIGHEST score) — so
-    * the kept member is the one FARTHEST from its centroid, the
-    * paper's keep rule. Output: (doc_id, score).
-    */
-  def semanticKeepScores(
-      embeddings: DataFrame,
-      cells: Int = 8,
-      maxIter: Int = 3): DataFrame = {
-    val assigned = semanticAssigned(embeddings, cells, maxIter)
-    assigned
-      .join(broadcast(memoizedKmeans(prepared(embeddings, "sim.prep"), cells, maxIter)), Seq("cell"))
-      .select(
-        col("vec_id").as("doc_id"),
-        (-cosineWithNorms(dot(col("vec"), col("cvec")), col("norm"), col("cnorm"))).as("score"))
-  }
-
-  /** Shared 1-probe cell assignment for the SemDeDup faces — one
-    * OpCache site, plan-equal across pairs/scores callers.
-    */
+  /** 1-probe cell assignment for SemDeDup — one OpCache site. */
   private def semanticAssigned(embeddings: DataFrame, cells: Int, maxIter: Int): DataFrame = {
     val base = prepared(embeddings, "sim.prep")
     OpCache.swap(

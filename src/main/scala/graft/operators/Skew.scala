@@ -4,29 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation operators. AQE's skew-join split handles sort-merge
-  * joins at runtime; explicit salting remains the tool for the cases
-  * AQE cannot re-plan — severely skewed aggregation state, or hash
-  * joins where one key dominates a partition beyond executor memory.
+  * joins at runtime; explicit salting remains the tool for what AQE
+  * cannot re-plan — severely skewed aggregation state.
   */
 object Skew {
-
-  /** Salted inner equi-join: the left (large, skewed) side derives a
-    * deterministic salt in [0, saltFactor) from `saltSource` (any
-    * left-side column with spread — a row id, a timestamp); the right
-    * side is replicated saltFactor× so every (key, salt) bucket finds
-    * its match. Result set is identical to `left.join(right, key)`;
-    * the hot key's rows are spread over saltFactor partitions.
-    */
-  def saltedJoin(
-      left: DataFrame,
-      right: DataFrame,
-      key: String,
-      saltSource: Column,
-      saltFactor: Int = 8): DataFrame = {
-    val l = left.withColumn("__salt", pmod(xxhash64(saltSource), lit(saltFactor)).cast("int"))
-    val r = right.withColumn("__salt", explode(array((0 until saltFactor).map(lit): _*)))
-    l.join(r, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Two-phase (salted) aggregation for skewed group keys: aggregate
     * per (key, salt) first — spreading the hot key's rows — then
@@ -49,8 +30,8 @@ object Skew {
   /** Pre-flight skew diagnostics for a prospective join/aggregation
     * key: the `topK` heaviest keys, each annotated with its row share,
     * its ratio to the mean key size (`skew_ratio` — the number AQE's
-    * skew threshold and [[saltedJoin]]'s saltFactor should be sized
-    * from), and the corpus-wide distribution summary (key count, max,
+    * skew threshold and [[saltedAggregate]]'s saltFactor should be
+    * sized from), and the corpus-wide distribution summary (key count, max,
     * exact p50/p99 of per-key counts).
     *
     * One shuffle total: the per-key count (map-side combined); the

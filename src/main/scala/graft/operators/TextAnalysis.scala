@@ -219,12 +219,6 @@ object TextAnalysis {
         sum(col("n_chars_m").cast("long")).as("total_chars"))
   }
 
-  /** Per-document order-sensitive rolling fingerprint. */
-  def fingerprints(docs: DataFrame): DataFrame =
-    docs.select(
-      col("doc_id"),
-      fingerprint64(tokens(col("text"))).as("fingerprint"))
-
   /** Text normalization for dedup/tokenization: lowercase, punctuation
     * → space, whitespace collapsed, trimmed.
     */

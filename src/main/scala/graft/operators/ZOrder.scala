@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) clustering: a data-layout operator for
@@ -41,22 +41,4 @@ object ZOrder {
     */
   def zValue(a: Column, b: Column): Column =
     spread16(a).bitwiseOR(shiftleft(spread16(b), 1))
-
-  /** The layout operation: range-repartition + sort by the z-value of
-    * the two bucketized columns. `numFiles` output partitions each
-    * cover a compact z-range (⇒ bounded rectangles in (a, b) space);
-    * write the result with any sink and both columns' footer stats
-    * prune.
-    */
-  def cluster(
-      df: DataFrame,
-      a: Column, aLo: Double, aHi: Double,
-      b: Column, bLo: Double, bHi: Double,
-      numFiles: Int): DataFrame = {
-    val z = zValue(bucket(a, aLo, aHi), bucket(b, bLo, bHi))
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 }

@@ -203,9 +203,7 @@ object ExtQueries {
     // content_fp hashes the full token stream (order-sensitive), and
     // min_shingle_fp is a winnowing-style minimum over 3-gram shingle
     // hashes (the near-dup-robust fingerprint). Both reproduce
-    // bit-identically in any engine with md5 — full hash oracle. The
-    // rolling-hash fingerprint64 operator variant stays for hot paths
-    // (order-sensitivity covered in TextAnalysisSpec).
+    // bit-identically in any engine with md5 — full hash oracle.
     GraftQuery(
       "x10_fingerprint",
       (s, d) => {
@@ -2159,9 +2157,9 @@ object ExtQueries {
     // hitters — an exact DuckDB oracle over an approximate pipeline.
     GraftQuery(
       "x74_frequent_tokens",
-      // routed through the shared docTokens fixture (r15): same token
-      // stream as frequentTokens(documents), one tokenize per session
-      // shared with x79/x89 instead of a private explode
+      // routed through the shared docTokens fixture (r15): the
+      // documents' token stream, one tokenize per session shared with
+      // x79/x89 instead of a private explode
       (s, d) => graft.operators.HeavyHitters.frequentKeys(
         docTokens(s, d).select(col("tok")), "tok", k = 30),
       Some(s"""$toksCte,
@@ -2354,8 +2352,7 @@ object ExtQueries {
 
     // Single-scan column profile of the documents table (long/string
     // columns only: their string rendering is engine-portable).
-    // Exact distincts here for the oracle; profileApprox is the
-    // non-expanded at-scale variant of the same plan.
+    // Exact distincts, checked against the oracle.
     GraftQuery(
       "x83_profile",
       (s, d) =>

@@ -1,197 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-/** Structured Streaming operators over the `events` shape
-  * (event_id, ts, user_id, event_type, value) — SURVEY W2: the same
-  * tumbling-window aggregate the batch engine runs as q17, plus a
-  * stateful sessionization example.
-  *
-  * Batch/stream parity: `hourlyWindows` is the identical logical plan
-  * to the batch query — `readStream` in, `writeStream` out, watermark
-  * bounds state. Run on a 1000-executor cluster the state store is
-  * partitioned by group key (window), so scale-out is linear in
-  * distinct open windows.
+/** Maintained state over micro-batch streams (SURVEY W2): `maintain`
+  * runs a stream's micro-batches through one of the idempotent folds
+  * below — mergeable rollups, sketches and zone maps through
+  * `foldStateBatch`, and the bucketed CDC snapshot through
+  * `foldSnapshotBatch`, with `compactSnapshot` as its maintenance
+  * step. Each fold is the incremental face of a batch operator and
+  * its state equals that operator's from-scratch result over
+  * everything folded in.
   */
 object EventStreams {
-
-  /** Tumbling 1-hour event-time windows with a 10-minute watermark;
-    * late rows beyond the watermark are dropped (documented semantics,
-    * identical to batch on ordered replays).
-    */
-  def hourlyWindows(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
-      .select(
-        col("window.start").as("window_start"),
-        col("event_type"), col("n_events"), col("sum_value"))
-
-  final case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
-  final case class SessionState(nEvents: Long, total: Double, lastTs: Long)
-  final case class SessionOut(user_id: Long, n_events: Long, total_value: Double)
-
-  /** Per-user running session aggregate via mapGroupsWithState —
-    * the custom-state escape hatch (W2) for semantics windows can't
-    * express. NoTimeout: state lives for the query's lifetime (this
-    * example needs no expiry, and no timeout keeps it driver-clock
-    * independent in tests); a variant that expires idle users must
-    * switch to ProcessingTimeTimeout/EventTimeTimeout BEFORE calling
-    * state.setTimeoutDuration — setting a timeout under NoTimeout
-    * throws at runtime.
-    */
-  def sessionize(events: Dataset[Event])(implicit spark: SparkSession): Dataset[SessionOut] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[SessionState, SessionOut](GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[SessionState]) =>
-          val prev = state.getOption.getOrElse(SessionState(0L, 0.0, 0L))
-          val (n, tot, last) = batch.foldLeft((prev.nEvents, prev.total, prev.lastTs)) {
-            case ((cn, ct, cl), e) => (cn + 1, ct + e.value, math.max(cl, e.ts.getTime))
-          }
-          state.update(SessionState(n, tot, last))
-          SessionOut(userId, n, tot)
-      }
-  }
-
-  final case class AsOfState(rateTs: Long, rate: Double)
-  final case class EnrichedEvent(
-      event_id: Long, user_id: Long, ts: java.sql.Timestamp, value: Double,
-      rate: Option[Double], rate_ts: Option[java.sql.Timestamp])
-
-  /** Streaming as-of enrichment — the streaming face of
-    * [[graft.operators.AsOfJoin]], which Spark cannot express as a
-    * stream-stream join (no ASOF operator; an interval join would
-    * return ALL prior rates, not the latest). One union'd stream
-    * carries both sides; per user, flatMapGroupsWithState holds only
-    * the LATEST reference row ("rate" events) and every other event is
-    * emitted with the rate in force at its event time. State is one
-    * row per key — bounded regardless of stream length, the property
-    * that makes this shape run forever on a 1000-executor cluster.
-    *
-    * In-order delivery within each micro-batch is restored by sorting
-    * the group's batch (rates before other events at equal ts —
-    * inclusive `<=` semantics, matching the batch operator). A rate
-    * arriving in a LATER micro-batch than an already-emitted event
-    * cannot retroactively re-enrich it (append mode) — the documented
-    * divergence from batch, inherent to any single-pass streaming
-    * as-of.
-    */
-  def asofEnrich(events: Dataset[Event])(implicit spark: SparkSession): Dataset[EnrichedEvent] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[AsOfState, EnrichedEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (userId: Long, batch: Iterator[Event], state: GroupState[AsOfState]) =>
-          // TOTAL order: event_id breaks (ts, kind) ties — sortBy is
-          // stable over a shuffle-ordered iterator, so two equal-ts
-          // rate rows previously resolved in arrival order and a
-          // foreachBatch replay could emit a DIFFERENT rate for every
-          // subsequent event than the committed first attempt
-          val ordered = batch.toIndexedSeq
-            .sortBy(e => (e.ts.getTime, if (e.event_type == "rate") 0 else 1, e.event_id))
-          var cur = state.getOption
-          val out = IndexedSeq.newBuilder[EnrichedEvent]
-          ordered.foreach { e =>
-            if (e.event_type == "rate") {
-              // never regress to an out-of-order OLDER rate
-              if (cur.forall(_.rateTs <= e.ts.getTime)) cur = Some(AsOfState(e.ts.getTime, e.value))
-            } else {
-              // a late event older than the held rate gets None (only
-              // the latest rate is kept — never attach a FUTURE rate)
-              val applicable = cur.filter(_.rateTs <= e.ts.getTime)
-              out += EnrichedEvent(
-                e.event_id, userId, e.ts, e.value,
-                applicable.map(_.rate), applicable.map(s => new java.sql.Timestamp(s.rateTs)))
-            }
-          }
-          cur.foreach(state.update)
-          out.result().iterator
-      }
-  }
-
-  /** Streaming exact deduplication on event_id bounded by the
-    * watermark — the streaming face of the training-data dedup
-    * operators: state holds only ids newer than the watermark, so
-    * memory is bounded by (arrival rate × watermark horizon) per
-    * partition regardless of total stream length.
-    */
-  def dedupStream(events: DataFrame, watermark: String = "10 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("event_id")
-
-  /** Stream-stream interval join: each purchase pairs with the same
-    * user's clicks from the preceding hour. Both sides carry
-    * watermarks, so join state is evicted once the event-time bound
-    * passes — bounded memory on unbounded streams (the stateful
-    * operator RangeJoin's batch bucketization corresponds to).
-    */
-  def clickPurchaseJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
-    clickPurchaseJoinOfType(clicks, purchases, "inner")
-
-  // ONE body for both attribution joins: the outer variant was a
-  // byte-identical copy differing only in the join-type literal, so a
-  // future interval/watermark fix could land in one and silently leave
-  // the other answering the same attribution question differently.
-  private def clickPurchaseJoinOfType(
-      clicks: DataFrame, purchases: DataFrame, joinType: String): DataFrame = {
-    val c = clicks.select(
-      col("user_id").as("c_user_id"), col("event_id").as("click_id"),
-      col("ts").as("click_ts"), col("value").as("click_value"))
-      .withWatermark("click_ts", "1 hour")
-    val p = purchases.select(
-      col("user_id"), col("event_id").as("purchase_id"), col("ts").as("purchase_ts"))
-      .withWatermark("purchase_ts", "1 hour")
-    p.join(
-      c,
-      col("c_user_id") === col("user_id") &&
-        col("purchase_ts") >= col("click_ts") &&
-        col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      joinType)
-      .drop("c_user_id")
-  }
-
-  /** Stream-stream LEFT OUTER interval join — the attribution shape
-    * where unconverted purchases must still be emitted: each purchase
-    * pairs with same-user clicks of the preceding hour, and a purchase
-    * with NO qualifying click is emitted with null click columns ONCE
-    * BOTH watermarks pass its interval (the state store can only then
-    * prove no match will arrive — outer rows are inherently
-    * watermark-delayed, which is the semantics the parity spec pins).
-    * Same bounded state as the inner form.
-    */
-  def clickPurchaseOuterJoin(clicks: DataFrame, purchases: DataFrame): DataFrame =
-    clickPurchaseJoinOfType(clicks, purchases, "left_outer")
-
-  /** Stream-side decontamination / blocklist filter: drop stream rows
-    * whose `keyCol` appears in a STATIC reference set — one broadcast
-    * left_anti join per micro-batch, a SINGLE scan of the batch.
-    *
-    * Deliberately NOT the bloom prune-then-verify shape of the batch
-    * [[graft.operators.Dedup.bloomSemiJoin]]: an anti join KEEPS the
-    * bloom-negative rows, so a bloom pre-prune here needs clean rows
-    * and suspects as two branches of a self-union — which reads every
-    * micro-batch twice from the source — while the per-row bloom probe
-    * costs the same hashing as the broadcast hash-relation lookup it
-    * avoids. The second scan buys nothing at any scale; at ingestion
-    * scale it doubles source reads. (The bloom split pays off for the
-    * batch SEMI join because prune-then-verify is ONE branch that
-    * shrinks a downstream join — structurally unavailable to anti.)
-    * Output ≡ the two-branch bloom shape ≡ this plain anti join.
-    * State: none (the static side broadcasts); safe on unbounded
-    * streams.
-    */
-  def decontaminateStream(
-      stream: DataFrame,
-      blocklist: DataFrame,
-      keyCol: String): DataFrame =
-    stream.join(broadcast(blocklist.select(col(keyCol))), Seq(keyCol), "left_anti")
 
   /** Maintained state, for every fold in this file: each micro-batch
     * of `stream` goes to `fold` with its batch id, e.g.
@@ -398,25 +219,6 @@ object EventStreams {
       b => graft.operators.ZoneMap.stats(b, expr(zoneExprSql), statCols),
       (s, d) => graft.operators.ZoneMap.mergeStats(Seq(s, d), statCols))
 
-  /** One idempotent fold step of point-frequency maintenance — the
-    * [[graft.operators.CountMin]] sibling of [[foldRollupBatch]]: the
-    * (j, idx, cnt) counter table folded through the same idempotent
-    * skeleton. Counters are sums, so the maintained sketch EQUALS the
-    * single-pass sketch of everything folded in (counter-level, not
-    * just estimate-level). Estimate any time with
-    * `CountMin.estimate(spark.table(state).drop("__last_batch"), …)`.
-    */
-  def foldCountMinBatch(
-      batch: DataFrame,
-      batchId: Long,
-      stateTable: String,
-      keyCol: String,
-      d: Int = 4,
-      w: Int = 512): Unit =
-    foldStateBatch(batch, batchId, stateTable)(
-      b => graft.operators.CountMin.sketch(b, keyCol, d, w),
-      (s, delta) => graft.operators.CountMin.merge(Seq(s, delta)))
-
   /** The maintained snapshot, internal columns stripped — read this,
     * not `spark.table(stateTable)` (which carries the `__bucket`
     * partition column).
@@ -425,10 +227,9 @@ object EventStreams {
     spark.table(stateTable).drop("__bucket")
 
   /** Maintenance compaction for a fold state table — the warehouse GC
-    * [[graft.sources.Tables.compactTable]] can't provide here (its
-    * flat staged overwrite would erase the `__bucket` partitioning the
-    * partition-pruned fold depends on). Rewrites every bucket into one
-    * file, preserving the partition layout and the snapshot content
+    * that must keep the `__bucket` partitioning the partition-pruned
+    * fold depends on (a flat rewrite would erase it). Rewrites every
+    * bucket into one file, preserving the partition layout and the snapshot content
     * bit-for-bit. Long-running CDC state accretes files across
     * thousands of micro-batches (emptied-then-refilled cycles, old
     * un-repartitioned writers); periodic compaction bounds per-bucket
@@ -983,74 +784,5 @@ object EventStreams {
         spark.sql(s"ALTER TABLE $target DROP IF EXISTS " +
           emptied.map(b => s"PARTITION (__bucket=$b)").mkString(", "))
     }
-  }
-
-  final case class UserRunning(user_id: Long, n_events: Long, sum_micro: Long, n_types: Long)
-
-  /** Per-user running profile on Spark 4's `transformWithState` — the
-    * arbitrary-state API that supersedes the mapGroupsWithState /
-    * flatMapGroupsWithState faces above: typed composite state (a
-    * ValueState for the (count, exact 1e-4-unit sum) pair, a MapState
-    * for the distinct event-type set, so the distinct count is
-    * incremental — history is never rescanned), explicit TTL hooks,
-    * and the RocksDB state store (required by the API; configured by
-    * the caller/query). Emits the updated profile for each key
-    * touched by a micro-batch.
-    */
-  class UserRunningProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, Event, UserRunning] {
-    import org.apache.spark.sql.Encoders
-    import org.apache.spark.sql.streaming.{MapState, TTLConfig, TimeMode, TimerValues, ValueState}
-    @transient private var totals: ValueState[(Long, Long)] = _
-    @transient private var types: MapState[String, Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      totals = getHandle.getValueState[(Long, Long)](
-        "totals", Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong), TTLConfig.NONE)
-      types = getHandle.getMapState[String, Boolean](
-        "types", Encoders.STRING, Encoders.scalaBoolean, TTLConfig.NONE)
-    }
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserRunning] = {
-      var (n, s) = if (totals.exists()) totals.get() else (0L, 0L)
-      rows.foreach { e =>
-        n += 1
-        s += math.round(e.value * 1e4) // exact micro units, replay-stable
-        if (!types.containsKey(e.event_type)) types.updateValue(e.event_type, true)
-      }
-      totals.update((n, s))
-      Iterator.single(UserRunning(key, n, s, types.keys().size.toLong))
-    }
-  }
-
-  /** [[UserRunningProcessor]] wired through `transformWithState`
-    * (update mode, no time semantics). The session must run the
-    * RocksDB state store provider — the transformWithState contract.
-    */
-  def userRunningProfile(events: Dataset[Event])(implicit spark: SparkSession): Dataset[UserRunning] = {
-    import spark.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(
-        new UserRunningProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Update())
-  }
-
-  /** Convenience: run a streaming DataFrame to completion against a
-    * memory sink and return the result table (test/demo harness).
-    */
-  def runToMemory(df: DataFrame, queryName: String, mode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q = df.writeStream.format("memory").queryName(queryName).outputMode(mode).start()
-    // stop in finally: a batch that fails (the rethrow from
-    // processAllAvailable) must not leave the query registered under
-    // `queryName`, or every later run reusing the name fails with
-    // "query with that name is already active" — cascading harness
-    // failures unrelated to the original error
-    try q.processAllAvailable()
-    finally q.stop()
-    df.sparkSession.table(queryName)
   }
 }

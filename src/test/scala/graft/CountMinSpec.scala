@@ -32,20 +32,6 @@ class CountMinSpec extends SparkSpec {
     assert(hot == 250L, s"hot est $hot")
   }
 
-  test("merged split sketches equal the single-pass sketch, counter for counter") {
-    import sqlImplicits._
-    val keys = (1 to 500).map { i =>
-      if (i % 2 == 0) "hot" else if (i % 5 == 1) s"mid${i % 7}" else s"tail$i"
-    }
-    val splits = Seq(keys.take(123), keys.slice(123, 124), keys.drop(124))
-      .map(_.toDF("k"))
-    val merged = CountMin.merge(splits.map(CountMin.sketch(_, "k")))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    val single = CountMin.sketch(sample, "k")
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
-    assert(merged == single)
-  }
-
   test("unseen keys estimate 0 unless every cell collides (none do here)") {
     import sqlImplicits._
     val sk = CountMin.sketch(sample, "k")

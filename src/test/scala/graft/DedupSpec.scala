@@ -369,26 +369,6 @@ class DedupSpec extends SparkSpec {
     assert(n.count() == 0)
   }
 
-  test("bounded edit verification equals the unbanded filter") {
-    import sqlImplicits._
-    val base = "the quick brown fox jumps over the lazy dog near the river bank today"
-    val d = Seq(
-      (1L, base),
-      (2L, base.replace("today", "tonight")), // 4 edits
-      (3L, base + " with considerably more appended text than the bound allows here"),
-      (4L, "completely unrelated content of roughly comparable length to the base"))
-      .toDF("doc_id", "text")
-    val cands = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("doc_a", "doc_b")
-    val banded = Dedup.editVerifiedPairsWithin(cands, d, maxEdits = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
-    // ground truth: unbanded distances filtered the slow way
-    val exact = Dedup.editVerifiedPairs(cands, d, minSimilarity = 0.0)
-      .filter($"lev" <= 10)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq.sorted
-    assert(banded == exact && banded.nonEmpty)
-    assert(banded.map(p => (p._1, p._2)) == Seq((1L, 2L))) // only the near-dup is within 10 edits
-  }
-
   test("ngramDupStats: planted shared 5-grams give exact dup fractions") {
     import sqlImplicits._
     val d = Seq(

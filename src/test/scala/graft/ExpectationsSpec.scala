@@ -55,53 +55,6 @@ class ExpectationsSpec extends SparkSpec {
     assert(report.forall(_.getLong(2) == 0L))
   }
 
-  test("write-audit-publish gates the table on the report") {
-    import sqlImplicits._
-    val table = "graft_wap_target"
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}__audit")
-    // good load publishes
-    val good = Seq((1L, 5.0), (2L, 7.0)).toDF("id", "qty")
-    val r1 = graft.sources.Tables.publishChecked(good, table,
-      Seq(InRange("rng", "qty", 0.0, 100.0), Unique("pk", Seq("id"))))
-    assert(r1.collect().forall(_.getBoolean(3)))
-    assert(spark.table(table).count() == 2)
-    // bad load is rejected: target untouched, audit table kept
-    val bad = Seq((3L, 500.0), (3L, 1.0)).toDF("id", "qty")
-    val r2 = graft.sources.Tables.publishChecked(bad, table,
-      Seq(InRange("rng", "qty", 0.0, 100.0), Unique("pk", Seq("id"))))
-    assert(r2.filter(!col("pass")).count() == 2)
-    assert(spark.table(table).count() == 2, "failed publish must not shadow the good table")
-    assert(spark.catalog.tableExists(s"${table}__audit"), "staging kept for inspection")
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"DROP TABLE IF EXISTS ${table}__audit")
-  }
-
-  test("publish leaves no staging residue and its crash window is self-healing") {
-    import sqlImplicits._
-    val table = "graft_wap_crash"
-    for (s <- Seq("", "__audit", "__staging")) spark.sql(s"DROP TABLE IF EXISTS $table$s")
-    val good = Seq((1L, 5.0), (2L, 7.0)).toDF("id", "qty")
-    graft.sources.Tables.publishChecked(good, table, Seq(Unique("pk", Seq("id"))))
-    assert(spark.table(table).count() == 2)
-    assert(!spark.catalog.tableExists(s"${table}__audit"), "clean publish keeps no audit table")
-    assert(!spark.catalog.tableExists(s"${table}__staging"), "clean publish keeps no staging table")
-    // Simulate the publish crash window: the validated batch was
-    // renamed onto __staging and the target dropped, then the process
-    // died before the final rename. The NEXT publishChecked must heal
-    // it at entry (no separate recovery step for the caller to
-    // forget) — even when that next publish itself fails its audit,
-    // the healed table must survive untouched.
-    graft.sources.Tables.overwriteTable(spark.table(table), s"${table}__staging")
-    spark.sql(s"DROP TABLE $table")
-    val bad = Seq((9L, 1.0), (9L, 2.0)).toDF("id", "qty")
-    val r = graft.sources.Tables.publishChecked(bad, table, Seq(Unique("pk", Seq("id"))))
-    assert(r.filter(!col("pass")).count() == 1, "bad batch must fail its audit")
-    assert(spark.table(table).count() == 2, "crashed publish healed at entry, not shadowed")
-    assert(!spark.catalog.tableExists(s"${table}__staging"), "staging consumed by recovery")
-    for (s <- Seq("", "__audit", "__staging")) spark.sql(s"DROP TABLE IF EXISTS $table$s")
-  }
-
   test("row-local expectations share ONE aggregate scan") {
     val plan = check(facts, Seq(
       NotNull("a", Seq("qty")),

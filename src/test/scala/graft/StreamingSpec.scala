@@ -1,50 +1,18 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
 import graft.streaming.EventStreams
-import graft.streaming.EventStreams.Event
 
-/** Structured Streaming parity: the streaming hourly-window aggregate
-  * must agree with the identical batch plan on the same data, and the
-  * stateful sessionizer must accumulate across micro-batches.
+/** Structured Streaming: the stateless operators run unchanged on a
+  * stream, and every maintained state folded through
+  * `EventStreams.maintain` equals its from-scratch batch result,
+  * exactly once under replay and across crash windows.
   */
 class StreamingSpec extends SparkSpec {
-
-  private def ts(s: String): Timestamp = Timestamp.valueOf(s)
-
-  private val events = Seq(
-    Event(1L, ts("2024-01-01 10:05:00"), 7L, "click", 1.0),
-    Event(2L, ts("2024-01-01 10:45:00"), 7L, "click", 2.0),
-    Event(3L, ts("2024-01-01 11:05:00"), 8L, "view", 4.0),
-    Event(4L, ts("2024-01-01 11:59:59"), 7L, "click", 8.0),
-    Event(5L, ts("2024-01-01 12:00:00"), 8L, "view", 16.0))
-
-  test("streaming hourly windows match the batch plan on the same rows") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    stream.addData(events: _*)
-
-    val streamed = EventStreams.runToMemory(
-      EventStreams.hourlyWindows(stream.toDF), "hourly_test")
-      .orderBy("window_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSeq
-
-    // hourlyWindows contains a watermark — a no-op in batch; same plan.
-    val batched = EventStreams.hourlyWindows(events.toDF())
-      .orderBy("window_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSeq
-
-    assert(streamed == batched)
-    assert(streamed.map(_._3).sum == events.size)
-    assert(streamed.length == 4) // 10h/click, 11h/click, 11h/view, 12h/view
-  }
 
   test("training-data ops run unchanged on a stream: quality gate + md5 sample parity") {
     import org.apache.spark.sql.functions._
@@ -74,292 +42,14 @@ class StreamingSpec extends SparkSpec {
         0.9, Seq(col("doc_id")))
         .select("doc_id")
 
-    val streamed = EventStreams.runToMemory(
-      pipeline(stream.toDF), "quality_stream_test",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-      .collect().map(_.getLong(0)).toSet
+    val q = pipeline(stream.toDF).writeStream.format("memory")
+      .queryName("quality_stream_test").outputMode("append").start()
+    try q.processAllAvailable()
+    finally q.stop()
+    val streamed = spark.table("quality_stream_test").collect().map(_.getLong(0)).toSet
     val batched = pipeline(docs.toDF).collect().map(_.getLong(0)).toSet
     assert(streamed == batched)
     assert(batched.nonEmpty && !batched.contains(2L)) // the gate actually fired
-  }
-
-  test("streaming as-of enrichment matches the batch as-of join on in-order delivery") {
-    import org.apache.spark.sql.functions._
-    import sqlImplicits._
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    implicit val sqlCtx = spark.sqlContext
-    val batch1 = Seq(
-      Event(100L, ts("2024-01-01 09:00:00"), 7L, "rate", 1.5),
-      Event(1L, ts("2024-01-01 09:30:00"), 7L, "click", 10.0), // rate 1.5
-      Event(2L, ts("2024-01-01 08:00:00"), 8L, "click", 20.0), // no rate yet → None
-      Event(101L, ts("2024-01-01 10:00:00"), 7L, "rate", 2.5))
-    val batch2 = Seq(
-      Event(3L, ts("2024-01-01 11:00:00"), 7L, "click", 30.0), // rate 2.5 carried ACROSS batches
-      Event(102L, ts("2024-01-01 11:30:00"), 8L, "rate", 9.0),
-      Event(4L, ts("2024-01-01 11:45:00"), 8L, "click", 40.0)) // rate 9.0, same batch
-
-    val stream = MemoryStream[Event]
-    val q = EventStreams.asofEnrich(stream.toDS).toDF
-      .writeStream.format("memory").queryName("asof_enrich_test")
-      .outputMode("append").start()
-    stream.addData(batch1: _*); q.processAllAvailable()
-    stream.addData(batch2: _*); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("asof_enrich_test")
-      .select("event_id", "rate")
-      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-
-    assert(streamed == Map(1L -> Some(1.5), 2L -> None, 3L -> Some(2.5), 4L -> Some(9.0)))
-
-    // Parity with the batch operator on the same (in-order) data.
-    val all = (batch1 ++ batch2)
-    val left = all.filter(_.event_type == "click")
-      .map(e => (e.event_id, e.user_id, e.ts)).toDF("event_id", "user_id", "ts")
-    val right = all.filter(_.event_type == "rate")
-      .map(e => (e.user_id, e.ts, e.value)).toDF("user_id", "rts", "rate")
-    val batched = graft.operators.AsOfJoin
-      .joinAsOf(left, right, "user_id", "ts", "rts", Seq("rate"))
-      .select("event_id", "rate_asof")
-      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-    assert(batched == streamed)
-  }
-
-  test("streaming as-of: equal-ts duplicate rates resolve deterministically (event_id tiebreak)") {
-    import sqlImplicits._
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    implicit val sqlCtx = spark.sqlContext
-    // two rate events, SAME user, SAME ts, different values — duplicate
-    // delivery / two sources. The sort keyed only (ts, kind), so their
-    // order was whatever the shuffle produced and a foreachBatch replay
-    // could emit a different rate than the committed first attempt.
-    // Now event_id breaks the tie: the higher id wins (applied last,
-    // `<=` accepts equal-ts), under EITHER arrival order.
-    // id 200 carries 5.0, id 201 carries 9.0 — only the ARRIVAL order
-    // differs between the two runs; the winner must be id 201 in both
-    def run(name: String, events: Seq[Event]): Option[Double] = {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.asofEnrich(stream.toDS).toDF
-        .writeStream.format("memory").queryName(name).outputMode("append").start()
-      stream.addData(events: _*)
-      q.processAllAvailable(); q.stop()
-      spark.table(name).select("rate").collect()
-        .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Double]))
-    }
-    val r200 = Event(200L, ts("2024-01-01 10:00:00"), 7L, "rate", 5.0)
-    val r201 = Event(201L, ts("2024-01-01 10:00:00"), 7L, "rate", 9.0)
-    val click = Event(1L, ts("2024-01-01 10:30:00"), 7L, "click", 1.0)
-    assert(run("asof_tie_a", Seq(r200, r201, click)).contains(9.0), "id 201's rate wins")
-    assert(run("asof_tie_b", Seq(r201, r200, click)).contains(9.0),
-      "same winner under reversed arrival order")
-  }
-
-  test("streaming as-of guards: stale rates never regress state, late events never see future rates") {
-    import sqlImplicits._
-    implicit val sp: org.apache.spark.sql.SparkSession = spark
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    val q = EventStreams.asofEnrich(stream.toDS).toDF
-      .writeStream.format("memory").queryName("asof_guard_test")
-      .outputMode("append").start()
-    // batch 1: rate@10:00 = 2.0 held in state
-    stream.addData(Event(100L, ts("2024-01-01 10:00:00"), 7L, "rate", 2.0))
-    q.processAllAvailable()
-    // batch 2 (out of order): a STALE rate@08:00 and a LATE click@09:00
-    stream.addData(
-      Event(101L, ts("2024-01-01 08:00:00"), 7L, "rate", 0.5), // must NOT regress state
-      Event(1L, ts("2024-01-01 09:00:00"), 7L, "click", 1.0),  // older than held rate → None
-      Event(2L, ts("2024-01-01 11:00:00"), 7L, "click", 1.0))  // after held rate → 2.0
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("asof_guard_test")
-      .select("event_id", "rate")
-      .collect().map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Double])).toMap
-    assert(out == Map(1L -> None, 2L -> Some(2.0)), out.toString)
-  }
-
-  test("late data beyond the watermark is dropped in streaming mode") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    val q = EventStreams.hourlyWindows(stream.toDF)
-      .writeStream.format("memory").queryName("late_test")
-      .outputMode("append").start()
-    stream.addData(events: _*)
-    q.processAllAvailable()
-    // watermark is now 12:00 - 10min = 11:50 → the 10h window is closed
-    stream.addData(Event(99L, ts("2024-01-01 10:10:00"), 9L, "late", 100.0))
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("late_test")
-    assert(out.filter(col("event_type") === "late").count() == 0)
-  }
-
-  test("streaming dedup drops duplicate event_ids across micro-batches") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[Event]
-    val q = EventStreams.dedupStream(stream.toDF)
-      .writeStream.format("memory").queryName("dedup_test")
-      .outputMode("append").start()
-    stream.addData(events.take(3): _*)
-    q.processAllAvailable()
-    stream.addData(events.take(3): _*) // exact re-delivery (same ids)
-    stream.addData(events.drop(3): _*)
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("dedup_test")
-    assert(out.count() == events.size) // each id exactly once
-    assert(out.select("event_id").distinct().count() == events.size)
-  }
-
-  test("stream-stream interval join pairs purchases with preceding-hour clicks") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    val q = EventStreams.clickPurchaseJoin(clicks.toDF, purchases.toDF)
-      .writeStream.format("memory").queryName("ssjoin_test")
-      .outputMode("append").start()
-    clicks.addData(
-      Event(1L, ts("2024-01-01 10:00:00"), 7L, "click", 1.0),
-      Event(2L, ts("2024-01-01 10:30:00"), 7L, "click", 2.0),
-      Event(3L, ts("2024-01-01 08:00:00"), 7L, "click", 4.0), // > 1h before → no pair
-      Event(4L, ts("2024-01-01 10:40:00"), 9L, "click", 8.0)) // other user → no pair
-    purchases.addData(
-      Event(10L, ts("2024-01-01 10:45:00"), 7L, "purchase", 50.0))
-    q.processAllAvailable()
-    q.stop()
-    val pairs = spark.table("ssjoin_test")
-      .collect().map(r => (r.getAs[Long]("purchase_id"), r.getAs[Long]("click_id"))).toSet
-    assert(pairs == Set((10L, 1L), (10L, 2L)), s"got $pairs")
-  }
-
-  test("stream-stream LEFT OUTER join emits unmatched purchases once watermarks pass") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val clicks = MemoryStream[Event]
-    val purchases = MemoryStream[Event]
-    val q = EventStreams.clickPurchaseOuterJoin(clicks.toDF, purchases.toDF)
-      .writeStream.format("memory").queryName("ssojoin_test")
-      .outputMode("append").start()
-    clicks.addData(
-      Event(1L, ts("2024-01-01 10:00:00"), 7L, "click", 1.0))
-    purchases.addData(
-      Event(10L, ts("2024-01-01 10:45:00"), 7L, "purchase", 50.0),  // pairs with click 1
-      Event(11L, ts("2024-01-01 10:50:00"), 9L, "purchase", 60.0))  // no click → outer row
-    q.processAllAvailable()
-    // advance BOTH watermarks far past the intervals so the state
-    // store can emit the unmatched outer row
-    clicks.addData(Event(2L, ts("2024-01-01 15:00:00"), 7L, "click", 9.0))
-    purchases.addData(Event(12L, ts("2024-01-01 15:00:00"), 8L, "purchase", 1.0))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ssojoin_test")
-      .collect()
-      .map(r => (r.getAs[Long]("purchase_id"),
-        Option(r.getAs[java.lang.Long]("click_id")).map(_.toLong)))
-      .toSet
-    assert(rows.contains((10L, Some(1L))), rows.toString)
-    assert(rows.contains((11L, None)), s"unmatched purchase missing from $rows")
-    assert(!rows.contains((11L, Some(1L))) && !rows.contains((11L, Some(2L))), rows.toString)
-  }
-
-  test("streaming decontamination equals the batch anti-join, across micro-batches") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val stream = MemoryStream[(Long, String)]
-    val batch1 = (1L to 300L).map(i => (i, s"doc-$i"))
-    val batch2 = (301L to 600L).map(i => (i, s"doc-$i"))
-    // includes a key absent from the stream: anti-join semantics must
-    // ignore blocklist rows with no match
-    val blocklist = Seq("doc-42", "doc-333", "doc-600", "doc-nope")
-      .map(Tuple1(_)).toDF("k")
-
-    val filtered = EventStreams.decontaminateStream(
-      stream.toDF.toDF("id", "k"), blocklist, "k")
-
-    stream.addData(batch1: _*)
-    stream.addData(batch2: _*)
-    val out = EventStreams.runToMemory(filtered, "bloom_decon_test",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-      .select("id").collect().map(_.getLong(0)).toSet
-
-    val expected = (batch1 ++ batch2).map(_._1).toSet -- Set(42L, 333L, 600L)
-    assert(out == expected)
-  }
-
-  test("streaming decontamination on numeric keys, blocklist keys beyond the stream") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    // numeric-key variant (the string test above covers text keys):
-    // the anti join must match on value equality, with a blocklist
-    // entry (9999) no stream row reaches
-    val stream = MemoryStream[(Long, Long)]
-    val blocklist = Seq(14L, 77L, 9999L).map(Tuple1(_)).toDF("k")
-    val filtered = EventStreams.decontaminateStream(
-      stream.toDF.toDF("id", "k"), blocklist, "k")
-    stream.addData((1L to 100L).map(i => (i, i * 7L)): _*)
-    val out = EventStreams.runToMemory(filtered, "bloom_decon_long_test",
-      org.apache.spark.sql.streaming.OutputMode.Append())
-      .select("id").collect().map(_.getLong(0)).toSet
-    assert(out == (1L to 100L).toSet - 2L - 11L, s"got ${out.size} rows")
-  }
-
-  test("streaming foreachBatch upserts into a managed warehouse table") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    graft.sources.Tables.createDatabase(spark, "graft_test_db")
-    graft.sources.Tables.overwriteTable(
-      Seq((7L, 0.0), (999L, 42.0)).toDF("user_id", "total_value"),
-      "graft_test_db.user_totals")
-    val stream = MemoryStream[Event]
-    val q = stream.toDF
-      .groupBy("user_id").agg(sum(col("value")).as("total_value"))
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.sources.Tables.upsertTable(batch, "graft_test_db.user_totals", "user_id")
-      }
-      .start()
-    stream.addData(events: _*) // users 7 (values 1+2+8) and 8 (4+16)
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("graft_test_db.user_totals")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(out == Map(7L -> 11.0, 8L -> 20.0, 999L -> 42.0))
-  }
-
-  test("checkpointed query restarts from state without reprocessing or loss") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-out").toString
-
-    def start(stream: MemoryStream[Event]) =
-      EventStreams.dedupStream(stream.toDF)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-
-    val s1 = MemoryStream[Event]
-    val q1 = start(s1)
-    s1.addData(events.take(3): _*)
-    q1.processAllAvailable()
-    q1.stop()
-
-    // New source instance, same checkpoint. Batch 1 replays the same
-    // rows at the already-committed offset — recovery must skip it
-    // (no duplicate output); batch 2 is genuinely new and must land.
-    val s2 = MemoryStream[Event]
-    val q2 = start(s2)
-    s2.addData(events.take(3): _*)
-    s2.addData(events.drop(3): _*)
-    q2.processAllAvailable()
-    q2.stop()
-
-    val out = spark.read.parquet(outDir)
-    assert(out.select("event_id").distinct().count() == events.size)
-    assert(out.count() == events.size, "restart must not duplicate rows")
   }
 
   test("streaming rollup maintenance equals the batch rollup after any batch split") {
@@ -500,45 +190,6 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_hh_state")
   }
 
-  test("streaming count-min maintenance equals the single-pass sketch, exactly-once under replay") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    import graft.operators.CountMin
-    val keys = (1 to 700).map(i => if (i % 3 == 0) "hot" else s"k${(i * 13) % 89}")
-    val stream = MemoryStream[String]
-    spark.sql("DROP TABLE IF EXISTS stream_cms_state")
-    val q = EventStreams.maintain(stream.toDF().toDF("k"))(
-      EventStreams.foldCountMinBatch(_, _, "stream_cms_state", "k", d = 4, w = 256))
-    stream.addData(keys.take(200): _*); q.processAllAvailable()
-    stream.addData(keys.slice(200, 201): _*); q.processAllAvailable()
-    stream.addData(keys.drop(201): _*); q.processAllAvailable()
-    q.stop()
-
-    // Counter-level equality with the single-pass sketch: counters are
-    // sums, so batching must be invisible.
-    def counters(df: org.apache.spark.sql.DataFrame) =
-      df.select("j", "idx", "cnt").collect().map(_.toSeq).toSet
-    val streamed = counters(spark.table("stream_cms_state").drop("__last_batch"))
-    val single = counters(CountMin.sketch(keys.toDF("k"), "k", d = 4, w = 256))
-    assert(streamed == single)
-
-    // Replayed batch id: the watermark must make the fold a no-op.
-    EventStreams.foldCountMinBatch(
-      keys.take(200).toDF("k"), batchId = 0L, "stream_cms_state", "k", d = 4, w = 256)
-    assert(counters(spark.table("stream_cms_state").drop("__last_batch")) == streamed,
-      "replayed batch inflated the counters")
-
-    // Point estimates from the maintained state respect the one-sided
-    // guarantee against the exact recount.
-    val est = CountMin.estimate(
-      spark.table("stream_cms_state").drop("__last_batch"),
-      keys.toDF("k"), "k", d = 4, w = 256)
-    val exact = keys.toDF("k").groupBy("k").agg(count(lit(1)).as("exact"))
-    assert(est.join(exact, Seq("k")).filter(col("est") < col("exact")).count() == 0)
-    assert(est.filter(col("k") === "hot").head().getLong(1) >= 233L)
-    spark.sql("DROP TABLE IF EXISTS stream_cms_state")
-  }
-
   test("streaming distinct-count maintenance equals the from-scratch sketch, exactly-once under replay") {
     import sqlImplicits._
     implicit val sqlCtx = spark.sqlContext
@@ -648,27 +299,6 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS stream_zm_state")
   }
 
-  test("mapGroupsWithState sessionizer accumulates per user across batches") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    implicit val s = spark
-    val stream = MemoryStream[Event]
-    val q = EventStreams.sessionize(stream.toDS)
-      .writeStream.format("memory").queryName("session_test")
-      .outputMode("update").start()
-    stream.addData(events.take(2): _*)
-    q.processAllAvailable()
-    stream.addData(events.drop(2): _*)
-    q.processAllAvailable()
-    q.stop()
-    val last = spark.table("session_test")
-      .groupBy("user_id").agg(max(struct(col("n_events"), col("total_value"))).as("s"))
-      .select(col("user_id"), col("s.n_events"), col("s.total_value"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    assert(last(7L) == ((3L, 11.0)))
-    assert(last(8L) == ((2L, 20.0)))
-  }
-
   test("maintained top-k state equals the from-scratch pass, exactly-once under replay") {
     import sqlImplicits._
     implicit val sqlCtx = spark.sqlContext
@@ -702,43 +332,6 @@ class StreamingSpec extends SparkSpec {
       "stream_topk_state", Seq("g"), "score", "id", 5)
     val after = snap(spark.table("stream_topk_state"))
     assert(after.exists(r => r(2) == 999L && r(1) == 1))
-  }
-
-  test("transformWithState running profile accumulates exact composite state across batches") {
-    import sqlImplicits._
-    implicit val sqlCtx = spark.sqlContext
-    implicit val s = spark
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Event]
-      val q = EventStreams.userRunningProfile(stream.toDS)
-        .writeStream.format("memory").queryName("tws_test")
-        .outputMode("update").start()
-      stream.addData(events.take(2): _*) // user 7: clicks 1.0 + 2.0
-      q.processAllAvailable()
-      stream.addData(events.drop(2): _*) // user 7: +8.0; user 8: views 4.0 + 16.0
-      q.processAllAvailable()
-      q.stop()
-      // memory sink in update mode keeps every emission; the per-user
-      // final state is the row with the highest (monotone) n_events
-      val last = spark.table("tws_test")
-        .groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("sum_micro"), col("n_types"))).as("s"))
-        .select(col("user_id"), col("s.*")).orderBy("user_id").collect()
-      assert(last.length == 2)
-      assert(last(0).getLong(0) == 7L && last(0).getLong(1) == 3L &&
-        last(0).getLong(2) == 110000L && last(0).getLong(3) == 1L)
-      assert(last(1).getLong(0) == 8L && last(1).getLong(1) == 2L &&
-        last(1).getLong(2) == 200000L && last(1).getLong(3) == 1L)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 
   test("streaming CDC snapshot maintenance: upserts, tombstones, exactly-once under replay") {
@@ -1004,8 +597,8 @@ class StreamingSpec extends SparkSpec {
 
   test("fold memos are catalog-qualified: one unqualified state name in two databases cannot collide") {
     import sqlImplicits._
-    graft.sources.Tables.createDatabase(spark, "graft_cross_a")
-    graft.sources.Tables.createDatabase(spark, "graft_cross_b")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_cross_a")
+    spark.sql("CREATE DATABASE IF NOT EXISTS graft_cross_b")
     Seq("a", "b").foreach(d => Seq("", "__staging").foreach(x =>
       spark.sql(s"DROP TABLE IF EXISTS graft_cross_$d.cross_state$x")))
     val sa = spark.newSession(); sa.catalog.setCurrentDatabase("graft_cross_a")
@@ -1294,16 +887,14 @@ class StreamingSpec extends SparkSpec {
     assert(EventStreams.healMemoSize >= 1)
     val before = EventStreams.healMemoSize
     // write the marker from a DIFFERENT session object sharing the
-    // same context/catalog — and through appendTable, exercising the
-    // structural listener coverage of the non-overwrite sinks: a
-    // per-session memo key would miss this invalidation and the root
-    // session's next fold would skip the heal
+    // same context/catalog: a per-session memo key would miss this
+    // invalidation and the root session's next fold would skip the heal
     val clone = spark.newSession()
-    graft.sources.Tables.appendTable(
+    graft.sources.Tables.overwriteTable(
       clone.sql("SELECT '2' AS nbuckets"), state + "__compacting")
     assert(clone ne spark)
     assert(EventStreams.healMemoSize < before,
-      "a clone-session append of the marker must drop the root session's marker-absent memo")
+      "a clone-session write of the marker must drop the root session's marker-absent memo")
     // the root session's next fold must probe again, heal the marker,
     // and apply the batch through repaired partition metadata
     EventStreams.foldSnapshotBatch(

@@ -85,15 +85,6 @@ class TextAnalysisSpec extends SparkSpec {
     assert(kept == Set(1L))
   }
 
-  test("fingerprint is order-sensitive and deterministic") {
-    import sqlImplicits._
-    val d = Seq((1L, "alpha beta gamma"), (2L, "gamma beta alpha"), (3L, "alpha beta gamma"))
-      .toDF("doc_id", "text")
-    val fp = TextAnalysis.fingerprints(d).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(fp(1L) == fp(3L))
-    assert(fp(1L) != fp(2L))
-  }
-
   test("char-n-gram language heuristic: no tokenizer, handles unsegmented scripts") {
     import sqlImplicits._
     import org.apache.spark.sql.functions.col
@@ -344,19 +335,5 @@ class TextAnalysisSpec extends SparkSpec {
       "null text has zero PII matches, not -1")
     val rd = TextAnalysis.readability(d).filter(col("doc_id") === 1L).head()
     assert(rd.getAs[Long]("n_words") == 0L && rd.isNullAt(rd.fieldIndex("flesch")))
-  }
-
-  test("fingerprint survives ANSI mode (the FNV multiply overflowed under strict semantics)") {
-    import sqlImplicits._
-    val conf = spark.conf
-    val saved = conf.get("spark.sql.ansi.enabled")
-    try {
-      conf.set("spark.sql.ansi.enabled", "true")
-      val d = Seq((1L, "alpha beta gamma delta"), (2L, "delta gamma beta alpha"))
-        .toDF("doc_id", "text")
-      val fp = TextAnalysis.fingerprints(d).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fp(1L) != fp(2L), "order sensitivity must hold under ANSI too")
-    } finally conf.set("spark.sql.ansi.enabled", saved)
   }
 }

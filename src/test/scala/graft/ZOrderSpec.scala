@@ -49,7 +49,11 @@ class ZOrderSpec extends SparkSpec {
           else Iterator((l.map(_._2).min, l.map(_._2).max)) // b-range of the chunk
         }.collect().toSeq
 
-    val zChunks = bboxes(ZOrder.cluster(pts, col("a"), 0.0, 64.0, col("b"), 0.0, 64.0, 16))
+    // the z-order layout: range-partition + sort on the z-value
+    val zChunks = bboxes(pts
+      .withColumn("__z", ZOrder.zValue(
+        ZOrder.bucket(col("a"), 0.0, 64.0), ZOrder.bucket(col("b"), 0.0, 64.0)))
+      .repartitionByRange(16, col("__z")).sortWithinPartitions("__z").drop("__z"))
     val aChunks = bboxes(pts.repartitionByRange(16, col("a")).sortWithinPartitions("a"))
 
     // Query: b BETWEEN 10 AND 13 (a narrow slice of the SECOND column).

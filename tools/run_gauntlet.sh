@@ -29,12 +29,30 @@ grep -v "wscg=" /tmp/gauntlet_audit.txt \
 echo "== benchmark self-tests (perfbench compiles and calls the engine sources) =="
 python3 perfbench/test_bench.py
 
-echo "== benchmark, uncorrupted: the star load and the queries over its tables pass their checks =="
-for w in citybike_load warehouse_queries; do
-  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 2 --trace 0 2>/dev/null | tail -1 \
+echo "== benchmark, uncorrupted and traced: every workload passes its checks and does no more work =="
+# Exact work counters: on seed 1 these are identical run to run, unlike
+# wall time, so a change that adds a Spark job, a task, a SQL execution
+# or a written byte fails here. tools/work_counters.json holds the
+# recorded values (warehouse_queries: per-query averages over the 12
+# queries a seed-1 run draws). corpus_curation is the exception: its
+# two branches run on two threads, and identical runs give either
+# 137 jobs / 372 tasks or 139 / 374, so the file holds the higher pair.
+# A change that lowers a counter lowers its recorded value; one that
+# raises a counter says why.
+for w in citybike_load warehouse_queries corpus_curation event_fold; do
+  python3 perfbench/run.py --workload "$w" --seed 1 --seconds 2 --trace 1 2>/dev/null | tail -1 \
     | python3 -c '
 import json, sys
+w = sys.argv[1]
 r = json.loads(sys.stdin.read())
-print("%s: correct=%s failed=%d/%d" % (sys.argv[1], r["correct"], r["failed"], r["attempted"]))
-sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)' "$w"
+print("%s: correct=%s failed=%d/%d" % (w, r["correct"], r["failed"], r["attempted"]))
+ok = r["correct"] is True and r["failed"] == 0
+def show(v):
+    return "%d" % v if float(v).is_integer() else "%.4f" % v
+for k, recorded in json.load(open("tools/work_counters.json"))[w].items():
+    got = r["metrics"][k]["value"]
+    above = got > recorded
+    print("  %s %s (recorded %s)%s" % (k, show(got), show(recorded), " ABOVE" if above else ""))
+    ok = ok and not above
+sys.exit(0 if ok else 1)' "$w"
 done
