@@ -180,7 +180,7 @@ object CityBike {
       dateDim: DataFrame,
       fact: DataFrame)
 
-  // WEAKLY keyed by session (the OpCache audit-map rule): a strong
+  // WEAKLY keyed by session: a strong
   // (session, path) TrieMap pinned every stopped/replaced session —
   // SessionState, analyzer caches, six persisted lineages — for the
   // JVM's lifetime; a long-lived JVM cycling sessions leaked one
@@ -203,7 +203,7 @@ object CityBike {
       // Dependents first: uncaching a frame re-plans every cached frame
       // built on it, so releasing `rides` first re-plans all five.
       Seq(wh.fact, wh.dateDim, wh.stationDim, wh.rideableDim, wh.memberDim, wh.rides)
-        .foreach(graft.operators.OpCache.release)
+        .foreach(graft.operators.OpCache.release(wh.rides.sparkSession, _))
     }
   }
 

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 
 /** Geohash encoding (Niemeyer 2008, public domain spec) — the spatial
   * bucketing key that turns lat/lng proximity into PREFIX equality,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,15 +60,8 @@ object Behavior {
           col(tsCol))).as(s"t$i"))
     }
     // user-cardinality-sized and shared by funnel/conversionLags on
-    // plan-equal inputs — cache one per full parameter shape (the
-    // unit separator keeps distinct stage lists from colliding, and
-    // the column names are part of the key: a caller alternating
-    // tsCol would otherwise thrash the single slot while looking
-    // cached)
-    OpCache.swap(
-      s"behavior.completion.${stages.mkString("")}." +
-        s"$userCol.$typeCol.$tsCol.${withinSeconds.getOrElse(0L)}",
-      cur)
+    // plan-equal inputs
+    OpCache.cached(cur)
   }
 
   /** ORDERED funnel: stage i counts a user only if stage i's event

@@ -33,7 +33,7 @@ object Cooccur {
   // The token stream feeds the pair join (twice) and the unigram /
   // total aggregates — materialize it once per corpus plan.
   private def cachedToks(docs: DataFrame): DataFrame =
-    OpCache.swap("cooccur.toks", tokenPositions(docs))
+    OpCache.cached(tokenPositions(docs))
 
   private def pairsFromToks(toks: DataFrame, window: Int, minPairCount: Long): DataFrame = {
     require(window >= 1, s"pairCounts: window must be ≥1, got $window")

@@ -35,8 +35,7 @@ object CorpusStats {
     * frequencies, …): plan-equal inputs build it once per session.
     */
   def tokenCounts(docs: DataFrame, textCol: String = "text"): DataFrame =
-    OpCache.swap(
-      s"corpus.tokcounts.$textCol",
+    OpCache.cached(
       docs
         .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("cnt")))

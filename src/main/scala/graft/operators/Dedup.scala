@@ -91,12 +91,7 @@ object Dedup {
       // Materialize signatures once: both sides of the bucket self-join
       // read the cached 24-byte-per-doc table instead of recomputing
       // the tokenize→shingle→hash pipeline per side.
-      // every plan-shaping parameter rides the key (the Itemsets
-      // paramKey convention) — callers varying geometry or column
-      // names must not alternate the single slot
-      OpCache.swap("dedup.minhash.sigs." +
-          OpCache.paramKey(numHashes.toString, shingleN.toString, idCol, textCol),
-        minhashSignatures(docs, numHashes, shingleN, idCol, textCol)),
+      OpCache.cached(minhashSignatures(docs, numHashes, shingleN, idCol, textCol)),
       numHashes, bands, minEstJaccard, idCol)
 
   /** Character n-gram MinHash signatures — the dedup unit for
@@ -130,9 +125,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     lshPairsFromSigs(
-      OpCache.swap("dedup.charminhash.sigs." +
-          OpCache.paramKey(numHashes.toString, charN.toString, idCol, textCol),
-        charMinhashSignatures(docs, numHashes, charN, idCol, textCol)),
+      OpCache.cached(charMinhashSignatures(docs, numHashes, charN, idCol, textCol)),
       numHashes, bands, minEstJaccard, idCol)
 
   /** Band a (id, sig) signature table: one row per (id, band) with the
@@ -202,15 +195,11 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     val l = bandedSigs(
-      OpCache.swap("dedup.minhash.sigs.across.l." +
-          OpCache.paramKey(numHashes.toString, shingleN.toString, idCol, textCol),
-        minhashSignatures(left, numHashes, shingleN, idCol, textCol)),
+      OpCache.cached(minhashSignatures(left, numHashes, shingleN, idCol, textCol)),
       numHashes, bands, idCol)
       .select(col("band_id"), col("band_hash"), col(idCol).as("left_id"), col("sig").as("sig_l"))
     val r = bandedSigs(
-      OpCache.swap("dedup.minhash.sigs.across.r." +
-          OpCache.paramKey(numHashes.toString, shingleN.toString, idCol, textCol),
-        minhashSignatures(right, numHashes, shingleN, idCol, textCol)),
+      OpCache.cached(minhashSignatures(right, numHashes, shingleN, idCol, textCol)),
       numHashes, bands, idCol)
       .select(col("band_id"), col("band_hash"), col(idCol).as("right_id"), col("sig").as("sig_r"))
     l.join(Broadcasting.maybeBroadcast(r), Seq("band_id", "band_hash"))
@@ -246,8 +235,7 @@ object Dedup {
     // delegate to the generic 64-bit banding below — the two bodies
     // were verbatim copies modulo output names, so a banding fix had
     // to be applied twice
-    val sh = OpCache.swap("dedup.simhash." + OpCache.paramKey(idCol, textCol),
-      simhashes(docs, idCol, textCol))
+    val sh = OpCache.cached(simhashes(docs, idCol, textCol))
     hammingPairs64(sh, idCol, "simhash", maxHamming)
       .withColumnRenamed("id_a", "doc_a")
       .withColumnRenamed("id_b", "doc_b")
@@ -294,29 +282,12 @@ object Dedup {
     * component.
     */
   def resolveClusters(pairs: DataFrame, maxIter: Int = 15): DataFrame = {
-    // Memoized on the exact input plan (kmeansMemo pattern): the label
-    // loop is EAGER — localCheckpoint + count per round — so repeated
-    // calls on the same pairs (bench warm passes, downstream reports)
-    // would redo every iteration; the memo returns the final
-    // checkpointed label table instead. Keyed on semanticHash with a
-    // sameResult confirmation against the stored plan — a plan STRING
-    // key can truncate (maxToStringFields elision) and collide two
-    // different inputs onto one cached result.
-    val plan = pairs.queryExecution.analyzed
-    val key = (pairs.sparkSession, plan.semanticHash(), maxIter)
-    resolveMemo.get(key) match {
-      case Some((storedPlan, df)) if storedPlan.sameResult(plan) => df
-      case _ =>
-        val df = resolveClustersUncached(pairs, maxIter)
-        resolveMemo.put(key, (plan, df))
-        df
-    }
+    // Keyed by input: the label loop is EAGER — localCheckpoint +
+    // count per round — so repeated calls on the same pairs (warm
+    // passes, downstream reports) would redo every iteration; the
+    // entry holds the final label table over the checkpoints instead.
+    OpCache.byInput(Seq("dedup.resolve", maxIter), pairs)(resolveClustersUncached(pairs, maxIter))
   }
-
-  private val resolveMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-  OpCache.registerClearHook(() => resolveMemo.clear())
 
   private def resolveClustersUncached(pairs: DataFrame, maxIter: Int): DataFrame = {
     // Alternating large-star / small-star (Kiveris et al., "Connected
@@ -328,17 +299,9 @@ object Dedup {
     // is pathological but possible at 100 TB). Edges keep the (u > v)
     // orientation as an invariant; every step is a groupBy/join on
     // node ids — two longs per row, no payloads.
-    // localCheckpoint like `edges`, NOT a shared OpCache slot: this
-    // ran under a single "dedup.nodes" key until the r12 single-slot
-    // audit flagged it as the surface's one real alternation — each
-    // distinct `pairs` input (x16, the x48 twin, the dedup reports)
-    // swapped the slot and unpersisted the previous resolution's nodes
-    // table, which the previous MEMOIZED result still references in
-    // its final label union below, so its consumers silently recomputed
-    // the full pair lineage on every use. The table is used exactly
-    // once per resolution (the root-labeling anti-join), so the right
-    // lifecycle is the memo's own: materialize eagerly, truncate
-    // lineage, live and die with the memoized result.
+    // localCheckpoint like `edges`: the table is used exactly once per
+    // resolution (the root-labeling anti-join), so it lives and dies
+    // with the memoized result that references it.
     val nodes = pairs.select(col("doc_a").as("id"))
       .unionByName(pairs.select(col("doc_b").as("id")))
       .distinct()
@@ -483,9 +446,12 @@ object Dedup {
       key: String,
       expectedItems: Long,
       fpp: Double = 0.01): DataFrame = {
-    val bf = small.stat.bloomFilter(key, expectedItems, fpp)
-    val bc = big.sparkSession.sparkContext.broadcast(bf)
-    trackBloomBroadcast(bc)
+    // Keyed by the small side: the sketch is deterministic in it, and
+    // the cache unpersists the broadcast when the entry goes (not
+    // destroy — a cached plan that still references one re-broadcasts
+    // on demand).
+    val bc = OpCache.byInput(Seq("dedup.bloom", key, expectedItems, fpp), small)(
+      big.sparkSession.sparkContext.broadcast(small.stat.bloomFilter(key, expectedItems, fpp)))
     // No .distinct() on the small side: left_semi output is unaffected
     // by right-side duplicates, and the dedup would cost a shuffle.
     big.filter(bloomMightContain(big, small, key, bc))
@@ -526,20 +492,6 @@ object Dedup {
       graft.plans.BloomMightContain(
         org.apache.spark.sql.graftops.ColumnBridge.expression(keyExpr), bc))
   }
-
-  // Released via OpCache.clear() (test teardown / probe-loop resets):
-  // each bloom call site pins a sketch broadcast for the session
-  // lifetime otherwise. unpersist (not destroy) — a cached plan that
-  // still references one re-broadcasts on demand. Shared with the
-  // streaming decontamination path (EventStreams).
-  private val bloomBroadcasts =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
-  private[graft] def trackBloomBroadcast(bc: org.apache.spark.broadcast.Broadcast[_]): Unit =
-    bloomBroadcasts.synchronized { bloomBroadcasts += bc }
-  OpCache.registerClearHook(() => bloomBroadcasts.synchronized {
-    bloomBroadcasts.foreach(b => scala.util.Try(b.unpersist(false)))
-    bloomBroadcasts.clear()
-  })
 
   /** Per-document duplicated-n-gram fraction (the RefinedWeb-style
     * substring-contamination signal): of a document's distinct word
@@ -587,8 +539,7 @@ object Dedup {
         // materialized once: the hot-list build and the probe side
         // both read the cache instead of re-running the dominant
         // tokenize→shingle→md5 pipeline.
-        val cached = OpCache.swap(
-          "dedup.dupstats.grams." + OpCache.paramKey(shingleN.toString), grams)
+        val cached = OpCache.cached(grams)
         val hot = cached.groupBy("gh")
           .agg(count(lit(1)).as("df"))
           .filter(col("df") > cap)
@@ -657,7 +608,7 @@ object Dedup {
     */
   private def gramIndex(docs: DataFrame, shingleN: Int, maxShingleDf: Option[Long]): DataFrame = {
     // One interpreted shingle-pipeline pass per doc, materialized.
-    val exAll = OpCache.swap("dedup.ngram.ex." + OpCache.paramKey(shingleN.toString),
+    val exAll = OpCache.cached(
       docs
         .select(col("doc_id"), col("lang"), col("n_chars"), tokens(col("text")).as("__toks"))
         .select(
@@ -677,9 +628,7 @@ object Dedup {
           .agg(count(lit(1)).as("df"))
           .filter(col("df") > cap)
           .select("lang", "h")
-        OpCache.swap(
-          "dedup.ngram.ex.capped." + OpCache.paramKey(shingleN.toString, cap.toString),
-          hotCapAntiJoin(exAll, hot, Seq("lang", "h")))
+        OpCache.cached(hotCapAntiJoin(exAll, hot, Seq("lang", "h")))
       case None => exAll
     }
   }
@@ -800,8 +749,7 @@ object Dedup {
     // Materialize the PRE-cap gram table: the dominant tokenize→gram
     // pipeline runs once, shared by the capped and uncapped calls
     // (plan-equal site) and by the hot-list build + both join sides.
-    val cached = OpCache.swap(
-      "dedup.runs.grams." + OpCache.paramKey(k.toString, idCol, textCol), grams)
+    val cached = OpCache.cached(grams)
     val ex = maxGramDf match {
       case Some(cap) =>
         // Hot-list anti-join (the ngramDupStats shape): the over-cap

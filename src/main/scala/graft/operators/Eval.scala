@@ -61,8 +61,7 @@ object Eval {
     * count that window would sort in one task.
     */
   private def cardGuard(
-      op: String, cardWin: org.apache.spark.sql.expressions.WindowSpec,
-      cap: Long = MaxNonNumericScores.toLong): Column = {
+      op: String, cardWin: org.apache.spark.sql.expressions.WindowSpec, cap: Long): Column = {
     val card = count(lit(1)).over(cardWin)
     coalesce(
       assert_true(

@@ -159,9 +159,6 @@ object Expectations {
       case Unique(n, cols) => require(cols.nonEmpty, s"$n: Unique with no columns")
       case _ => ()
     }
-    val spark = df.sparkSession
-    import spark.implicits._
-
     val rowLocal = expectations.flatMap(e => rowLocalViolation(e).map(e -> _))
     val onePass: Option[DataFrame] =
       if (rowLocal.isEmpty) None

@@ -80,7 +80,7 @@ object GridCluster {
       .agg(count(lit(1)).as("n_pts"))
       .filter(col("n_pts") >= minPts)
       .withColumn("cell_id", cellId(col("cx"), col("cy")))
-    val cached = OpCache.swap(s"gridcluster.cells.$stepMicroDeg.$minPts", cells)
+    val cached = OpCache.cached(cells)
     // 8-neighborhood edges between CORE cells: explode each cell's 8
     // neighbor ids, equi-join back on the core-cell table. Orientation
     // a < b halves the set; resolveClusters re-symmetrizes.

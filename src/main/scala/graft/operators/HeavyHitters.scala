@@ -68,8 +68,7 @@ object HeavyHitters {
     // constructor args, not children). A def here made every
     // re-construction of the same aggregation compare sameResult=false
     // — so the OpCache'd sketch pass re-ran on every warm invocation
-    // while looking cached (caught by the r12 two-pass single-slot
-    // audit as the hh.summary alternation).
+    // while looking cached.
     override val bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
     override val outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder()
   }
@@ -101,17 +100,16 @@ object HeavyHitters {
     // serialization ("Cannot use null as map key"), and even short of
     // that it would inflate N (the threshold denominator) with rows
     // that can never be a reportable key.
-    val ks = OpCache.swap("hh.keys." + OpCache.paramKey(keyCol),
+    val ks = OpCache.cached(
       keys.filter(col(keyCol).isNotNull).select(col(keyCol).as("__hh_key")))
     // Pass 1: candidates + N in ONE 1-row aggregation. The summary
     // feeds two subtrees (candidate list, total) — cache the 1-row
     // result so the sketch pass runs once, not once per subtree.
-    // swapByInput, NOT swap: the Misra-Gries udaf makes this plan
-    // non-self-comparable (analysis installs fresh resolved encoders
-    // every construction — the r12 audit finding), so the slot is
-    // keyed on the UNTYPED ks plan; a hit skips building the typed
-    // plan entirely.
-    val summary = OpCache.swapByInput(s"hh.summary.$k." + OpCache.paramKey(keyCol), ks)(
+    // Keyed by input, not cached by plan: the Misra-Gries udaf makes
+    // this plan non-self-comparable (analysis installs fresh resolved
+    // encoders every construction), so the entry is keyed on the
+    // UNTYPED ks plan; a hit skips building the typed plan entirely.
+    val summary = OpCache.byInput(Seq("hh.summary", k), ks)(
       ks.agg(
         misraGries(col("__hh_key"), k).as("cand"),
         count(lit(1)).as("total")))

@@ -55,30 +55,14 @@ object Itemsets {
   def pairCounts(
       df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long = 2L, maxBasketSize: Int = 256): DataFrame =
-    pairsFromBaskets(
-      baskets(df, basketCol, itemCol, maxBasketSize), minSupport,
-      paramKey(basketCol, itemCol, maxBasketSize))
-
-  // EVERY parameter that shapes the plan is part of the cache key (the
-  // Behavior.completionTimes convention): keys carrying only
-  // minSupport would let two callers varying maxBasketSize or the
-  // column names on the same input alternate the single slot —
-  // unpersisting and fully recomputing the dominant basket/pair
-  // shuffles on every call while looking cached. Segments join on NUL
-  // (OpCache.paramKey), not '.': column names can themselves carry
-  // dots, so ("a.b","c") and ("a","b.c") would collide under a '.'
-  // join — alternation-only (the slot is plan-checked), but it defeats
-  // the key for exactly the dotted names it exists to distinguish.
-  private def paramKey(basketCol: String, itemCol: String, maxBasketSize: Int): String =
-    OpCache.paramKey(basketCol, itemCol, maxBasketSize.toString)
+    pairsFromBaskets(baskets(df, basketCol, itemCol, maxBasketSize), minSupport)
 
   // The Σ L² explode + pair aggregation dominates every consumer, and
   // pairCounts/pairStats/itemNeighbors all want the SAME table for a
-  // given input — OpCache it (plan-keyed) so the basket-pair shuffle
-  // runs once per session, not once per query.
-  private def pairsFromBaskets(b: DataFrame, minSupport: Long, pKey: String): DataFrame =
-    OpCache.swap(
-      s"itemsets.pairs.$minSupport.$pKey",
+  // given input — cache it so the basket-pair shuffle runs once per
+  // session, not once per query.
+  private def pairsFromBaskets(b: DataFrame, minSupport: Long): DataFrame =
+    OpCache.cached(
       b
         .select(col("items"), posexplode(col("items")).as(Seq("pa", "item_a")))
         .select(col("item_a"), col("pa"), posexplode(col("items")).as(Seq("pb", "item_b")))
@@ -95,21 +79,18 @@ object Itemsets {
   def pairStats(
       df: DataFrame, basketCol: String, itemCol: String,
       minSupport: Long = 2L, maxBasketSize: Int = 256): DataFrame = {
-    val pKey = paramKey(basketCol, itemCol, maxBasketSize)
-    val b = OpCache.swap(
-      s"itemsets.baskets.$pKey", baskets(df, basketCol, itemCol, maxBasketSize))
+    val b = OpCache.cached(baskets(df, basketCol, itemCol, maxBasketSize))
     val itemN = b
       .select(explode(col("items")).as("item"))
       .groupBy("item").agg(count(lit(1)).as("n"))
     val total = b.agg(count(lit(1)).as("n_baskets"))
-    val pairs = pairsFromBaskets(b, minSupport, pKey)
+    val pairs = pairsFromBaskets(b, minSupport)
     // Cache the FINISHED stats frame, not just the raw pair table:
     // the rule-mining readout (pairStats consumers) and the CF
     // neighbor ranking (itemNeighbors) both join supports back onto
     // the pair set — sharing the joined result runs those joins once
     // per input (the triangles.pernode lifecycle).
-    OpCache.swap(
-      s"itemsets.pairstats.$minSupport.$pKey",
+    OpCache.cached(
       pairs
         .join(
           Broadcasting.maybeBroadcast(

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
@@ -78,14 +78,7 @@ object NgramLm {
       idCol: String = "doc_id",
       textCol: String = "text",
       quantizeMicroNats: Boolean = false): DataFrame = {
-    // the cache key carries EVERY parameter that shapes the plan (the
-    // Itemsets paramKey convention): a bare "ngramlm.bigrams" let two
-    // callers varying idCol/textCol on the same input alternate the
-    // single slot — plan-checked so results stayed correct, but the
-    // dominant explode/shuffle silently recomputed on every call
-    val bg = OpCache.swap(
-      "ngramlm.bigrams." + OpCache.paramKey(idCol, textCol),
-      bigrams(docs, idCol, textCol))
+    val bg = OpCache.cached(bigrams(docs, idCol, textCol))
     // model tables: corpus-wide bigram and history counts + |V|
     val cbg = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_bg"))
     val ch = bg.groupBy(col("w1")).agg(count(lit(1)).as("c_h"))

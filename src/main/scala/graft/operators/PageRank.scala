@@ -50,19 +50,16 @@ object PageRank {
   def ranks(edges: DataFrame, iters: Int = 5, d100: Int = 85): DataFrame = {
     require(iters >= 1, s"ranks: iters must be ≥1, got $iters")
     require(d100 >= 0 && d100 <= 100, s"ranks: d100 must be in [0,100], got $d100")
-    val e = OpCache.swap(
-      "pagerank.edges",
+    val e = OpCache.cached(
       edges.select(col("src"), col("dst"))
         .filter(col("src").isNotNull && col("dst").isNotNull)
         .distinct())
     // nodes/outdeg re-enter the plan EVERY round — cache them, or
     // each iteration replays their distinct/groupBy shuffles.
-    val nodes = OpCache.swap(
-      "pagerank.nodes",
+    val nodes = OpCache.cached(
       e.select(col("src").as("id"))
         .unionByName(e.select(col("dst").as("id"))).distinct())
-    val outdeg = OpCache.swap(
-      "pagerank.outdeg",
+    val outdeg = OpCache.cached(
       e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
     // |V| and the teleport term are tiny scalars: evaluate once on
     // the driver so each round's literals are plan constants. (The

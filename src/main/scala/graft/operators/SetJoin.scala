@@ -55,20 +55,13 @@ object SetJoin {
       textCol: String = "text"): DataFrame = {
     require(t > 0 && t <= 1, s"jaccardJoin: threshold must be in (0,1], got $t")
     val tq = math.round(t * 1e6)
-    val toks = OpCache.swap(
-      // threshold-free (t enters only downstream), but the column
-      // names DO shape the cached plan — carry them (the Itemsets
-      // paramKey convention) so callers varying idCol/textCol don't
-      // alternate the slot
-      "setjoin.toks." + OpCache.paramKey(idCol, textCol),
+    val toks = OpCache.cached(
       docs.select(col(idCol).as("id"), explode(TextFunctions.tokens(col(textCol))).as("tok"))
         .distinct())
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     // tokens per doc in (df asc, tok asc) order — struct sort gives
     // exactly that field-lexicographic total order
-    val ordered = OpCache.swap(
-      // threshold-free: t enters only downstream of the cache
-      "setjoin.ordered." + OpCache.paramKey(idCol, textCol),
+    val ordered = OpCache.cached(
       toks.join(dfreq, Seq("tok"))
         .groupBy(col("id"))
         .agg(array_sort(collect_list(struct(col("df"), col("tok")))).as("ts"))

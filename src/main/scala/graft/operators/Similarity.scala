@@ -31,14 +31,13 @@ object Similarity {
     * and the norm fold is an interpreted higher-order function — pay
     * it once per row, not once per reference.
     */
-  private def prepared(embeddings: DataFrame, site: String): DataFrame =
-    OpCache.swap(site,
+  private def prepared(embeddings: DataFrame): DataFrame =
+    OpCache.cached(
       // Normalize to (vec_id, embedding) FIRST: every operator family
-      // preps the same corpus, and the shared "sim.prep"/"sim.prep.q"
-      // sites only dedupe the materialization if every caller's input
-      // plan is EQUAL — a caller-side projection difference (raw table
-      // vs pre-selected columns) would silently turn the shared site
-      // into a rebuild-per-operator thrash.
+      // preps the same corpus, and the cached prep is only shared when
+      // every caller's plan is EQUAL — a caller-side projection
+      // difference (raw table vs pre-selected columns) would silently
+      // rebuild it per operator.
       embeddings.select(col("vec_id"), col("embedding")).select(
         col("vec_id"),
         toDoubleVec(col("embedding")).as("vec"))
@@ -65,19 +64,17 @@ object Similarity {
     * against). Self-pairs excluded by id.
     * Output: (query_id, neighbor_id, cosine, rank) — rank 1..k.
     */
-  def cosineTopK(embeddings: DataFrame, k: Int = 3, queryMod: Int = 100,
-      site: String = "sim.prep"): DataFrame =
-    cosineTopK(embeddings, embeddings.filter(col("vec_id") % queryMod === 0), k, site)
+  def cosineTopK(embeddings: DataFrame, k: Int = 3, queryMod: Int = 100): DataFrame =
+    cosineTopK(embeddings, embeddings.filter(col("vec_id") % queryMod === 0), k)
 
   /** External-query-set form: `queries` has the corpus shape
     * (vec_id, embedding). Brute force is inherently all-pairs — the
     * query side should be small; above the broadcast threshold the
     * planner falls back to a nested-loop join.
     */
-  def cosineTopK(embeddings: DataFrame, queries: DataFrame, k: Int,
-      site: String): DataFrame = {
-    val corpus = prepared(embeddings, site)
-    val qprep = prepared(queries, site + ".q")
+  def cosineTopK(embeddings: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val corpus = prepared(embeddings)
+    val qprep = prepared(queries)
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"), col("norm").as("qnorm"))
 
     val scored = corpus
@@ -106,19 +103,14 @@ object Similarity {
       queryMod: Int = 100,
       nPlanes: Int = 16,
       bands: Int = 4,
-      dim: Int = 64,
-      site: String = "sim.prep"): DataFrame =
+      dim: Int = 64): DataFrame =
     annSignLshTopK(embeddings, embeddings.filter(col("vec_id") % queryMod === 0),
-      k, nPlanes, bands, dim, site)
+      k, nPlanes, bands, dim)
 
   /** External-query-set form. The banded candidate join carries ids
     * only; vectors are re-attached AFTER the (query_id, neighbor_id)
     * pairs are deduplicated, so neither the bucket join nor the dedup
-    * shuffle moves array payloads. `site` scopes the OpCache entries
-    * (the cosineTopK convention): callers running the pipeline over a
-    * DIFFERENT corpus (the multimodal feature space) must pass their
-    * own site or every invocation evicts the other corpus's prep and
-    * the shared caches thrash.
+    * shuffle moves array payloads.
     */
   def annSignLshTopK(
       embeddings: DataFrame,
@@ -126,16 +118,12 @@ object Similarity {
       k: Int,
       nPlanes: Int,
       bands: Int,
-      dim: Int,
-      site: String): DataFrame = {
-    // nPlanes/dim shape the cached signature plans (the paramKey
-    // convention); bands enters only downstream of the cache
-    val sigKey = OpCache.paramKey(nPlanes.toString, dim.toString)
-    val base = OpCache.swap(site + ".lsh.sig." + sigKey,
-      prepared(embeddings, site)
+      dim: Int): DataFrame = {
+    val base = OpCache.cached(
+      prepared(embeddings)
         .withColumn("sig", signLshSignature(col("vec"), nPlanes, dim)))
-    val qbase = OpCache.swap(site + ".lsh.qsig." + sigKey,
-      prepared(queries, site + ".q")
+    val qbase = OpCache.cached(
+      prepared(queries)
         .select(col("vec_id").as("query_id"), col("vec").as("qvec"), col("norm").as("qnorm"))
         .withColumn("qsig", signLshSignature(col("qvec"), nPlanes, dim)))
 
@@ -157,7 +145,7 @@ object Similarity {
     // tie-break or rounding change cannot diverge between the LSH and
     // PQ/IVF paths
     exactRerank(candidates.withColumnRenamed("neighbor_id", "vec_id"),
-      base, prepared(queries, site + ".q"), k)
+      base, prepared(queries), k)
   }
 
   /** IVF (inverted-file) ANN top-k: the corpus is partitioned into
@@ -186,12 +174,11 @@ object Similarity {
       k: Int,
       nProbes: Int,
       centroidCol: String): DataFrame = {
-    val base = prepared(embeddings, "sim.prep")
+    val base = prepared(embeddings)
 
     // Per-cell mean vector via positional explode → elementwise avg →
     // re-assembled in position order (deterministic).
-    // centroidCol shapes the cached plan (the paramKey convention)
-    val centroids = OpCache.swap("sim.ivf.centroids." + OpCache.paramKey(centroidCol),
+    val centroids = OpCache.cached(
       embeddings
         .select(col(centroidCol).as("cell"), posexplode(toDoubleVec(col("embedding"))).as(Seq("pos", "x")))
         .groupBy(col("cell"), col("pos"))
@@ -201,9 +188,7 @@ object Similarity {
         .select(col("cell"), transform(col("pm"), e => e.getField("m")).as("cvec"))
         .withColumn("cnorm", l2norm(col("cvec"))))
 
-    ivfSearch(prepared(queries, "sim.prep.q"),
-      base, centroids, k, nProbes,
-      "sim.ivf.assigned." + OpCache.paramKey(centroidCol))
+    ivfSearch(prepared(queries), base, centroids, k, nProbes)
   }
 
   /** IVF ANN with centroids learned by Lloyd's k-means instead of
@@ -221,56 +206,29 @@ object Similarity {
       queryMod: Int = 100,
       nProbes: Int = 2,
       cells: Int = 8,
-      maxIter: Int = 3,
-      site: String = "sim.prep"): DataFrame =
+      maxIter: Int = 3): DataFrame =
     ivfTopKKmeans(embeddings, embeddings.filter(col("vec_id") % queryMod === 0),
-      k, nProbes, cells, maxIter, site)
+      k, nProbes, cells, maxIter)
 
-  /** External-query-set form of [[ivfTopKKmeans]]. `site` scopes the
-    * prep caches per corpus (see [[annSignLshTopK]]).
-    */
+  /** External-query-set form of [[ivfTopKKmeans]]. */
   def ivfTopKKmeans(
       embeddings: DataFrame,
       queries: DataFrame,
       k: Int,
       nProbes: Int,
       cells: Int,
-      maxIter: Int,
-      site: String): DataFrame = {
-    val base = prepared(embeddings, site)
-    ivfSearch(prepared(queries, site + ".q"),
-      base, memoizedKmeans(base, cells, maxIter), k, nProbes,
-      s"$site.ivfkm.assigned.$cells.$maxIter")
+      maxIter: Int): DataFrame = {
+    val base = prepared(embeddings)
+    ivfSearch(prepared(queries), base, memoizedKmeans(base, cells, maxIter), k, nProbes)
   }
 
-  /** Memoized on the exact input plan: the Lloyd loop is EAGER
-    * (localCheckpoint per round), so an OpCache swap would arrive
-    * after the work is already redone — the memo short-circuits the
-    * recompute itself. The cached value is the tiny checkpointed
-    * centroid table (k rows). Keyed on semanticHash + a sameResult
-    * confirmation (a plan STRING can truncate via maxToStringFields
-    * and collide two different inputs onto one cached result).
+  /** Keyed by input: the Lloyd loop is EAGER (localCheckpoint per
+    * round), so a plan-matched entry would arrive after the work is
+    * already redone — the memo short-circuits the recompute itself.
+    * The value is the tiny checkpointed centroid table (k rows).
     */
-  private def memoizedKmeans(base: DataFrame, cells: Int, maxIter: Int): DataFrame = {
-    val plan = base.queryExecution.analyzed
-    val key = (base.sparkSession, plan.semanticHash(), cells, maxIter)
-    kmeansMemo.get(key) match {
-      case Some((storedPlan, df)) if storedPlan.sameResult(plan) => df
-      case _ =>
-        val df = kmeansCentroids(base, cells, maxIter)
-        kmeansMemo.put(key, (plan, df))
-        df
-    }
-  }
-
-  // Evicted via OpCache.clear(): entries hold localCheckpoint'd tables
-  // keyed by (session, plan hash) — without eviction, loops over
-  // growing inputs and per-test sessions would retain one table per
-  // distinct input plan for the JVM lifetime.
-  private val kmeansMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-  OpCache.registerClearHook(() => kmeansMemo.clear())
+  private def memoizedKmeans(base: DataFrame, cells: Int, maxIter: Int): DataFrame =
+    OpCache.byInput(Seq("sim.kmeans", cells, maxIter), base)(kmeansCentroids(base, cells, maxIter))
 
   /** Lloyd's k-means over a prepared (vec_id, vec, norm) corpus.
     * Output: (cell, cvec, cnorm) — the IVF centroid table shape.
@@ -399,15 +357,12 @@ object Similarity {
       base: DataFrame,
       centroids: DataFrame,
       k: Int,
-      nProbes: Int,
-      site: String): DataFrame = {
+      nProbes: Int): DataFrame = {
     // The corpus-side cell assignment is the N·cells hot scan, and the
     // centroid inputs are cached/checkpointed plans — so a repeat
     // invocation is plan-equal and should read the stored assignment,
-    // not re-score the corpus. `site` keys per centroid SOURCE (label
-    // vs k-means): the two produce different plans, and one shared key
-    // would thrash the single-slot cache on surfaces running both.
-    val corpus = OpCache.swap(site,
+    // not re-score the corpus.
+    val corpus = OpCache.cached(
       assignCells(base, centroids, 1)
         .select(col("cell"), col("vec_id"), col("vec"), col("norm")))
     val queries = assignCells(qprep, centroids, nProbes)
@@ -474,9 +429,8 @@ object Similarity {
       nPlanes: Int = 16,
       bands: Int = 4,
       dim: Int = 64): DataFrame = {
-    val base = OpCache.swap(
-      "sim.neardup.sig." + OpCache.paramKey(nPlanes.toString, dim.toString),
-      prepared(embeddings, "sim.prep")
+    val base = OpCache.cached(
+      prepared(embeddings)
         .withColumn("sig", signLshSignature(col("vec"), nPlanes, dim)))
     val bandedIds = base.select(
       col("vec_id"),
@@ -531,12 +485,10 @@ object Similarity {
       .filter(col("cosine") >= minCosine)
   }
 
-  /** 1-probe cell assignment for SemDeDup — one OpCache site. */
+  /** 1-probe cell assignment for SemDeDup, cached. */
   private def semanticAssigned(embeddings: DataFrame, cells: Int, maxIter: Int): DataFrame = {
-    val base = prepared(embeddings, "sim.prep")
-    OpCache.swap(
-      "sim.semdedup.assigned." + OpCache.paramKey(cells.toString, maxIter.toString),
-      assignCells(base, memoizedKmeans(base, cells, maxIter), probes = 1))
+    val base = prepared(embeddings)
+    OpCache.cached(assignCells(base, memoizedKmeans(base, cells, maxIter), probes = 1))
   }
 
   // ------------------------------------------------------ product quantization
@@ -594,16 +546,13 @@ object Similarity {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     require(codes <= 256, s"codes $codes exceeds one byte — the PQ memory contract")
     val sub = dim / m
-    val base = prepared(embeddings, "sim.prep")
+    val base = prepared(embeddings)
     val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
     val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
     // training is memoized but the N·m·codes encode pass was rebuilt
-    // per invocation — cache it; the key carries every parameter the
-    // plan depends on, so distinct geometries never share (and thus
-    // never thrash) a slot
-    val packed = OpCache.swap(s"sim.pq.packed.$m.$c.$maxIter",
-      encodePacked(base, codebooks, m, sub))
-    val qprep = prepared(queries, "sim.prep.q")
+    // per invocation — cache it
+    val packed = OpCache.cached(encodePacked(base, codebooks, m, sub))
+    val qprep = prepared(queries)
     val lut = queryLuts(qprep, codebooks, m, sub)
 
     // The lut is FORCE-broadcast: one m·codes-double row per query
@@ -682,23 +631,21 @@ object Similarity {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     require(codes <= 256, s"codes $codes exceeds one byte — the PQ memory contract")
     val sub = dim / m
-    val base = prepared(embeddings, "sim.prep")
+    val base = prepared(embeddings)
     val centroids = memoizedKmeans(base, cells, maxIter)
     val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
     val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
 
     // Encoded corpus carries its cell: (cell, vec_id, vcodes, norm).
     // The cell join is id-to-id (both sides N rows, m+1 narrow cols).
-    // Both inputs cached: the encode pass shares pqTopK's slot (same
-    // geometry → plan-equal), the cell assignment its own.
-    val packed = OpCache.swap(s"sim.pq.packed.$m.$c.$maxIter",
-      encodePacked(base, codebooks, m, sub))
+    // Both inputs cached: the encode pass shares pqTopK's entry (same
+    // geometry → plan-equal).
+    val packed = OpCache.cached(encodePacked(base, codebooks, m, sub))
       .join(
-        OpCache.swap(s"sim.ivfpq.assigned.$cells.$maxIter",
-          assignCells(base, centroids, 1).select(col("vec_id"), col("cell"))),
+        OpCache.cached(assignCells(base, centroids, 1).select(col("vec_id"), col("cell"))),
         Seq("vec_id"))
 
-    val qprep = prepared(queries, "sim.prep.q")
+    val qprep = prepared(queries)
     // One (query_id, cell, lut) row per probed cell — nProbes rows per
     // query, each a ~2 KB lut array; broadcast while small, shuffled
     // equi-join on cell beyond the threshold.
@@ -732,10 +679,6 @@ object Similarity {
       posexplode(array((0 until m).map(j =>
         slice(col("vec"), j * sub + 1, sub)): _*)).as(Seq("sub_j", "svec")))
 
-  /** Codebooks for all m subspaces trained in one dataflow (memoized:
-    * the Lloyd loop is eager, an OpCache swap would arrive too late).
-    * Shared by [[pqTopK]] and [[ivfPqTopK]] — same base, same books.
-    */
   /** The codebook can only be as dense as the corpus: seeding takes
     * min(rows, codes) codes per subspace, while the LUT packing and
     * adcScore's positional indexing stride by the REQUESTED codes — on
@@ -748,18 +691,15 @@ object Similarity {
   private def effectiveCodes(base: DataFrame, codes: Int): Int =
     math.min(codes.toLong, math.max(1L, base.count())).toInt
 
+  /** Codebooks for all m subspaces trained in one dataflow, keyed by
+    * input (the Lloyd loop is eager, a plan-matched entry would arrive
+    * too late). Shared by [[pqTopK]] and [[ivfPqTopK]] — same base,
+    * same books.
+    */
   private def memoPqCodebooks(
-      base: DataFrame, m: Int, codes: Int, maxIter: Int, sub: Int): DataFrame = {
-    val plan = base.queryExecution.analyzed
-    val key = (base.sparkSession, plan.semanticHash(), m, codes, maxIter, sub)
-    pqMemo.get(key) match {
-      case Some((storedPlan, df)) if storedPlan.sameResult(plan) => df
-      case _ =>
-        val df = pqCodebooks(subRowsOf(base, m, sub), codes, maxIter)
-        pqMemo.put(key, (plan, df))
-        df
-    }
-  }
+      base: DataFrame, m: Int, codes: Int, maxIter: Int, sub: Int): DataFrame =
+    OpCache.byInput(Seq("sim.pq.books", m, codes, maxIter, sub), base)(
+      pqCodebooks(subRowsOf(base, m, sub), codes, maxIter))
 
   /** Encode the corpus (nearest code per (vec_id, sub_j) by L2) and
     * pack each vector's m codes into one array — the compressed corpus
@@ -834,11 +774,6 @@ object Similarity {
       .filter(col("rank") <= k)
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
   }
-
-  private val pqMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int, Int, Int),
-      (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, DataFrame)]
-  OpCache.registerClearHook(() => pqMemo.clear())
 
   /** Per-subspace k-means codebooks, all subspaces per round in ONE
     * assign + ONE recompute (grouping key (sub_j, code)). Seeds:
@@ -924,24 +859,17 @@ object Similarity {
     // Memoize per (input plan, prefix, geometry); a hit is only served
     // while every artifact table still exists, so an external DROP (or
     // OpCache.clear(), the test-pinned path) forces a real rebuild.
-    OpCache.onceByInput(
-      OpCache.paramKey("sim.ivfpq.index", prefix, cells.toString, m.toString,
-        codes.toString, maxIter.toString, dim.toString),
-      embeddings) {
-      Seq("cells", "books", "corpus", "meta")
-        .forall(t => spark.catalog.tableExists(s"${prefix}_$t"))
-    } {
-      val base = prepared(embeddings, "sim.prep")
+    OpCache.byInput(Seq("sim.ivfpq.index", prefix, cells, m, codes, maxIter, dim), embeddings,
+      Seq("cells", "books", "corpus", "meta").forall(t => spark.catalog.tableExists(s"${prefix}_$t"))) {
+      val base = prepared(embeddings)
       val centroids = memoizedKmeans(base, cells, maxIter)
       val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
       val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
-      // same cache keys as the search paths: a build in the same session
-      // as a search (the lifecycle probe's shape) encodes once
-      val packed = OpCache.swap(s"sim.pq.packed.$m.$c.$maxIter",
-        encodePacked(base, codebooks, m, sub))
+      // the search paths' plans: a build in the same session as a
+      // search (the lifecycle probe's shape) encodes once
+      val packed = OpCache.cached(encodePacked(base, codebooks, m, sub))
         .join(
-          OpCache.swap(s"sim.ivfpq.assigned.$cells.$maxIter",
-            assignCells(base, centroids, 1).select(col("vec_id"), col("cell"))),
+          OpCache.cached(assignCells(base, centroids, 1).select(col("vec_id"), col("cell"))),
           Seq("vec_id"))
       // An ephemeral catalog forgets tables while their warehouse dirs
       // survive — reset location + catalog entry so a rebuild in a fresh
@@ -984,7 +912,7 @@ object Similarity {
     val centroids = spark.table(s"${prefix}_cells")
     val codebooks = spark.table(s"${prefix}_books")
     val packed = spark.table(s"${prefix}_corpus")
-    val qprep = prepared(queries, "sim.prep.q")
+    val qprep = prepared(queries)
     val lutCells = queryLuts(qprep, codebooks, m, sub)
       .join(
         assignCells(qprep, centroids, nProbes).select(col("vec_id").as("query_id"), col("cell")),
@@ -997,6 +925,6 @@ object Similarity {
       .withColumn("arank", row_number().over(approxW))
       .filter(col("arank") <= rerank)
       .select("query_id", "vec_id")
-    exactRerank(shortlist, prepared(embeddings, "sim.prep"), qprep, k)
+    exactRerank(shortlist, prepared(embeddings), qprep, k)
   }
 }

@@ -46,8 +46,7 @@ object Skew {
   def profile(df: DataFrame, keyCols: Seq[String], topK: Int = 20): DataFrame = {
     require(keyCols.nonEmpty, "Skew.profile: at least one key column")
     require(topK >= 1, s"Skew.profile: topK must be ≥1, got $topK")
-    val keyed = OpCache.swap(
-      "skew.profile.keyed",
+    val keyed = OpCache.cached(
       df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("cnt")))
     val summary = keyed.agg(
       sum(col("cnt")).as("n_rows"),

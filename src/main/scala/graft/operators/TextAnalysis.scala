@@ -78,7 +78,7 @@ object TextAnalysis {
   def tokenRarity(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     // Read twice (df build + join-back) — materialize once.
-    val toks = OpCache.swap("text.rarity.toks",
+    val toks = OpCache.cached(
       docs.select(col("doc_id"), explode(array_distinct(tokens(col("text")))).as("tok")))
     val dfTab = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     toks.join(dfTab, Seq("tok"))
@@ -114,7 +114,7 @@ object TextAnalysis {
     // normalizes to "" so the doc still emits its (1-line, nothing
     // stripped) row — posexplode of a NULL split would silently drop
     // the document from the output entirely.
-    val lines = OpCache.swap("text.boiler.lines",
+    val lines = OpCache.cached(
       docs.select(
         col("doc_id"),
         posexplode(split(coalesce(col("text"), lit("")), "\n", -1))
@@ -394,12 +394,7 @@ object TextAnalysis {
       .withColumn("is_stop", col("tok").isin(stops: _*).cast("int"))
       .withColumn("grp", sum(col("is_stop")).over(frame))
       .filter(col("is_stop") === 0)
-    val phrases = OpCache.swap(
-      // maxPhraseLen shapes the cached plan (the plen filter below) —
-      // a bare key would let callers varying it alternate the slot,
-      // recomputing the dominant explode/window pass while looking
-      // cached (the Itemsets paramKey convention)
-      "text.rake.phrases." + OpCache.paramKey(maxPhraseLen.toString),
+    val phrases = OpCache.cached(
       grouped
         .groupBy(col("doc_id"), col("grp"))
         .agg(array_sort(collect_list(struct(col("pos"), col("tok")))).as("pt"))

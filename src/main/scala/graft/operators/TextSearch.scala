@@ -47,8 +47,7 @@ object TextSearch {
     // (corpus totals, the per-candidate join) — materialize it once:
     // at 16 bytes/doc it is the one piece of search state cheap
     // enough to keep, and it saves a full tokenize pass.
-    val dlTab = OpCache.swap(
-      "search.dl",
+    val dlTab = OpCache.cached(
       base.select(col("doc_id"), size(col("__toks")).cast("long").as("dl")))
     val totals = dlTab.agg(
       count(lit(1)).as("n_docs"),
@@ -61,9 +60,8 @@ object TextSearch {
     // its (doc, query-term, tf) reduction is tiny (matched terms
     // only). Cache the reduction, not the stream: a repeat search
     // with the same corpus and term set (plan-equal) pays only the
-    // scoring joins; a new term set or corpus replaces the entry.
-    val tf = OpCache.swap(
-      "search.tf",
+    // scoring joins; a new term set or corpus builds its own entry.
+    val tf = OpCache.cached(
       matched.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf")))
     val df = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val scored = tf

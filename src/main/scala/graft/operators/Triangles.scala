@@ -44,14 +44,13 @@ object Triangles {
       .groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
 
   def perNode(edges: DataFrame): DataFrame = {
-    val und = OpCache.swap("triangles.und", canonical(edges))
+    val und = OpCache.cached(canonical(edges))
     val deg = degrees(und)
     // Orient low → high in the (deg, id) total order; carry the
     // endpoint degrees so wedge pairing can reuse the same order
     // without re-joining degrees.
     val lowFirst = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
-    val oriented = OpCache.swap(
-      "triangles.oriented",
+    val oriented = OpCache.cached(
       und
         .join(deg.select(col("v").as("a"), col("deg").as("da")), Seq("a"))
         .join(deg.select(col("v").as("b"), col("deg").as("db")), Seq("b"))
@@ -73,10 +72,8 @@ object Triangles {
     // case) and its result is node-count-sized — cache the FINISHED
     // per-node counts, not just the edge prep, so every consumer of
     // the same graph (per-node readout, global total, clustering
-    // coefficients) pays the wedge join once per input (the
-    // ext.x47.pairs lifecycle: shared finished intermediates).
-    OpCache.swap(
-      "triangles.pernode",
+    // coefficients) pays the wedge join once per input.
+    OpCache.cached(
       tris
         .select(explode(array(col("u"), col("v"), col("w"))).as("v"))
         .groupBy("v")
@@ -100,7 +97,7 @@ object Triangles {
     * Output: (v, deg, n_triangles, coeff).
     */
   def clusteringCoeff(edges: DataFrame): DataFrame = {
-    val und = OpCache.swap("triangles.und", canonical(edges))
+    val und = OpCache.cached(canonical(edges))
     val deg = degrees(und)
     deg
       .filter(col("deg") >= 2)

@@ -33,8 +33,7 @@ object ExtQueries {
     */
   private def docTokens(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    graft.operators.OpCache.swap(
-      "ext.docs.toks",
+    graft.operators.OpCache.cached(
       t(s, d, "documents").select(
         col("doc_id"), col("lang"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
@@ -329,7 +328,7 @@ object ExtQueries {
         // (doc, term, tf) is the reusable artifact of the pipeline —
         // cached so the window + rank stages read it instead of
         // re-running tokenize→explode→count
-        val tf = graft.operators.OpCache.swap("ext.x17.tf",
+        val tf = graft.operators.OpCache.cached(
           toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
         val n = docs.agg(countDistinct(col("doc_id")).as("n_docs"))
         // Document frequency as a window over tf (one shuffle on term)
@@ -535,8 +534,8 @@ object ExtQueries {
         implicit val sp: org.apache.spark.sql.SparkSession = s
         // memoized feature table shared with the x194 recall gate —
         // the encode pipeline runs once per session per sf dir
-        val feats = Multimodal.featureTable(t(s, d, "documents"), d)
-        Similarity.cosineTopK(feats, site = "sim.mm.prep")
+        val feats = Multimodal.featureTable(t(s, d, "documents"))
+        Similarity.cosineTopK(feats)
           .orderBy("query_id", "rank")
       },
       None
@@ -575,8 +574,7 @@ object ExtQueries {
         // The 8 md5 lane hashes per shingle are the cost center —
         // OpCache the finished signature table so the banding join
         // (and warm bench passes) never re-hash the corpus.
-        val sig = graft.operators.OpCache.swap(
-          "ext.x29.sig",
+        val sig = graft.operators.OpCache.cached(
           lanes
             .groupBy("doc_id", "lang", "n_chars")
             .agg(array_sort(collect_list(struct(col("lane"), col("mh")))).as("lm"))
@@ -838,7 +836,7 @@ object ExtQueries {
         // aggregate over the test side) and the train-side probe scan
         // both start from this table; uncached, the tokenize + shingle
         // + md5 pass runs twice.
-        val sh = graft.operators.OpCache.swap("ext.x33.sh", labeled
+        val sh = graft.operators.OpCache.cached(labeled
           .select(col("doc_id"), col("split"), tokens(col("text")).as("__toks"))
           .select(
             col("doc_id"), col("split"),
@@ -1809,8 +1807,7 @@ object ExtQueries {
         val emb = t(s, d, "embeddings")
         // Five gates each aggregate over the baseline — cache it, or
         // the N·Q brute-force join re-runs once per gate.
-        val exact = graft.operators.OpCache.swap(
-          "ext.x65.exact",
+        val exact = graft.operators.OpCache.cached(
           Similarity.cosineTopK(emb).select("query_id", "neighbor_id"))
         def gate(method: String, approx: org.apache.spark.sql.DataFrame, minRecall: Double) =
           exact
@@ -1864,8 +1861,7 @@ object ExtQueries {
         // slice reads (the x189 cdcBaseLog convention, r15): the three
         // micro-batches + replay previously re-read the orders parquet
         // per fold — same rows, one scan per session
-        val orders = graft.operators.OpCache.swap(
-          "ext.x66.src",
+        val orders = graft.operators.OpCache.cached(
           t(s, d, "orders").select(
             col("o_orderkey"), col("o_orderpriority"), col("o_totalprice")))
         val keys = Seq("o_orderpriority")
@@ -1893,8 +1889,7 @@ object ExtQueries {
         import graft.streaming.EventStreams
         // fixture source memoized at the 3-column grain (the x66
         // rationale): one lineitem scan per session, not one per fold
-        val li = graft.operators.OpCache.swap(
-          "ext.x67.src",
+        val li = graft.operators.OpCache.cached(
           t(s, d, "lineitem").select(
             col("l_orderkey"), col("l_returnflag"), col("l_extendedprice")))
         val keys = Seq("l_returnflag")
@@ -1971,10 +1966,8 @@ object ExtQueries {
       "x70_decontaminate_portable",
       (s, d) => {
         val train = wordPortableSig(
-          graft.operators.DataMix.md5Sample(t(s, d, "documents"), 0.4, Seq(col("doc_id"))),
-          "ext.x70.train")
-        val eval_ = wordPortableSig(
-          t(s, d, "documents").filter(col("doc_id") % 17 === 0), "ext.x70.eval")
+          graft.operators.DataMix.md5Sample(t(s, d, "documents"), 0.4, Seq(col("doc_id"))))
+        val eval_ = wordPortableSig(t(s, d, "documents").filter(col("doc_id") % 17 === 0))
         def band(df: org.apache.spark.sql.DataFrame, idAlias: String, sigAlias: String) =
           df.select(
             col("doc_id").as(idAlias), col("s").as(sigAlias),
@@ -2412,8 +2405,7 @@ object ExtQueries {
         import graft.streaming.EventStreams
         // fixture source memoized at the 3-column grain (the x66
         // rationale): one events scan per session, not one per fold
-        val ev = graft.operators.OpCache.swap(
-          "ext.x85.src",
+        val ev = graft.operators.OpCache.cached(
           t(s, d, "events").select(col("event_type"), col("value"), col("event_id")))
         certifyFold(s, "graft_x85_state", ev, "event_id")(
           EventStreams.foldTopKBatch(_, _, _, Seq("event_type"), "value", "event_id", 3))
@@ -2543,8 +2535,7 @@ object ExtQueries {
       "x88_hll_distinct",
       (s, d) => {
         import graft.functions.TextFunctions.tokens
-        val toks = graft.operators.OpCache.swap(
-          "ext.x88.toks",
+        val toks = graft.operators.OpCache.cached(
           t(s, d, "documents")
             .select(col("lang"), explode(tokens(col("text"))).as("tok")))
         val est = graft.operators.Hll.distinctByGroup(toks, Seq("lang"), "tok")
@@ -2803,8 +2794,7 @@ object ExtQueries {
     GraftQuery(
       "x97_cms_frequency",
       (s, d) => {
-        val toks = graft.operators.OpCache.swap(
-          "ext.x76.toks",
+        val toks = graft.operators.OpCache.cached(
           t(s, d, "documents").select(
             col("doc_id"),
             explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
@@ -2828,8 +2818,7 @@ object ExtQueries {
     GraftQuery(
       "x98_cms_portable",
       (s, d) => {
-        val occ = graft.operators.OpCache.swap(
-          "ext.x76.toks",
+        val occ = graft.operators.OpCache.cached(
           t(s, d, "documents").select(
             col("doc_id"),
             explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
@@ -2842,8 +2831,7 @@ object ExtQueries {
         }
         val withJ = occ.select(
           col("tok"), explode(array((0 until 4).map(j => lit(j)): _*)).as("j"))
-        val sk = graft.operators.OpCache.swap(
-          "ext.x98.sketch",
+        val sk = graft.operators.OpCache.cached(
           withJ.groupBy(col("j"), cellIdx(col("tok"), col("j")).as("idx"))
             .agg(count(lit(1)).as("cnt")))
         val probes = occ.distinct()
@@ -3009,9 +2997,10 @@ object ExtQueries {
               graft.operators.Multimodal.buildBmpPixels(id, phase = 0.005)))
           else Seq(orig)
         }
-        // fingerprint-keyed memo: the flatMap synthesis closure defeats
-        // plan-equality, so repeated runs would re-decode every pixel
-        graft.operators.OpCache.swapKeyed("mm.imgpairs", d,
+        // keyed by the untyped documents input: the flatMap synthesis
+        // closure defeats plan-equality, so repeated runs would re-decode
+        // every pixel
+        graft.operators.OpCache.byInput(Seq("mm.imgpairs"), t(s, d, "documents"))(
             graft.operators.Multimodal.imageNearDupPairs(media, maxHamming = 3))
           .orderBy("id_a", "id_b")
       },
@@ -3038,8 +3027,8 @@ object ExtQueries {
               graft.operators.Multimodal.buildWavSamples(id, phase = 0.01)))
           else Seq(orig)
         }
-        // same fingerprint-keyed memo as x102, audio lane
-        graft.operators.OpCache.swapKeyed("mm.audpairs", d,
+        // keyed like x102, audio lane
+        graft.operators.OpCache.byInput(Seq("mm.audpairs"), t(s, d, "documents"))(
             graft.operators.Multimodal.audioNearDupPairs(media, maxHamming = 3))
           .orderBy("id_a", "id_b")
       },
@@ -3441,8 +3430,7 @@ object ExtQueries {
     GraftQuery(
       "x119_hash_buckets",
       (s, d) => {
-        val toks = graft.operators.OpCache.swap(
-          "ext.x76.toks",
+        val toks = graft.operators.OpCache.cached(
           t(s, d, "documents").select(
             col("doc_id"),
             explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
@@ -3858,8 +3846,7 @@ object ExtQueries {
         // x124's 0.7 s single scan). Cache the tiny geohashed frame
         // once (the x65 shared-baseline pattern); both branches then
         // read ~2k cached rows.
-        val st = graft.operators.OpCache.swap(
-          "ext.x130.stations",
+        val st = graft.operators.OpCache.cached(
           // base the cached frame on the warehouse's persisted dim
           // (r14, same move as x124): first touch then reads ~2k
           // persisted rows instead of re-parsing + re-deduping the CSV
@@ -4519,8 +4506,7 @@ object ExtQueries {
         import graft.streaming.EventStreams
         // fixture source memoized (the x66 rationale): one events scan
         // per session, not one per fold
-        val ev = graft.operators.OpCache.swap(
-          "ext.x145.src",
+        val ev = graft.operators.OpCache.cached(
           t(s, d, "events").select("event_type", "user_id", "event_id"))
         val st = certifyFold(s, "graft_x145_state", ev, "event_id")(
           EventStreams.foldBitmapBatch(_, _, _, Seq("event_type"), "user_id"))
@@ -4544,8 +4530,7 @@ object ExtQueries {
         import graft.streaming.EventStreams
         // fixture source memoized at the 4-column grain (the x66
         // rationale): one lineitem scan per session, not one per fold
-        val li = graft.operators.OpCache.swap(
-          "ext.x146.src",
+        val li = graft.operators.OpCache.cached(
           t(s, d, "lineitem").select(
             col("l_orderkey"), col("l_shipdate"),
             col("l_extendedprice"), col("l_quantity")))
@@ -5307,8 +5292,7 @@ object ExtQueries {
   private def portableBm25(
       s: org.apache.spark.sql.SparkSession, d: String, topK: Int): org.apache.spark.sql.DataFrame = {
     val docs = t(s, d, "documents")
-    val uc = graft.operators.OpCache.swap(
-      "ext.x76.toks",
+    val uc = graft.operators.OpCache.cached(
       docs.select(
         col("doc_id"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
@@ -5316,8 +5300,7 @@ object ExtQueries {
     val dfCols = count(lit(1)).cast("long").as("n_tokens") +:
       searchTerms.map(tm =>
         countDistinct(when(col("tok") === tm, col("doc_id"))).as(s"df_$tm"))
-    val stats = graft.operators.OpCache.swap(
-      "ext.x76.stats",
+    val stats = graft.operators.OpCache.cached(
       uc.agg(dfCols.head, dfCols.tail: _*).crossJoin(nd))
     val perQuery = searchQueryTable.map { case (qid, terms) =>
       val aggCols = count(lit(1)).cast("long").as("dl") +:
@@ -5402,7 +5385,7 @@ object ExtQueries {
     * cross-corpus decontamination twin (x70) signs its train and eval
     * sides with exactly the same arithmetic. Output: (doc_id, s).
     */
-  private def wordPortableSig(corpus: org.apache.spark.sql.DataFrame, site: String): org.apache.spark.sql.DataFrame = {
+  private def wordPortableSig(corpus: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import graft.functions.TextFunctions.{tokens, wordShingles}
     val ex = corpus
       .select(col("doc_id"), tokens(col("text")).as("__toks"))
@@ -5414,8 +5397,7 @@ object ExtQueries {
           md5(concat(lit(i.toString), lit("\u0001"), col("sg")))): _*)).as(Seq("lane", "h")))
       .groupBy("doc_id", "lane")
       .agg(min(col("h")).as("mh"))
-    graft.operators.OpCache.swap(
-      site,
+    graft.operators.OpCache.cached(
       lanes
         .groupBy("doc_id")
         .agg(array_sort(collect_list(struct(col("lane"), col("mh")))).as("lm"))
@@ -5455,21 +5437,20 @@ object ExtQueries {
   /** One BPE training per (session, sf dir), shared by x104 (merges),
     * x105 (segmentation) and x110 (vocabulary): the k lazy merge
     * rounds embed localCheckpoint leaves, so two invocations are
-    * never plan-equal and `OpCache.swap` could not share them —
-    * `swapKeyed` (fingerprint = the sf dir, the typed-pipeline
-    * lifecycle) caches BOTH outputs of a single training run; the
-    * lazy `trained` guarantees at most one training even when both
-    * entries miss.
+    * never plan-equal and a plan-matched entry could not share them —
+    * two entries keyed by the word dictionary cache BOTH outputs of a
+    * single training run; the lazy `trained` guarantees at most one
+    * training even when both entries miss.
     */
   private def bpeTrained(
       s: org.apache.spark.sql.SparkSession, d: String): graft.operators.Bpe.Trained = {
     implicit val sp: org.apache.spark.sql.SparkSession = s
     import graft.operators.{Bpe, OpCache}
-    val dict0 = OpCache.swap("ext.bpe.dict", Bpe.wordDict(t(s, d, "documents")))
+    val dict0 = OpCache.cached(Bpe.wordDict(t(s, d, "documents")))
     lazy val trained = Bpe.trainFromDict(dict0, k = 4)
     Bpe.Trained(
-      OpCache.swapKeyed("ext.bpe.trained.dict", d, trained.dict),
-      OpCache.swapKeyed("ext.bpe.trained.merges", d, trained.merges))
+      OpCache.byInput(Seq("ext.bpe.trained.dict"), dict0)(trained.dict),
+      OpCache.byInput(Seq("ext.bpe.trained.merges"), dict0)(trained.merges))
   }
 
   /** Shared Spark side of the x47/x48 portable char-LSH pair set:
@@ -5495,8 +5476,7 @@ object ExtQueries {
     // Shared by x47 AND x48 (cluster resolution over the same pair
     // set) — without the cache x48 re-shingles and re-hashes the
     // whole corpus a second time.
-    val sig = graft.operators.OpCache.swap(
-      "ext.x47.sig",
+    val sig = graft.operators.OpCache.cached(
       hashed
         .groupBy("doc_id")
         .agg(mins.head, mins.tail: _*)
@@ -5513,8 +5493,7 @@ object ExtQueries {
     // Three queries consume this pair set (x47 pairs, x48 cluster
     // resolution, x58 edit verification) — cache the finished pairs,
     // not just the signatures, so the band join runs once per input.
-    graft.operators.OpCache.swap(
-      "ext.x47.pairs",
+    graft.operators.OpCache.cached(
       a.join(b, Seq("band_id", "band_key"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b", "sa", "sb")

@@ -936,8 +936,7 @@ object ExtQueries2 {
       "x183_kmv_distinct",
       (s, d) => {
         import graft.functions.TextFunctions.tokens
-        val toks = graft.operators.OpCache.swap(
-          "ext.x88.toks",
+        val toks = graft.operators.OpCache.cached(
           t(s, d, "documents")
             .select(col("lang"), explode(tokens(col("text"))).as("tok")))
         val sk = graft.operators.Kmv.distinctSketch(toks, Seq("lang"), "tok", k = 256)
@@ -1350,13 +1349,12 @@ object ExtQueries2 {
       "x194_multimodal_ann_recall_gate",
       (s, d) => {
         implicit val sp: org.apache.spark.sql.SparkSession = s
-        // the memoized feature table (fingerprint-keyed: the typed
+        // the memoized feature table (keyed by input: the typed
         // pipeline's closures defeat plan-equality memoization) —
         // shared with x24, so gate and ANN query encode exactly once
-        val feats = graft.operators.Multimodal.featureTable(t(s, d, "documents"), d)
-        val exact = graft.operators.OpCache.swap(
-          "ext.x194.exact",
-          graft.operators.Similarity.cosineTopK(feats, site = "sim.mm.prep")
+        val feats = graft.operators.Multimodal.featureTable(t(s, d, "documents"))
+        val exact = graft.operators.OpCache.cached(
+          graft.operators.Similarity.cosineTopK(feats)
             .select("query_id", "neighbor_id"))
         def gate(method: String, approx: org.apache.spark.sql.DataFrame, minRecall: Double) =
           exact
@@ -1373,12 +1371,10 @@ object ExtQueries2 {
         // run (bench isolation re-timing) must not re-derive the LSH
         // band join or the k-means probe — the memo hands back the
         // persisted top-k result on a plan-equal re-invocation
-        val lsh = graft.operators.OpCache.swap(
-          "ext.x194.lsh",
-          graft.operators.Similarity.annSignLshTopK(feats, dim = 16, site = "sim.mm.prep"))
-        val ivf = graft.operators.OpCache.swap(
-          "ext.x194.ivf",
-          graft.operators.Similarity.ivfTopKKmeans(feats, site = "sim.mm.prep"))
+        val lsh = graft.operators.OpCache.cached(
+          graft.operators.Similarity.annSignLshTopK(feats, dim = 16))
+        val ivf = graft.operators.OpCache.cached(
+          graft.operators.Similarity.ivfTopKKmeans(feats))
         gate("mm_ann_lsh", lsh, 0.20)
           .unionByName(gate("mm_ivf_kmeans", ivf, 0.20))
           .orderBy("method")
@@ -1577,8 +1573,7 @@ object ExtQueries2 {
     */
   private def cdcBaseLog(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val base = graft.operators.OpCache.swap(
-      "ext.x189.base",
+    val base = graft.operators.OpCache.cached(
       t(s, d, "customer").select(
         col("c_custkey").as("k"),
         col("c_mktsegment").as("seg"),
@@ -1594,7 +1589,7 @@ object ExtQueries2 {
       .unionByName(base.filter(col("k") % 10 === 0)
         .select((col("k") + 1000000L).as("k"), lit("NEW").as("seg"), col("bal"),
           lit("I").as("op"), lit(1L).as("ord")))
-    (base, graft.operators.OpCache.swap("ext.x189.log", log0))
+    (base, graft.operators.OpCache.cached(log0))
   }
 
   /** Deterministic 60-bit signature table with planted near-dup twins

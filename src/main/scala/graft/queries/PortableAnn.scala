@@ -52,7 +52,7 @@ object PortableAnn {
   private def dot(a: Column, b: Column): Column = VectorFunctions.dot(a, b)
 
   /** Quantized corpus: (vec_id [, label], qv, nm). */
-  private def qcorpus(embeddings: DataFrame, extra: Seq[String] = Nil): DataFrame =
+  private def qcorpus(embeddings: DataFrame, extra: Seq[String]): DataFrame =
     embeddings
       .select((Seq(col("vec_id")) ++ extra.map(col) :+ quantize(col("embedding")).as("qv")): _*)
       .withColumn("nm", sqrt(dot(col("qv"), col("qv"))))
@@ -73,8 +73,7 @@ object PortableAnn {
     * production operators' signature caches.
     */
   private def sharedBase(embeddings: DataFrame): DataFrame =
-    graft.operators.OpCache.swap(
-      "portable.ann.base",
+    graft.operators.OpCache.cached(
       qcorpus(embeddings, Seq("label")).withColumn("sig", sigCol))
 
   private def bandedIds(sigged: DataFrame, idAlias: String): DataFrame =
@@ -148,8 +147,7 @@ object PortableAnn {
   def semanticDedup(embeddings: DataFrame, minCosine: Double = 0.4): DataFrame = {
     val base = sharedBase(embeddings)
     val cent = sumCentroids(base.select(col("label").as("cell"), col("qv")))
-    val assigned = graft.operators.OpCache.swap(
-      "portable.semdedup.assigned",
+    val assigned = graft.operators.OpCache.cached(
       assign(base.select("vec_id", "qv", "nm"), cent, 1))
     val ids = assigned.select(col("cell"), col("vec_id"))
     val pairs = ids
@@ -315,7 +313,7 @@ object PortableAnn {
     // the probe embeds it three more times — localCheckpoint the tiny
     // (8-row) cached table so downstream plans analyze a leaf, not
     // the whole training dataflow. r15: the checkpoint itself is
-    // memoized per input (swapByInput) — the r14 shape re-ran the
+    // memoized per input (OpCache.byInput) — the r14 shape re-ran the
     // eager 8-row materialization job on EVERY warm invocation.
     cent.localCheckpoint(true)
   }
@@ -323,15 +321,14 @@ object PortableAnn {
   /** Portable k-means IVF (the x25 shape) — see [[trainedKmeansCent]]
     * for the training chain. The converged, checkpointed centroid
     * table is memoized per corpus (deterministic given `base`, the
-    * swapByInput contract), so warm invocations skip the seeding plan
+    * OpCache.byInput contract), so warm invocations skip the seeding plan
     * construction and the checkpoint job entirely.
     */
   def ivfKmeans(embeddings: DataFrame, cells: Int = 8): DataFrame = {
     val base = sharedBase(embeddings).select("vec_id", "qv", "nm")
     ivfProbeTopK(base,
-      graft.operators.OpCache.swapByInput(
-        graft.operators.OpCache.paramKey("portable.ann.kmeans.cent", cells.toString),
-        base)(trainedKmeansCent(base, cells)))
+      graft.operators.OpCache.byInput(Seq("portable.ann.kmeans.cent", cells), base)(
+        trainedKmeansCent(base, cells)))
   }
 
   // ------------------------------------------------------------- portable PQ
@@ -438,11 +435,8 @@ object PortableAnn {
     // invocation re-trained and re-wrote all three tables every call).
     // OpCache.clear() (the SimilaritySpec lifecycle test's reset) or an
     // external DROP forces a real rebuild.
-    graft.operators.OpCache.onceByInput(
-      graft.operators.OpCache.paramKey("portable.ann.index", prefix), embeddings) {
-      Seq("cells", "books", "corpus")
-        .forall(t => spark.catalog.tableExists(s"${prefix}_$t"))
-    } {
+    graft.operators.OpCache.byInput(Seq("portable.ann.index", prefix), embeddings,
+      Seq("cells", "books", "corpus").forall(t => spark.catalog.tableExists(s"${prefix}_$t"))) {
       val cent = sumCentroids(baseL.select(col("label").as("cell"), col("qv")))
       val sr = pqSubRows(base)
       val books = pqTrainedBooks(sr)
@@ -513,14 +507,14 @@ object PortableAnn {
     * the plain-PQ and IVF-PQ twins (plan-equal under the same corpus).
     */
   private def pqTrainedBooks(sr: DataFrame): DataFrame =
-    // Memoized per corpus (swapByInput — training is deterministic
+    // Memoized per corpus (OpCache.byInput — training is deterministic
     // given `sr`): warm invocations skip both the training-plan
     // construction and the eager checkpoint job the r14 shape re-ran
     // every call. The checkpoint truncates the two-round training
     // lineage at the tiny (16-row) table: the encode, lut, and ADC
     // plans each embed the books — analyzing a leaf instead of the
     // training dataflow saved ~0.5 s per pass on the k-means twin.
-    graft.operators.OpCache.swapByInput("portable.pq.books", sr) {
+    graft.operators.OpCache.byInput(Seq("portable.pq.books"), sr) {
       val seedW = Window.partitionBy("sub_j").orderBy(col("__m"), col("vec_id"))
       var books = sr
         .withColumn("__m", md5(col("vec_id").cast("string")))

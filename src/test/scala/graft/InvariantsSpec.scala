@@ -495,43 +495,32 @@ class InvariantsSpec extends SparkSpec {
       s"queries planning a CartesianProduct (give the join a key or a bound):\n${offenders.mkString("\n")}")
   }
 
-  test("OpCache single-slot: no key observes a second distinct input fingerprint across the declared surface") {
-    // The contract's "the declared query surface never alternates"
-    // sentence, mechanized (r11 verdict finding #3 — previously a
-    // per-round hand audit): OpCache keeps ONE live entry per
-    // (session, key), so a key whose consumers feed it two distinct
-    // inputs unpersists and recomputes on every call while looking
-    // cached. OpCache records every swap/swapKeyed input fingerprint;
-    // constructing the ENTIRE declared surface on a fresh session
-    // (OpCache keys by session, so this audit is isolated from every
-    // other suite's operator calls on the shared session) must leave
-    // each key with exactly one. Lives in this suite, not its own:
-    // full-surface constructions run stateful queries (x189's fold
-    // writes, the ANN index builds) against context-wide catalog
-    // tables, and only intra-suite sequencing keeps those from racing
-    // the window-lint constructions above.
-    // TWO construction passes, not one: pass 1 catches two consumers
-    // feeding one key different inputs; pass 2 catches NONDETERMINISTIC
-    // construction — an operator whose plan fingerprints differently on
-    // each build never hits its own cache entry (every call is a
-    // miss+swap that LOOKS cached), which one pass cannot see.
+  test("a repeated input hits: a second construction of the declared surface makes no cache miss") {
+    // OpCache serves an entry only for the same (session, site, input),
+    // so a second construction pass over the whole declared surface must
+    // find every entry the first pass built. A miss there means an
+    // operator whose cached plan or memo input fingerprints differently
+    // on each build (every call re-runs while looking cached), or a
+    // bound too small for the surface (pass 1 evicted its own entries).
+    // A fresh session: the miss count is per session, so the audit is
+    // isolated from every other suite's operator calls. Lives in this
+    // suite, not its own: full-surface constructions run stateful
+    // queries (x189's fold writes, the ANN index builds) against
+    // context-wide catalog tables, and only intra-suite sequencing keeps
+    // those from racing the window-lint constructions above.
     val s = spark.newSession()
-    (1 to 2).foreach { _ =>
+    def construct(): Unit =
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
         try fn(s, "/root/testdata/sf0.001")
         catch { case _: Throwable => () } // crashes are the oracle gate's business
       }
-    }
-    val keys = graft.operators.OpCache.observedKeys(s)
-    assert(keys.nonEmpty,
-      "the surface no longer routes through OpCache — this audit would be vacuous")
-    val alts = graft.operators.OpCache.alternations(s)
-    assert(
-      alts.isEmpty,
-      "OpCache keys fed ≥2 distinct inputs in one session (single-slot thrash — " +
-        "give each input its own key, e.g. suffix the fingerprint):\n" +
-        alts.toSeq.sortBy(_._1)
-          .map { case (k, fps) => s"$k: ${fps.mkString(" -> ")}" }.mkString("\n"))
+    construct()
+    val built = graft.operators.OpCache.misses(s)
+    assert(built > 0, "the surface no longer routes through OpCache — this audit would be vacuous")
+    construct()
+    val again = graft.operators.OpCache.misses(s) - built
+    assert(again == 0,
+      s"the second construction pass missed the cache $again times (the first built $built entries)")
   }
 
   test("packSequences: conserves rows and tokens per stratum; bin ids start at 0 and are dense") {

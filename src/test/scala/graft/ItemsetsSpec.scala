@@ -11,27 +11,6 @@ class ItemsetsSpec extends SparkSpec {
     rows.toDF("basket", "item")
   }
 
-  test("cache keys carry the full parameter shape — no slot alternation across params") {
-    // a FRESH session (the InvariantsSpec audit pattern): alternations
-    // are recorded per session, and in a full-suite run OTHER tests
-    // legitimately re-run these operators on different inputs under
-    // the same keys — the audit here is about THIS test's two calls
-    val s = spark.newSession()
-    val rows = {
-      import s.implicits._
-      Seq((1L, "a"), (1L, "b"), (2L, "a"), (2L, "b")).toDF("basket", "item")
-    }
-    // two maxBasketSize values shape DIFFERENT basket plans (distinct
-    // assert_true literals): keys carrying only minSupport let them
-    // alternate the single slot — recomputing the dominant shuffles
-    // on every call while looking cached
-    assert(Itemsets.pairStats(rows, "basket", "item", 1L, maxBasketSize = 16).count() == 1)
-    assert(Itemsets.pairStats(rows, "basket", "item", 1L, maxBasketSize = 32).count() == 1)
-    val alts = graft.operators.OpCache.alternations(s).keySet
-      .filter(_.startsWith("itemsets."))
-    assert(alts.isEmpty, s"itemsets cache keys alternated: $alts")
-  }
-
   test("hand-checked support / confidence / lift") {
     // baskets: {a,b}, {a,b}, {a}, {b} → N=4, n_a=3, n_b=3, pair_n=2.
     val in = df(Seq(

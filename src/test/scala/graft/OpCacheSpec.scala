@@ -1,92 +1,136 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.OpCache
 
-/** Lifecycle tests for the operator-table cache: the swap contract
-  * (one live table per call site) must survive an EXTERNAL unpersist —
-  * `spark.catalog.clearCache()` (or an unpersist of any plan-equal
-  * frame, since the cache manager matches by plan) strips persistence
-  * out from under a live entry; handing it back unrepaired makes every
-  * subsequent "cache hit" silently recompute the full lineage (the
-  * r8 x91 isolated-retime anomaly class).
+/** The operator cache's contract: a hit is only ever served for the
+  * same (session, site, input); a hit never re-runs the build; an entry
+  * survives an EXTERNAL unpersist — `spark.catalog.clearCache()` (or an
+  * unpersist of any plan-equal frame, since the cache manager matches
+  * by plan) strips persistence out from under a live entry, and handing
+  * it back unrepaired would make every later hit silently recompute the
+  * full lineage.
   */
 class OpCacheSpec extends SparkSpec {
 
   private def plan() = {
     import sqlImplicits._
-    (1 to 100).toDF("n").groupBy((org.apache.spark.sql.functions.col("n") % 7).as("k")).count()
+    (1 to 100).toDF("n").groupBy((col("n") % 7).as("k")).count()
   }
 
-  test("swap re-pins a live entry after an external clearCache") {
-    val a = OpCache.swap("opcachespec.swap", plan())
+  test("cached re-pins a live entry after an external clearCache") {
+    val a = OpCache.cached(plan())
     a.count()
     assert(a.storageLevel != StorageLevel.NONE)
     spark.catalog.clearCache() // the external rug-pull
     assert(a.storageLevel == StorageLevel.NONE)
-    val b = OpCache.swap("opcachespec.swap", plan())
+    val b = OpCache.cached(plan())
     assert(b.storageLevel != StorageLevel.NONE,
-      "a plan-equal swap hit must re-pin the unpersisted entry, not return a ghost")
+      "a plan-equal hit must re-pin the unpersisted entry, not return a ghost")
     OpCache.clear()
   }
 
-  test("swapKeyed re-pins on a fingerprint hit after an external clearCache") {
-    implicit val s = spark
-    val a = OpCache.swapKeyed("opcachespec.keyed", "fp1", plan())
-    a.count()
-    assert(a.storageLevel != StorageLevel.NONE)
-    spark.catalog.clearCache()
-    assert(a.storageLevel == StorageLevel.NONE)
-    val b = OpCache.swapKeyed("opcachespec.keyed", "fp1", plan())
-    assert(b.storageLevel != StorageLevel.NONE,
-      "a fingerprint hit must re-pin the unpersisted entry")
-    // a CHANGED fingerprint still rebuilds
-    val c = OpCache.swapKeyed("opcachespec.keyed", "fp2", plan())
-    assert(c.storageLevel != StorageLevel.NONE)
-    OpCache.clear()
-  }
-
-  test("swapByInput: an input-plan hit skips the typed build entirely; a new input swaps") {
+  test("byInput: an input-plan hit skips the typed build and re-pins; a new input builds its own entry") {
     import sqlImplicits._
     val in1 = (1 to 50).toDF("n")
     val in2 = (1 to 60).toDF("n")
     var builds = 0
-    def build(in: org.apache.spark.sql.DataFrame) = { builds += 1; in.groupBy().count() }
-    val a = OpCache.swapByInput("opcachespec.byinput", in1)(build(in1))
+    def build(in: DataFrame) = { builds += 1; in.groupBy().count() }
+    val a = OpCache.byInput(Seq("opcachespec.byinput"), in1)(build(in1))
     a.count()
     assert(builds == 1 && a.storageLevel != StorageLevel.NONE)
     // plan-equal input (a fresh but identical frame): the by-name
-    // build must NOT be forced — that is the point of the variant
-    // (udaf-bearing typed plans can't compare sameResult to their own
-    // re-construction, so the hit decision can't involve them)
-    val b = OpCache.swapByInput("opcachespec.byinput", (1 to 50).toDF("n"))(build(in1))
+    // build must NOT be forced — udaf-bearing typed plans can't compare
+    // sameResult to their own re-construction, so the hit decision
+    // can't involve them
+    val b = OpCache.byInput(Seq("opcachespec.byinput"), (1 to 50).toDF("n"))(build(in1))
     assert(builds == 1, "an input-plan hit must not construct the typed plan")
     assert(b eq a)
-    // external rug-pull: the hit must re-pin, like swap/swapKeyed
+    // external rug-pull: the hit must re-pin
     spark.catalog.clearCache()
     assert(a.storageLevel == StorageLevel.NONE)
-    val c = OpCache.swapByInput("opcachespec.byinput", in1)(build(in1))
+    val c = OpCache.byInput(Seq("opcachespec.byinput"), in1)(build(in1))
     assert(c.storageLevel != StorageLevel.NONE, "an input hit must re-pin the unpersisted entry")
     assert(builds == 1)
-    // a DIFFERENT input swaps the slot and rebuilds
-    val d = OpCache.swapByInput("opcachespec.byinput", in2)(build(in2))
+    // a DIFFERENT input builds its own entry; the first one stays
+    val d = OpCache.byInput(Seq("opcachespec.byinput"), in2)(build(in2))
     assert(builds == 2 && d.storageLevel != StorageLevel.NONE)
+    assert((OpCache.byInput(Seq("opcachespec.byinput"), in1)(build(in1)) eq a) && builds == 2)
     OpCache.clear()
   }
 
-  test("alternation audit: a key fed two distinct inputs is flagged, per session") {
-    import sqlImplicits._
-    val in1 = (1 to 10).toDF("n")
-    val in2 = (1 to 20).toDF("n")
-    OpCache.swapByInput("opcachespec.alt", in1)(in1.groupBy().count())
-    OpCache.swapByInput("opcachespec.alt", in2)(in2.groupBy().count())
-    val alts = OpCache.alternations(spark)
-    assert(alts.contains("opcachespec.alt") && alts("opcachespec.alt").size == 2,
-      s"two distinct inputs on one key must surface in alternations, got $alts")
-    // session-scoped: a fresh session has its own (empty) audit row
-    val s2 = spark.newSession()
-    assert(OpCache.alternations(s2).isEmpty && OpCache.observedKeys(s2).isEmpty)
+  test("an entry is never served to another input or parameter; a repeated call hits") {
+    // A fresh session: entries and miss counts are per session, so the
+    // counts below see only this test's calls.
+    val s = spark.newSession()
+    import s.implicits._
+    // the multiples of p in 1..n, counted by Spark through the cache
+    // and, as the uncached reference, in Scala
+    def call(n: Int, p: Int) = {
+      val in = (1 to n).toDF("n")
+      OpCache.byInput(Seq("opcachespec.alt", p), in)(in.filter(col("n") % p === 0).groupBy().count())
+        .head().getLong(0)
+    }
+    // two inputs and two parameter values, in alternation
+    val calls = for (p <- Seq(2, 3); n <- Seq(50, 60)) yield (n, p)
+    calls.foreach { case (n, p) => assert(call(n, p) == (1 to n).count(_ % p == 0)) }
+    val built = OpCache.misses(s)
+    assert(built == 4, s"each (input, parameter) pair builds its own entry, got $built misses")
+    calls.foreach { case (n, p) => assert(call(n, p) == (1 to n).count(_ % p == 0)) }
+    assert(OpCache.misses(s) == built, "a repeated (input, parameter) pair must hit")
+    // A memoized operator keyed on a parameter (the heavy-hitter sketch
+    // on k): alternating k must give each k its own summary, as a
+    // session that never saw the other k computes it.
+    def hh(on: org.apache.spark.sql.SparkSession, k: Int) = {
+      import on.implicits._
+      val keys = Seq("a", "a", "a", "a", "b", "b", "b", "c", "c", "d").toDF("key")
+      graft.operators.HeavyHitters.frequentKeys(keys, "key", k).collect().toSeq
+    }
+    val ks = Seq(1, 3, 1, 3)
+    val fresh = ks.map(hh(spark.newSession(), _))
+    assert(fresh(0) != fresh(1), "the fixture must tell the two k apart")
+    assert(ks.map(hh(s, _)) == fresh)
     OpCache.clear()
+  }
+
+  test("an eager checkpoint is stored as it is, never persisted a second time") {
+    val s = spark.newSession()
+    import s.implicits._
+    val in = (1 to 30).toDF("n")
+    val cp = OpCache.byInput(Seq("opcachespec.checkpoint"), in)(in.localCheckpoint(true))
+    assert(cp.storageLevel == StorageLevel.NONE,
+      "a checkpointed value is already materialized; persisting it would store it twice")
+    assert(OpCache.byInput(Seq("opcachespec.checkpoint"), in)(in.localCheckpoint(true)) eq cp)
+    assert(OpCache.misses(s) == 1)
+    OpCache.clear()
+  }
+
+  test("concurrent misses on one entry run its build once, outside the cache's lock") {
+    import sqlImplicits._
+    val in = (1 to 40).toDF("n")
+    val started = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val slow = pool.submit(() => OpCache.byInput(Seq("opcachespec.slow"), in) {
+        builds.incrementAndGet(); started.countDown(); release.await(); "built"
+      })
+      started.await()
+      // the slow build holds no lock: another entry is served meanwhile
+      assert(OpCache.byInput(Seq("opcachespec.other"), in)("other") == "other")
+      val waiter = pool.submit(() => OpCache.byInput(Seq("opcachespec.slow"), in) {
+        builds.incrementAndGet(); "built again"
+      })
+      release.countDown()
+      assert(slow.get() == "built" && waiter.get() == "built" && builds.get() == 1)
+    } finally {
+      release.countDown()
+      pool.shutdown()
+      OpCache.clear()
+    }
   }
 }

@@ -128,13 +128,13 @@ class SimilaritySpec extends SparkSpec {
       .select("vec_id", "embedding")
     def rows(df: DataFrame): Set[(Long, Long, Int)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(rows(Similarity.cosineTopK(real, slice, 3, "sim.cosine.prep")) ==
+    assert(rows(Similarity.cosineTopK(real, slice, 3)) ==
       rows(Similarity.cosineTopK(real, k = 3, queryMod = 100)))
-    assert(rows(Similarity.annSignLshTopK(real, slice, 3, 16, 4, 64, "sim.prep")) ==
+    assert(rows(Similarity.annSignLshTopK(real, slice, 3, 16, 4, 64)) ==
       rows(Similarity.annSignLshTopK(real, k = 3, queryMod = 100)))
     assert(rows(Similarity.ivfTopK(real, slice, 3, 4, "label")) ==
       rows(Similarity.ivfTopK(real, k = 3, queryMod = 100, nProbes = 4)))
-    assert(rows(Similarity.ivfTopKKmeans(real, slice, 3, 4, 10, 3, "sim.prep")) ==
+    assert(rows(Similarity.ivfTopKKmeans(real, slice, 3, 4, 10, 3)) ==
       rows(Similarity.ivfTopKKmeans(real, k = 3, queryMod = 100, nProbes = 4, cells = 10)))
     assert(rows(Similarity.pqTopK(real, slice, 3, 8, 32, 64, 3, 64)) ==
       rows(Similarity.pqTopK(real, k = 3, queryMod = 100)))
@@ -187,7 +187,7 @@ class SimilaritySpec extends SparkSpec {
     val target = first.getLong(0)
     val probe = first.getSeq[Float](1).toArray.map(x => x * 0.999f + 1e-5f)
     val q = Seq((-1L, probe.toSeq)).toDF("vec_id", "embedding")
-    val got = Similarity.cosineTopK(real, q, 1, "sim.cosine.prep")
+    val got = Similarity.cosineTopK(real, q, 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((-1L, target)), s"got ${got.toSeq}")
   }
@@ -290,8 +290,7 @@ class SimilaritySpec extends SparkSpec {
       (i, Array.fill(8)(if (i % 2 == 0) 1.0f else -1.0f))
     } :+ ((99L, Array.fill(8)(0.0f))) :+ ((100L, Array.fill(8)(0.0f))))
       .toDF("vec_id", "embedding")
-    val top = Similarity.cosineTopK(vs, vs.filter(org.apache.spark.sql.functions.col("vec_id") < 6), k = 2,
-      site = "sim.prep.zn")
+    val top = Similarity.cosineTopK(vs, vs.filter(org.apache.spark.sql.functions.col("vec_id") < 6), k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(top.nonEmpty)
     top.foreach { case (q, n, c) =>
@@ -382,7 +381,7 @@ class SimilaritySpec extends SparkSpec {
       (i, Array.tabulate(64)(d => math.sin(i * 17.0 + d).toFloat))
     }.toDF("vec_id", "embedding")
     val qs = vs.filter(org.apache.spark.sql.functions.col("vec_id") < 3)
-    val exact = Similarity.cosineTopK(vs, qs, k = 2, site = "sim.prep.small")
+    val exact = Similarity.cosineTopK(vs, qs, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sortBy(x => (x._1, x._3))
     val pq = Similarity.pqTopK(vs, qs, k = 2, m = 8, codes = 32, rerank = 10, maxIter = 2, dim = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sortBy(x => (x._1, x._3))

@@ -166,10 +166,6 @@ class SourceHygieneSpec extends AnyFunSuite {
     // stays, WITH the reason; anything else is deleted, or gets a
     // caller in a query, the ETL or perfbench.
     val allowlist = Map(
-      "OpCache.alternations" ->
-        "test probe: InvariantsSpec's single-slot audit reads the keys that saw two inputs",
-      "OpCache.observedKeys" ->
-        "test probe: InvariantsSpec checks the declared surface routes through the cache",
       "EventStreams.memoSizes" ->
         "test probe: StreamingSpec checks the watermark memo is released",
       "EventStreams.healMemoSize" ->

@@ -36,9 +36,10 @@ class TeardownSpec extends AnyFunSuite {
   }
 }
 
-/** Child-JVM probe for [[TeardownSpec]]: build a warehouse and an
-  * OpCache entry, stop the session, then run both teardowns. Exits 0
-  * only if both return normally.
+/** Child-JVM probe for [[TeardownSpec]]: build a warehouse and one
+  * OpCache entry of each kind it holds (a cached frame, an input-keyed
+  * build, a bloom broadcast), stop the session, then run both
+  * teardowns. Exits 0 only if both return normally.
   */
 object TeardownProbe {
   def main(args: Array[String]): Unit = {
@@ -47,7 +48,11 @@ object TeardownProbe {
         val spark = GraftSession.builder(2).appName("graft-teardown-probe")
           .config("spark.sql.warehouse.dir", args(0)).getOrCreate()
         graft.etl.CityBike.build(spark).memberDim.count()
-        graft.operators.OpCache.swap("teardown.probe", spark.range(10).toDF()).count()
+        graft.operators.OpCache.cached(spark.range(10).toDF()).count()
+        graft.operators.OpCache.byInput(Seq("teardown.probe"), spark.range(10).toDF())(
+          spark.range(5).toDF()).count()
+        graft.operators.Dedup.bloomSemiJoin(
+          spark.range(100).toDF("id"), spark.range(10).toDF("id"), "id", 10L).count()
         spark.stop()
         graft.etl.CityBike.clearMemo()
         graft.operators.OpCache.clear()
