@@ -26,6 +26,17 @@ object VectorFunctions {
         org.apache.spark.sql.graftops.ColumnBridge.expression(a),
         org.apache.spark.sql.graftops.ColumnBridge.expression(b)))
 
+  /** [[dot]] over driver-side vectors: the same left-to-right sum over
+    * the common prefix, for training rounds run in driver memory.
+    */
+  def dot(a: Array[Double], b: Array[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
+
   /** Euclidean norm. */
   def l2norm(a: Column): Column = sqrt(dot(a, a))
 

@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -19,9 +19,10 @@ import org.apache.spark.storage.StorageLevel
   *    and the input is the frame itself, so a plan-equal frame of the
   *    same session hits wherever it was built, and no call site needs a
   *    key.
-  *  - [[byInput]] memoizes a build on its input: typed pipelines,
-  *    udaf-bearing plans and eager `localCheckpoint` loops never compare
-  *    `sameResult` to their own re-construction, so such an entry is
+  *  - [[byInput]] memoizes a build on its input: typed pipelines and
+  *    udaf-bearing plans never compare `sameResult` to their own
+  *    re-construction, and eager builds (checkpoints, training) do
+  *    their work before there is a plan to match, so such an entry is
   *    keyed by the site's name and parameters plus the untyped input
   *    plan, and a hit never forces the by-name build.
   *
@@ -29,8 +30,9 @@ import org.apache.spark.storage.StorageLevel
   * [[MaxEntries]] entries over all sessions and releases the least
   * recently used first; Spark's MemoryStore spills the
   * `MEMORY_AND_DISK` blocks, so there is no byte budget. A built
-  * frame is persisted unless it is an eager checkpoint (already
-  * materialized, so stored as it is); a hit
+  * frame is persisted unless it is already materialized — an eager
+  * checkpoint, or a local frame whose rows travel in its plan — and
+  * then it is stored as it is; a hit
   * re-pins a frame the cache persisted when an external `clearCache`
   * (or an unpersist of a plan-equal frame) dropped it. Builds run
   * outside the lock: a second caller of an entry under construction
@@ -40,8 +42,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object OpCache {
 
-  /** Two construction passes over the declared query surface build 98
-    * entries (at sf0.001), one corpus-curation chain 13.
+  /** Two construction passes over the declared query surface build 100
+    * entries (at sf0.001), one corpus-curation chain 14.
     */
   private val MaxEntries = 256
 
@@ -109,15 +111,19 @@ object OpCache {
   }
 
   private def store(entry: Entry, value: Any): Any = value match {
-    case df: Dataset[_] if !checkpointed(df) =>
+    case df: Dataset[_] if !materialized(df) =>
       entry.pinned = true
       df.persist(StorageLevel.MEMORY_AND_DISK)
     case other => other
   }
 
-  /** An eager (local) checkpoint: its blocks are already materialized. */
-  private def checkpointed(df: Dataset[_]): Boolean = df.queryExecution.analyzed match {
+  /** An eager (local) checkpoint, whose blocks are already stored, or a
+    * local relation, whose rows are in the plan: persisting either would
+    * store it twice.
+    */
+  private def materialized(df: Dataset[_]): Boolean = df.queryExecution.analyzed match {
     case r: LogicalRDD => r.rdd.isCheckpointed
+    case _: LocalRelation => true
     case _ => false
   }
 

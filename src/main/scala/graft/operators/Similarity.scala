@@ -1,10 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.functions.VectorFunctions._
+import graft.functions.VectorMean
 
 /** Approximate-nearest-neighbor search over an `array<float>` embedding
   * column (similarity-search extensions).
@@ -176,29 +180,25 @@ object Similarity {
       centroidCol: String): DataFrame = {
     val base = prepared(embeddings)
 
-    // Per-cell mean vector via positional explode → elementwise avg →
-    // re-assembled in position order (deterministic).
-    val centroids = OpCache.cached(
+    // Per-cell mean vector: one aggregation with map-side partial sums,
+    // keyed by input (a udaf-bearing plan never matches its rebuild).
+    val centroids = OpCache.byInput(Seq("sim.ivf.centroids", centroidCol), embeddings)(
       embeddings
-        .select(col(centroidCol).as("cell"), posexplode(toDoubleVec(col("embedding"))).as(Seq("pos", "x")))
-        .groupBy(col("cell"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("cell"), transform(col("pm"), e => e.getField("m")).as("cvec"))
+        .groupBy(col(centroidCol).as("cell"))
+        .agg(VectorMean.vectorMean(toDoubleVec(col("embedding"))).as("cvec"))
         .withColumn("cnorm", l2norm(col("cvec"))))
 
     ivfSearch(prepared(queries), base, centroids, k, nProbes)
   }
 
   /** IVF ANN with centroids learned by Lloyd's k-means instead of
-    * provided coarse labels — the productionized variant. Each round
-    * is one broadcast-assign plus one single-shuffle recompute through
-    * the [[graft.functions.VectorMean]] typed aggregate (map-side
-    * partial element-wise sums — the shuffle carries k partial
-    * vectors per partition, never the corpus). Deterministic
-    * hash-order seeding; lineage truncated per round. At 100 TB,
-    * seed from a sample (k-means|| style) instead of a global sort.
+    * provided coarse labels — the productionized variant. The cells
+    * are trained in driver memory on the corpus' training sample
+    * ([[trainingSample]], one Spark job shared with PQ), so no Lloyd
+    * round runs a Spark job; the tiny centroid table is then broadcast
+    * to assign and probe the corpus per partition. Deterministic:
+    * hash-order seeding, and every round reads the same sample in the
+    * same order whatever the corpus' partitioning.
     */
   def ivfTopKKmeans(
       embeddings: DataFrame,
@@ -219,131 +219,120 @@ object Similarity {
       cells: Int,
       maxIter: Int): DataFrame = {
     val base = prepared(embeddings)
-    ivfSearch(prepared(queries), base, memoizedKmeans(base, cells, maxIter), k, nProbes)
+    ivfSearch(prepared(queries), base, kmeansCentroids(base, cells, maxIter), k, nProbes)
   }
 
-  /** Keyed by input: the Lloyd loop is EAGER (localCheckpoint per
-    * round), so a plan-matched entry would arrive after the work is
-    * already redone — the memo short-circuits the recompute itself.
-    * The value is the tiny checkpointed centroid table (k rows).
+  /** Most rows the k-means and PQ trainers learn from: a constant, which
+    * tests lower for a scope (`withValue`) to train past the bound.
     */
-  private def memoizedKmeans(base: DataFrame, cells: Int, maxIter: Int): DataFrame =
-    OpCache.byInput(Seq("sim.kmeans", cells, maxIter), base)(kmeansCentroids(base, cells, maxIter))
+  private[graft] val sampleRows = new scala.util.DynamicVariable[Int](65536)
 
-  /** Lloyd's k-means over a prepared (vec_id, vec, norm) corpus.
-    * Output: (cell, cvec, cnorm) — the IVF centroid table shape.
+  /** Corpus rows in (xxhash64(vec_id), vec_id) order, each with its
+    * vector, norm and k-means|| draw in [0, 1).
+    */
+  private final case class Sample(
+      ids: Array[Long], vecs: Array[Array[Double]], norms: Array[Double], draws: Array[Double])
+
+  /** The first [[sampleRows]] rows of a prepared corpus in hash order,
+    * collected in one job (orderBy+limit is TakeOrderedAndProject:
+    * per-partition top-n plus a merge, never a global sort) and shared
+    * by every trainer of the corpus. Below the bound it is the whole
+    * corpus; above it, the hash order makes it a deterministic sample.
+    */
+  private def trainingSample(base: DataFrame): Sample =
+    OpCache.byInput(Seq("sim.sample", sampleRows.value), base) {
+      val rows = base
+        // xxhash64 → uniform in [0,1): shift to non-negative 63-bit
+        .select(col("vec_id"), col("vec"), col("norm"), (shiftrightunsigned(xxhash64(col("vec_id"),
+          lit("kmpp")), 1).cast("double") / lit(Long.MaxValue.toDouble)).as("draw"))
+        .orderBy(xxhash64(col("vec_id")), col("vec_id"))
+        .limit(sampleRows.value)
+        .collect()
+      Sample(rows.map(_.getLong(0)), rows.map(_.getSeq[Double](1).toArray),
+        rows.map(_.getDouble(2)), rows.map(_.getDouble(3)))
+    }
+
+  /** A trained table as a local frame: its rows travel in the plan. */
+  private def localTable(base: DataFrame, ddl: String, rows: Seq[Row]): DataFrame =
+    base.sparkSession.createDataFrame(rows.asJava, StructType.fromDDL(ddl))
+
+  /** The index in `0 until n` whose score ranks first — the largest for
+    * `sign` 1, the smallest for -1 — in Spark's double order (NaN above
+    * every number, -0.0 equal to 0.0); ties go to the smaller index.
+    */
+  private def best(n: Int, sign: Int)(score: Int => Double): Int = {
+    var (b, bs) = (0, score(0))
+    for (j <- 1 until n) {
+      val x = score(j)
+      if (x != bs && sign * java.lang.Double.compare(x, bs) > 0) { b = j; bs = x }
+    }
+    b
+  }
+
+  /** One Lloyd round: every point joins its `nearest` centroid, and each
+    * centroid moves to the mean of its points. A centroid that wins no
+    * point keeps its place: duplicated seeds, where every tie falls to
+    * the smaller index, starve the others, and dropping them would
+    * leave fewer cells than requested or a PQ codebook with holes (its
+    * lookup table is indexed positionally).
+    */
+  private def lloydRound(points: Array[Array[Double]], cents: Array[Array[Double]])(
+      nearest: Int => Int): Array[Array[Double]] = {
+    val sums = cents.map(c => new Array[Double](c.length))
+    val counts = new Array[Long](cents.length)
+    if (cents.nonEmpty) points.indices.foreach { i =>
+      val (v, c) = (points(i), nearest(i))
+      require(v.length == sums(c).length, s"ragged input — dim ${v.length} against ${sums(c).length}")
+      v.indices.foreach(d => sums(c)(d) += v(d))
+      counts(c) += 1
+    }
+    cents.indices.map(c => if (counts(c) == 0) cents(c) else sums(c).map(_ / counts(c))).toArray
+  }
+
+  /** Lloyd's k-means over a prepared corpus' training sample, in driver
+    * memory, memoized by input (training is eager: a plan-matched entry
+    * would arrive after the work is redone). Output: (cell, cvec,
+    * cnorm) — the IVF centroid table shape, k rows.
     *
     * Seeding is k-means||-style (Bahmani et al., VLDB'12), adapted to
-    * one deterministic dataflow: a hash-min anchor, one
-    * distance-weighted oversampling pass (each point kept with
-    * probability ∝ its squared distance from the anchor, budget
-    * l = 4k draws via xxhash64 — spread seeds land far apart instead
-    * of wherever the hash order clumped), then a weight-based
-    * reduction — every corpus point votes for its nearest candidate
-    * and the k most-voted candidates become the seeds (the paper
-    * reduces by weighted k-means++; top-k-by-weight keeps the
-    * reduction a single window, SQL-replayable by the portable twin,
-    * and drops only low-mass candidates Lloyd would starve anyway).
-    * Quality-blind hash-order seeding repeatedly planted multiple
-    * seeds inside one true cluster; distance-weighting is the
-    * standard 100 TB fix and stays two broadcast passes over the
-    * corpus.
+    * one deterministic pass: a hash-min anchor, one distance-weighted
+    * oversampling pass (each point kept with probability ∝ its squared
+    * distance from the anchor, budget l = 4k draws via xxhash64 —
+    * spread seeds land far apart instead of wherever the hash order
+    * clumped), then a weight-based reduction — every point votes for
+    * its nearest candidate (argmax cosine, ties → smaller vec_id) and
+    * the k most-voted candidates become the seeds (the paper reduces by
+    * weighted k-means++; top-k-by-weight is SQL-replayable by the
+    * portable twin, and drops only low-mass candidates Lloyd would
+    * starve anyway). Quality-blind hash-order seeding repeatedly
+    * planted multiple seeds inside one true cluster. Rounds assign by
+    * argmax cosine, ties → smaller cell.
     */
-  private def kmeansCentroids(base: DataFrame, k: Int, maxIter: Int): DataFrame = {
-    // Anchor: deterministic hash-min vector. orderBy+limit is
-    // TakeOrderedAndProject (per-partition top-k + merge) — the corpus
-    // is never globally sorted.
-    val anchor = base
-      .select(col("vec_id"), col("vec"), xxhash64(col("vec_id")).as("__h"))
-      .orderBy(col("__h"), col("vec_id"))
-      .limit(1)
-      .select(col("vec_id"), col("vec"))
-
-    // Oversample ∝ d²(x, anchor): draw < l·d²/Σd², with the scalar
-    // Σd² attached as a 1-row broadcast (BNLJ of one row — not a
-    // driver collect, not a single-partition window).
-    val l = 4 * k
-    val d2 = base
-      .crossJoin(broadcast(anchor
-        .select(col("vec").as("__avec"))
-        .withColumn("__anorm", l2norm(col("__avec")))))
-      .select(
-        col("vec_id"), col("vec"),
-        (col("norm") * col("norm") + col("__anorm") * col("__anorm")
-          - lit(2.0) * dot(col("vec"), col("__avec"))).as("__d2"))
-    val tot = d2.agg(sum(col("__d2")).as("__tot"))
-    val sampled = d2
-      .crossJoin(broadcast(tot))
-      // xxhash64 → uniform in [0,1): shift to non-negative 63-bit
-      .filter(
-        (shiftrightunsigned(xxhash64(col("vec_id"), lit("kmpp")), 1)
-          .cast("double") / lit(Long.MaxValue.toDouble)) * col("__tot")
-          < lit(l.toDouble) * col("__d2"))
-      .select(col("vec_id"), col("vec"))
-    val candidates = anchor.unionByName(sampled)
-      .dropDuplicates("vec_id")
-      .withColumn("cnorm", l2norm(col("vec")))
-      .localCheckpoint(true) // tiny (~l rows); read twice below
-
-    // Weight-based reduction: every corpus point votes for its
-    // nearest candidate (argmax via partial-agg max(struct) — ties on
-    // csim fall to the larger -cand_id = smaller cand_id, the window
-    // order exactly); the k most-voted candidates (ties → lower
-    // vec_id) are the seeds.
-    val votes = base
-      .crossJoin(broadcast(candidates.select(
-        col("vec_id").as("cand_id"), col("vec").as("cvec"), col("cnorm"))))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(
-        cosineWithNorms(dot(col("vec"), col("cvec")), col("norm"), col("cnorm")).as("csim"),
-        (-col("cand_id")).as("__nc"), col("cand_id"))).as("m"))
-      .groupBy(col("m.cand_id").as("cand_id"))
-      .agg(count(lit(1)).as("__w"))
-    // LEFT join + weight 0: a candidate that wins no votes must stay
-    // rankable as backfill — an inner join would drop it and silently
-    // return fewer than k seeds on vote-concentrated corpora, and an
-    // IVF index with fewer cells than requested turns the downstream
-    // cell equi-join into near-exhaustive skew with no signal.
-    val seedW = Window.orderBy(col("__w").desc, col("cand_id").asc)
-    var cents = candidates
-      .join(votes, col("vec_id") === col("cand_id"), "left")
-      .withColumn("__w", coalesce(col("__w"), lit(0L)))
-      .withColumn("__r", row_number().over(seedW))
-      .filter(col("__r") <= k)
-      .select((col("__r") - 1).cast("int").as("cell"), col("vec").as("cvec"), col("cnorm"))
-      .localCheckpoint(true)
-    var iter = 0
-    while (iter < maxIter) {
-      // Argmax assignment via partial-agg max(struct): (csim, cell) is
-      // unique within a vec_id group, so the vec payload never decides
-      // — winner == the (csim DESC, cell ASC) window head, with
-      // map-side combine instead of a per-key sort shuffle.
-      val recomputed = base.crossJoin(broadcast(cents))
-        .groupBy(base("vec_id"))
-        .agg(max(struct(
-          cosineWithNorms(dot(col("vec"), col("cvec")), col("norm"), col("cnorm")).as("csim"),
-          (-col("cell")).as("__nc"), col("cell"), base("vec"))).as("m"))
-        .groupBy(col("m.cell").as("cell"))
-        .agg(graft.functions.VectorMean.vectorMean(col("m.vec")).as("cvec"))
-        .withColumn("cnorm", l2norm(col("cvec")))
-      // Empty-cell handling (the pqCodebooks backfill, which this loop
-      // was missing): a cell that wins zero points this round — e.g.
-      // duplicated seed vectors where every tie falls to the smaller
-      // cell id — would VANISH from the groupBy recompute, silently
-      // shrinking the index below k cells, exactly the fewer-cells
-      // skew outcome the zero-vote seed backfill above exists to
-      // prevent. Keep the starved cell's previous centroid instead.
-      cents = cents.select(col("cell"), col("cvec").as("__pvec"), col("cnorm").as("__pnorm"))
-        .join(recomputed, Seq("cell"), "left")
-        .select(
-          col("cell"),
-          coalesce(col("cvec"), col("__pvec")).as("cvec"),
-          coalesce(col("cnorm"), col("__pnorm")).as("cnorm"))
-        .localCheckpoint(true) // truncate lineage each round
-      iter += 1
+  private def kmeansCentroids(base: DataFrame, k: Int, maxIter: Int): DataFrame =
+    OpCache.byInput(Seq("sim.kmeans", k, maxIter, sampleRows.value), base) {
+      val s = trainingSample(base)
+      val n = s.ids.length
+      def cos(i: Int, c: Array[Double], cnorm: Double) = dot(s.vecs(i), c) / (s.norms(i) * cnorm)
+      // Candidates in vec_id order: the anchor (sample row 0, the
+      // hash-min vector) plus every row whose draw is below l·d²/Σd².
+      val cands = if (n == 0) Array.empty[Int] else {
+        val (a, an) = (s.vecs(0), s.norms(0))
+        val d2 = Array.tabulate(n)(i => s.norms(i) * s.norms(i) + an * an - 2.0 * dot(s.vecs(i), a))
+        val tot = d2.sum
+        (0 +: (1 until n).filter(i => s.draws(i) * tot < (4 * k).toDouble * d2(i))).sortBy(s.ids(_)).toArray
+      }
+      // A candidate that wins no vote stays rankable as backfill: fewer
+      // than k seeds would leave fewer cells than requested.
+      val votes = new Array[Long](cands.length)
+      (0 until n).foreach(i => votes(best(cands.length, 1)(j => cos(i, s.vecs(cands(j)), s.norms(cands(j))))) += 1)
+      val seeds = cands.indices.sortBy(j => (-votes(j), s.ids(cands(j)))).take(k).map(j => s.vecs(cands(j))).toArray
+      val cents = (0 until maxIter).foldLeft(seeds) { (cs, _) =>
+        val norms = cs.map(c => math.sqrt(dot(c, c)))
+        lloydRound(s.vecs, cs)(i => best(cs.length, 1)(j => cos(i, cs(j), norms(j))))
+      }
+      localTable(base, "cell INT, cvec ARRAY<DOUBLE>, cnorm DOUBLE",
+        cents.indices.map(j => Row(j, cents(j), math.sqrt(dot(cents(j), cents(j))))))
     }
-    cents
-  }
 
   /** Shared IVF probe: assign corpus rows to their cell, queries to
     * their `nProbes` nearest cells, equi-join on cell, exact cosine +
@@ -488,7 +477,7 @@ object Similarity {
   /** 1-probe cell assignment for SemDeDup, cached. */
   private def semanticAssigned(embeddings: DataFrame, cells: Int, maxIter: Int): DataFrame = {
     val base = prepared(embeddings)
-    OpCache.cached(assignCells(base, memoizedKmeans(base, cells, maxIter), probes = 1))
+    OpCache.cached(assignCells(base, kmeansCentroids(base, cells, maxIter), probes = 1))
   }
 
   // ------------------------------------------------------ product quantization
@@ -503,10 +492,12 @@ object Similarity {
     * (codes ≤ 256) instead of `4·dim` — the difference between an
     * in-memory scan and a disk-bound one.
     *
-    * Scale shape: codebook training advances ALL subspaces together —
-    * one equi-join assign + one partial-aggregated recompute per Lloyd
-    * round (never one loop per subspace); ADC scoring is corpus-codes
-    * ⨝ broadcast lookup table → partial-agg sum (map-side combine on
+    * Scale shape: the codebooks are trained in driver memory on the
+    * corpus' training sample ([[trainingSample]], at most
+    * [[sampleRows]] rows, collected once and shared with k-means), so
+    * no Lloyd round runs a Spark job; encoding stays a distributed
+    * plan over the broadcast books; ADC scoring is corpus-codes ⨝
+    * broadcast lookup table → partial-agg sum (map-side combine on
     * (query, vec)); the exact re-rank re-attaches true vectors for
     * ids only. Compose with IVF cells for query-side pruning when
     * even the O(N·m) table scan is too much (IVF-PQ).
@@ -515,11 +506,10 @@ object Similarity {
     * [[cosineTopK]].
     *
     * EAGER at construction (not at first action): building this plan
-    * runs Spark jobs — the corpus count behind the code clamp
-    * ([[effectiveCodes]]), the memoized Lloyd training loop, and the
-    * query count behind the lut-broadcast guard. Callers composing
-    * plans lazily should construct this one where executing cluster
-    * work is acceptable (same contract as [[memoizedKmeans]]).
+    * runs Spark jobs — the training-sample collect (once per corpus,
+    * memoized) and the query count behind the lut-broadcast guard.
+    * Callers composing plans lazily should construct this one where
+    * executing cluster work is acceptable.
     */
   def pqTopK(
       embeddings: DataFrame,
@@ -548,7 +538,7 @@ object Similarity {
     val sub = dim / m
     val base = prepared(embeddings)
     val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
-    val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
+    val codebooks = pqCodebooks(base, m, c, maxIter, sub)
     // training is memoized but the N·m·codes encode pass was rebuilt
     // per invocation — cache it
     val packed = OpCache.cached(encodePacked(base, codebooks, m, sub))
@@ -598,9 +588,9 @@ object Similarity {
     * recall.
     * Output: (query_id, neighbor_id, cosine, rank) — cosine EXACT.
     *
-    * EAGER at construction, like [[pqTopK]]: the code clamp's corpus
-    * count and the memoized Lloyd loops (cells AND codebooks) run
-    * Spark jobs while the plan is being built.
+    * EAGER at construction, like [[pqTopK]]: the training-sample
+    * collect that cells AND codebooks learn from runs one Spark job
+    * (once per corpus, memoized) while the plan is being built.
     */
   def ivfPqTopK(
       embeddings: DataFrame,
@@ -632,9 +622,9 @@ object Similarity {
     require(codes <= 256, s"codes $codes exceeds one byte — the PQ memory contract")
     val sub = dim / m
     val base = prepared(embeddings)
-    val centroids = memoizedKmeans(base, cells, maxIter)
+    val centroids = kmeansCentroids(base, cells, maxIter)
     val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
-    val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
+    val codebooks = pqCodebooks(base, m, c, maxIter, sub)
 
     // Encoded corpus carries its cell: (cell, vec_id, vcodes, norm).
     // The cell join is id-to-id (both sides N rows, m+1 narrow cols).
@@ -679,27 +669,18 @@ object Similarity {
       posexplode(array((0 until m).map(j =>
         slice(col("vec"), j * sub + 1, sub)): _*)).as(Seq("sub_j", "svec")))
 
-  /** The codebook can only be as dense as the corpus: seeding takes
-    * min(rows, codes) codes per subspace, while the LUT packing and
-    * adcScore's positional indexing stride by the REQUESTED codes — on
-    * a corpus smaller than `codes`, every lookup past subspace 0 then
-    * reads another subspace's block or past the array end (silently
-    * garbage shortlists with ANSI off, INVALID_ARRAY_INDEX under
-    * ANSI). Clamp once per entry point; `base` is OpCache-persisted,
-    * so the count is one cheap job over cached data.
+  /** The codebook can only be as dense as its training sample:
+    * seeding takes min(rows, codes) codes per subspace, while the LUT
+    * packing and adcScore's positional indexing stride by the REQUESTED
+    * codes — on a corpus smaller than `codes`, every lookup past
+    * subspace 0 then reads another subspace's block or past the array
+    * end (silently garbage shortlists with ANSI off,
+    * INVALID_ARRAY_INDEX under ANSI). Clamp once per entry point, on
+    * the memoized sample's size: below the bound it is the corpus row
+    * count, and the constant bound is 65,536 ≥ 256 ≥ `codes`.
     */
   private def effectiveCodes(base: DataFrame, codes: Int): Int =
-    math.min(codes.toLong, math.max(1L, base.count())).toInt
-
-  /** Codebooks for all m subspaces trained in one dataflow, keyed by
-    * input (the Lloyd loop is eager, a plan-matched entry would arrive
-    * too late). Shared by [[pqTopK]] and [[ivfPqTopK]] — same base,
-    * same books.
-    */
-  private def memoPqCodebooks(
-      base: DataFrame, m: Int, codes: Int, maxIter: Int, sub: Int): DataFrame =
-    OpCache.byInput(Seq("sim.pq.books", m, codes, maxIter, sub), base)(
-      pqCodebooks(subRowsOf(base, m, sub), codes, maxIter))
+    math.min(codes, math.max(1, trainingSample(base).ids.length))
 
   /** Encode the corpus (nearest code per (vec_id, sub_j) by L2) and
     * pack each vector's m codes into one array — the compressed corpus
@@ -775,51 +756,26 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
   }
 
-  /** Per-subspace k-means codebooks, all subspaces per round in ONE
-    * assign + ONE recompute (grouping key (sub_j, code)). Seeds:
-    * hash-order min `codes` subvectors per subspace via a per-subspace
-    * rank (no global sort). Output: (sub_j, code, cvec, cn2 = |c|²).
+  /** Per-subspace k-means codebooks over a prepared corpus' training
+    * sample, in driver memory, memoized by input like
+    * [[kmeansCentroids]] and shared by [[pqTopK]] and [[ivfPqTopK]].
+    * Seeds: the first `codes` sample rows (hash order) per subspace;
+    * rounds assign each subvector to its nearest code by L2, ties →
+    * smaller code. Output: (sub_j, code, cvec, cn2 = |c|²).
     */
-  private def pqCodebooks(subRows: DataFrame, codes: Int, maxIter: Int): DataFrame = {
-    val seedW = Window.partitionBy("sub_j").orderBy(col("__h"), col("vec_id"))
-    var books = subRows
-      .select(col("sub_j"), col("vec_id"), col("svec"), xxhash64(col("vec_id")).as("__h"))
-      .withColumn("__r", row_number().over(seedW))
-      .filter(col("__r") <= codes)
-      .select(col("sub_j"), (col("__r") - 1).cast("int").as("code"), col("svec").as("cvec"))
-      .withColumn("cn2", dot(col("cvec"), col("cvec")))
-      .localCheckpoint(true)
-    var iter = 0
-    while (iter < maxIter) {
-      // Argmin assignment via partial-agg min(struct): (d2, code) is
-      // unique within a (vec_id, sub_j) group (codes distinct), so the
-      // svec payload never decides the comparison — winner == the
-      // (d2 ASC, code ASC) window head, at `codes`× less shuffle.
-      val recomputed = subRows
-        .join(broadcast(books), Seq("sub_j"))
-        .groupBy(col("vec_id"), col("sub_j"))
-        .agg(min(struct(
-          (col("cn2") - lit(2.0) * dot(col("svec"), col("cvec"))).as("d2"),
-          col("code"), col("svec"))).as("m"))
-        .groupBy(col("sub_j"), col("m.code").as("code"))
-        .agg(graft.functions.VectorMean.vectorMean(col("m.svec")).as("cvec"))
-      // Empty-cluster handling: a code that won zero subvectors (e.g.
-      // duplicate seed subvectors losing every tie) would VANISH from
-      // the recomputed table — and the packed ADC lookup downstream
-      // indexes the lut positionally, so the codebook must stay DENSE
-      // (every (sub_j, code) present). Keep the previous round's
-      // centroid for starved codes.
-      books = books.select(col("sub_j"), col("code"), col("cvec").as("__prev"))
-        .join(recomputed, Seq("sub_j", "code"), "left")
-        .select(
-          col("sub_j"), col("code"),
-          coalesce(col("cvec"), col("__prev")).as("cvec"))
-        .withColumn("cn2", dot(col("cvec"), col("cvec")))
-        .localCheckpoint(true) // truncate lineage each round
-      iter += 1
+  private def pqCodebooks(base: DataFrame, m: Int, codes: Int, maxIter: Int, sub: Int): DataFrame =
+    OpCache.byInput(Seq("sim.pq.books", m, codes, maxIter, sub, sampleRows.value), base) {
+      val vecs = trainingSample(base).vecs
+      localTable(base, "sub_j INT, code INT, cvec ARRAY<DOUBLE>, cn2 DOUBLE", (0 until m).flatMap { j =>
+        val xs = vecs.map(_.slice(j * sub, j * sub + sub))
+        val books = (0 until maxIter).foldLeft(xs.take(codes)) { (bs, _) =>
+          val cn2 = bs.map(c => dot(c, c))
+          // |x|² is constant per subvector: the nearest code minimizes |c|² − 2·x·c
+          lloydRound(xs, bs)(i => best(bs.length, -1)(c => cn2(c) - 2.0 * dot(xs(i), bs(c))))
+        }
+        books.indices.map(c => Row(j, c, books(c), dot(books(c), books(c))))
+      })
     }
-    books
-  }
 
   // ------------------------------------------------------------ persisted index
 
@@ -859,12 +815,13 @@ object Similarity {
     // Memoize per (input plan, prefix, geometry); a hit is only served
     // while every artifact table still exists, so an external DROP (or
     // OpCache.clear(), the test-pinned path) forces a real rebuild.
-    OpCache.byInput(Seq("sim.ivfpq.index", prefix, cells, m, codes, maxIter, dim), embeddings,
+    OpCache.byInput(Seq("sim.ivfpq.index", prefix, cells, m, codes, maxIter, dim, sampleRows.value),
+      embeddings,
       Seq("cells", "books", "corpus", "meta").forall(t => spark.catalog.tableExists(s"${prefix}_$t"))) {
       val base = prepared(embeddings)
-      val centroids = memoizedKmeans(base, cells, maxIter)
+      val centroids = kmeansCentroids(base, cells, maxIter)
       val c = effectiveCodes(base, codes) // clamp BEFORE training — see effectiveCodes
-      val codebooks = memoPqCodebooks(base, m, c, maxIter, sub)
+      val codebooks = pqCodebooks(base, m, c, maxIter, sub)
       // the search paths' plans: a build in the same session as a
       // search (the lifecycle probe's shape) encodes once
       val packed = OpCache.cached(encodePacked(base, codebooks, m, sub))

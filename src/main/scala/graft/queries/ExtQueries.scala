@@ -741,9 +741,10 @@ object ExtQueries {
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
     ),
 
-    // IVF with LEARNED centroids: Lloyd's k-means (broadcast-assign +
-    // single-shuffle VectorMean recompute per round) replaces the
-    // provided coarse labels — the productionized ANN index build.
+    // IVF with LEARNED centroids: Lloyd's k-means, trained in driver
+    // memory on one memoized sample of the corpus, replaces the
+    // provided coarse labels — the productionized ANN index build;
+    // the broadcast cell assignment and probe stay distributed.
     // Recall vs brute force asserted in SimilaritySpec; rows-only.
     GraftQuery(
       "x25_ann_ivf_kmeans",

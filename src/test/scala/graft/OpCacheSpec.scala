@@ -108,6 +108,20 @@ class OpCacheSpec extends SparkSpec {
     OpCache.clear()
   }
 
+  test("a local frame is stored as it is, never persisted") {
+    val s = spark.newSession()
+    import s.implicits._
+    val in = (1 to 30).toDF("n")
+    def local = Seq(1, 2, 3).toDF()
+    val t = OpCache.byInput(Seq("opcachespec.local"), in)(local)
+    assert(t.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(t.storageLevel == StorageLevel.NONE,
+      "a local frame carries its rows in its plan; persisting it would store it twice")
+    assert(OpCache.byInput(Seq("opcachespec.local"), in)(local) eq t)
+    assert(OpCache.misses(s) == 1)
+    OpCache.clear()
+  }
+
   test("concurrent misses on one entry run its build once, outside the cache's lock") {
     import sqlImplicits._
     val in = (1 to 40).toDF("n")

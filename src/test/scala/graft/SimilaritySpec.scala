@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.Similarity
+import graft.operators.{OpCache, Similarity}
 
 /** Similarity-search operators: brute-force correctness against a
   * hand-computed oracle and LSH recall against brute force on the
@@ -387,5 +388,86 @@ class SimilaritySpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).sortBy(x => (x._1, x._3))
     assert(pq.toSeq == exact.toSeq,
       s"clamped-PQ with full-corpus rerank must equal brute force; pq=${pq.toSeq} exact=${exact.toSeq}")
+  }
+
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def recall(exact: Set[(Long, Long)], approx: Set[(Long, Long)]): Double =
+    (exact & approx).size.toDouble / exact.size
+
+  test("ANN training runs no Spark job per Lloyd round") {
+    // Jobs started while a plan is built (training is eager), counted
+    // on a cold cache: the sample collect and the lut guard's count,
+    // whatever the number of rounds.
+    def jobsToBuild(build: => DataFrame): Int = {
+      OpCache.clear()
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      org.apache.spark.graftprobe.ListenerBus.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        build
+        org.apache.spark.graftprobe.ListenerBus.drain(spark.sparkContext)
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobsToBuild(Similarity.pqTopK(real, k = 3, queryMod = 100, maxIter = 1)) ==
+      jobsToBuild(Similarity.pqTopK(real, k = 3, queryMod = 100, maxIter = 6)), "pqTopK")
+    assert(jobsToBuild(Similarity.ivfTopKKmeans(real, k = 3, queryMod = 100, maxIter = 1)) ==
+      jobsToBuild(Similarity.ivfTopKKmeans(real, k = 3, queryMod = 100, maxIter = 6)), "ivfTopKKmeans")
+    OpCache.clear()
+  }
+
+  test("trained ANN indexes do not depend on the corpus' partitioning") {
+    def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+    val (a, b) = (real.repartition(1), real.repartition(7))
+    assert(rows(Similarity.ivfTopKKmeans(a, k = 3, queryMod = 100, nProbes = 4, cells = 10)) ==
+      rows(Similarity.ivfTopKKmeans(b, k = 3, queryMod = 100, nProbes = 4, cells = 10)), "ivfTopKKmeans")
+    assert(rows(Similarity.pqTopK(a, k = 3, queryMod = 100)) ==
+      rows(Similarity.pqTopK(b, k = 3, queryMod = 100)), "pqTopK")
+    assert(rows(Similarity.ivfPqTopK(a, k = 3, queryMod = 100, nProbes = 4, cells = 10)) ==
+      rows(Similarity.ivfPqTopK(b, k = 3, queryMod = 100, nProbes = 4, cells = 10)), "ivfPqTopK")
+    // The trained tables themselves, as the persisted index stores them.
+    // Float components of one magnitude sum exactly in double, in any
+    // order; over a wide dynamic range they do not, so the tables stay
+    // equal only if the training sums in an order of its own.
+    def trained(df: DataFrame, prefix: String) = {
+      Similarity.buildIvfPqIndex(df, prefix, cells = 4, m = 8, codes = 16, maxIter = 2)
+      val t = Seq("cells", "books").map(s => rows(spark.table(s"${prefix}_$s")))
+      Seq("cells", "books", "corpus", "meta")
+        .foreach(s => graft.sources.Tables.dropManaged(spark, s"${prefix}_$s"))
+      t
+    }
+    import sqlImplicits._
+    val rnd = new scala.util.Random(80)
+    val wide = (0L until 300L).map { i =>
+      (i, Seq.fill(64)((rnd.nextGaussian() * math.pow(10, rnd.nextInt(16) - 8)).toFloat))
+    }.toDF("vec_id", "embedding")
+    assert(trained(wide.repartition(1), "simspec_parts_a") == trained(wide.repartition(7), "simspec_parts_b"),
+      "trained cells and codebooks")
+  }
+
+  test("a corpus larger than the sample bound trains deterministically and keeps its recall") {
+    val bound = 200
+    assert(real.count() > bound)
+    val exact = pairs(Similarity.cosineTopK(real, k = 3, queryMod = 100))
+    def run(corpus: DataFrame): Seq[Set[(Long, Long)]] = Similarity.sampleRows.withValue(bound) {
+      Seq(
+        pairs(Similarity.ivfTopKKmeans(corpus, k = 3, queryMod = 100, nProbes = 4, cells = 10)),
+        pairs(Similarity.pqTopK(corpus, k = 3, queryMod = 100)),
+        pairs(Similarity.ivfPqTopK(corpus, k = 3, queryMod = 100, nProbes = 4, cells = 10)))
+    }
+    val first = run(real)
+    OpCache.clear() // the second run trains again, on another partitioning
+    assert(run(real.repartition(7)) == first, "the sample and its training must be deterministic")
+    // the floors of the full-corpus tests above
+    Seq("k-means IVF" -> 0.4, "PQ" -> 0.6, "IVF-PQ" -> 0.4).zip(first).foreach {
+      case ((name, floor), approx) =>
+        assert(recall(exact, approx) >= floor, s"$name recall ${recall(exact, approx)} on a $bound-row sample")
+    }
+    OpCache.clear()
   }
 }

@@ -60,6 +60,9 @@ class SourceHygieneSpec extends AnyFunSuite {
       "streaming/EventStreams.scala" -> (5,
         "1-row watermark marker; touched-bucket list, SHOW PARTITIONS, and the " +
           "once-per-unpinned-table re-pin layout check (all <= nBuckets rows)"),
+      "operators/Similarity.scala" -> (1,
+        "the ANN training sample: at most Similarity.sampleRows (65,536) rows of " +
+          "(id, vector, norm, draw), collected once per corpus"),
       "Explain.scala" -> (2,
         "exec-mode audit collects: execute-to-read-the-final-AQE-plan, an audit " +
           "tool run at small SF by its own contract — never a query path"))

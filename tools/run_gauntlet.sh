@@ -34,9 +34,10 @@ echo "== benchmark, uncorrupted and traced: every workload passes its checks and
 # wall time, so a change that adds a Spark job, a task, a SQL execution
 # or a written byte fails here. tools/work_counters.json holds the
 # recorded values (warehouse_queries: per-query averages over the 12
-# queries a seed-1 run draws). corpus_curation is the exception: its
-# two branches run on two threads, and identical runs give either
-# 137 jobs / 372 tasks or 139 / 374, so the file holds the higher pair.
+# queries a seed-1 run draws). corpus_curation is the exception:
+# identical runs give either 83 jobs / 290 tasks or 85 / 292 (two AQE
+# stage jobs inside the ivfPqTopK collect come and go), so the file
+# holds the higher pair.
 # A change that lowers a counter lowers its recorded value; one that
 # raises a counter says why.
 for w in citybike_load warehouse_queries corpus_curation event_fold; do
