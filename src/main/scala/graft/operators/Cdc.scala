@@ -46,24 +46,10 @@ object Cdc {
     val w = Window
       .partitionBy(keyCols.map(col): _*)
       .orderBy(ordCols.map(col(_).desc): _*)
-    val latest = log
-      // op validation fused into the plan (the Resample grid-guard
-      // pattern): assert_true returns null for every valid row, so
-      // the isNull filter keeps everything while making the check
-      // unprunable — a null/unknown op throws instead of silently
-      // acting as a delete. Applied BEFORE the latest-wins window so
-      // the WHOLE log slice is validated: a malformed row superseded
-      // by a newer valid row for the same key still fails loudly
-      // (it sits in the same pre-shuffle projection, so the check is
-      // free — no extra scan).
-      .withColumn(
-        "__opchk",
-        assert_true(
-          col(opCol).isin("I", "U", "D"),
-          concat(lit(s"Cdc.applyLog: op '$opCol' must be I/U/D, got "),
-            coalesce(col(opCol).cast("string"), lit("null")))))
-      .filter(col("__opchk").isNull)
-      .drop("__opchk")
+    // validated BEFORE the latest-wins window, so the WHOLE log slice
+    // is checked: a malformed row superseded by a newer valid row for
+    // the same key still fails loudly
+    val latest = checkedOps(log, opCol)
       .withColumn("__r", row_number().over(w))
       .filter(col("__r") === 1)
       .drop("__r")
@@ -88,4 +74,22 @@ object Cdc {
           .filter(col(opCol) =!= "D")
           .drop(dropCols: _*))
   }
+
+  /** `log` with its op column validated in the plan (the Resample
+    * grid-guard pattern): assert_true returns null for every valid
+    * row, so the isNull filter keeps everything while making the check
+    * unprunable — a null/unknown op throws instead of silently acting
+    * as a delete. It sits in the pre-shuffle projection, so the check
+    * is free (no extra scan).
+    */
+  private[graft] def checkedOps(log: DataFrame, opCol: String): DataFrame =
+    log
+      .withColumn(
+        "__opchk",
+        assert_true(
+          col(opCol).isin("I", "U", "D"),
+          concat(lit(s"Cdc.applyLog: op '$opCol' must be I/U/D, got "),
+            coalesce(col(opCol).cast("string"), lit("null")))))
+      .filter(col("__opchk").isNull)
+      .drop("__opchk")
 }

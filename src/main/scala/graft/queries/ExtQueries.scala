@@ -39,7 +39,7 @@ object ExtQueries {
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
 
   /** The fold certification shared by the streaming-fold queries:
-    * drop `state` and its staging twin, split `src` on
+    * drop `state` (with its staging twin), split `src` on
     * `splitCol % 3` into micro-batches 0..2 and fold each under its
     * index, then fold batch 1 again under id 1 — the foreachBatch
     * replay of a checkpointed restart, which the watermark must make a
@@ -51,7 +51,7 @@ object ExtQueries {
       src: org.apache.spark.sql.DataFrame, splitCol: String)(
       fold: (org.apache.spark.sql.DataFrame, Long, String) => Unit)
       : org.apache.spark.sql.DataFrame = {
-    Seq("", "__staging").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
+    graft.sources.Tables.dropManaged(s, state)
     val batches = (0 to 2).map(i => src.filter(col(splitCol) % 3 === i))
     batches.zipWithIndex.foreach { case (b, i) => fold(b, i.toLong, state) }
     fold(batches(1), 1L, state)

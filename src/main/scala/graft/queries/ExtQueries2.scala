@@ -1180,13 +1180,13 @@ object ExtQueries2 {
     // apply bit-for-bit, so the oracle is x186's. Certified at
     // nBuckets=8 (the StreamingSpec value — the fold contract is
     // bucket-count-independent; the default 64 only multiplies
-    // per-publish file/DDL work at this fixture size).
+    // per-publish file work at this fixture size).
     GraftQuery(
       "x189_streaming_cdc_apply",
       (s, d) => {
         import graft.streaming.EventStreams
         val state = "graft_x189_state"
-        Seq("", "__staging", "__wm", "__touched").foreach(x => graft.sources.Tables.dropManaged(s, state + x))
+        graft.sources.Tables.dropManaged(s, state)
         // base and log are scanned by every fold below (bootstrap +
         // two slices + the replay) — memoized so each fold reads the
         // cached 3-column projection, not the customer parquet again;
@@ -1470,7 +1470,7 @@ object ExtQueries2 {
     // state, apply the full x186 change log in one batch, FRAGMENT the
     // bucket layout the way an old non-repartitioning writer would (a
     // flat round-robin rewrite sprays every task's rows into every
-    // bucket directory), compact, and roll the snapshot up. The
+    // bucket), compact, and roll the snapshot up. The
     // rollup oracle is x186's — compaction must preserve the snapshot
     // bit-for-bit — and the booleans pin the maintenance contract
     // itself: strictly more than one file per bucket going in, exactly
@@ -1480,27 +1480,18 @@ object ExtQueries2 {
       (s, d) => {
         import graft.streaming.EventStreams
         val state = "graft_x196_state"
-        Seq("", "__staging", "__wm", "__touched")
-          .foreach(x => graft.sources.Tables.dropManaged(s, state + x))
+        graft.sources.Tables.dropManaged(s, state)
         val (base, log) = cdcBaseLog(s, d)
         EventStreams.foldSnapshotBatch(
           base.withColumn("op", lit("I")).withColumn("ord", lit(0L)),
           0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 8)
         EventStreams.foldSnapshotBatch(
           log, 1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 8)
-        // staged rename (r15): the fragmented layout is written ONCE to
-        // the staging table and published by table RENAME — the r14
-        // shape eagerly materialized the whole state via
-        // localCheckpoint (so the overwrite would not read the table
-        // it was dropping) and then wrote it AGAIN through the
-        // overwrite: two full materializations for one fixture
-        // rewrite. stagedOverwrite reads the live table while writing
-        // staging, so no checkpoint is needed, and the resulting
-        // layout is identical (2 round-robin tasks → >1 file per
-        // non-empty bucket, the fragmentation the booleans certify).
-        graft.sources.Tables.stagedOverwrite(
-          s.table(state).repartition(2), state, Seq("__bucket"))
-        val nBuckets = s.sql(s"SHOW PARTITIONS $state").count().toInt
+        // fragment through the snapshot's own commit: every bucket
+        // rewritten by 2 round-robin tasks → more than one file per
+        // non-empty bucket, the layout the booleans certify
+        EventStreams.rewriteBuckets(s, state)(_.keys, (df, _) => df.repartition(2))
+        val nBuckets = EventStreams.bucketFiles(s, state).size
         val (before, after) = EventStreams.compactSnapshot(s, state)
         EventStreams.snapshot(s, state)
           .groupBy(col("seg").as("segment"))

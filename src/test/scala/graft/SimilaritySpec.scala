@@ -325,9 +325,24 @@ class SimilaritySpec extends SparkSpec {
       (i, Seq.tabulate(64)(d => (math.sin((i % 6) + d * 0.23) + rnd.nextDouble() * 0.1).toFloat))
     }.toDF("vec_id", "embedding")
     val prefix = "simspec_memo_idx"
-    val writes = new java.util.concurrent.atomic.AtomicInteger
-    graft.sources.Tables.registerWriteListener((_, t) =>
-      if (t.startsWith(prefix)) writes.incrementAndGet())
+    // table writes under the prefix, seen as the CTAS commands Spark
+    // runs for them (delivered on the listener bus: drained before
+    // each read)
+    val written = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        qe.analyzed.foreach {
+          case c: org.apache.spark.sql.execution.command.CreateDataSourceTableAsSelectCommand
+              if c.table.identifier.table.startsWith(prefix) => written.incrementAndGet()
+          case _ =>
+        }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    def writes = {
+      org.apache.spark.graftprobe.ListenerBus.drain(spark.sparkContext)
+      written
+    }
     Similarity.buildIvfPqIndex(df, prefix, cells = 4, m = 8, codes = 16, maxIter = 2)
     val afterFirst = writes.get()
     assert(afterFirst >= 4, "the cold build must write all four artifact tables")
@@ -350,6 +365,7 @@ class SimilaritySpec extends SparkSpec {
     assert(writes.get() >= afterFirst + 4,
       "a build over a dropped artifact must rewrite the index for real")
     assert(probe() == expected, "the real rebuild must reproduce the same index")
+    spark.listenerManager.unregister(listener)
     Seq("cells", "books", "corpus", "meta")
       .foreach(s => graft.sources.Tables.dropManaged(spark, s"${prefix}_$s"))
   }

@@ -57,9 +57,8 @@ class SourceHygieneSpec extends AnyFunSuite {
   test(".collect() sites in src/main are exactly the audited bounded-metadata reads") {
     // file -> (site count, the stated bound that makes each driver-safe)
     val audited = Map(
-      "streaming/EventStreams.scala" -> (5,
-        "1-row watermark marker; touched-bucket list, SHOW PARTITIONS, and the " +
-          "once-per-unpinned-table re-pin layout check (all <= nBuckets rows)"),
+      "streaming/EventStreams.scala" -> (1,
+        "the CDC fold's touched-bucket list (<= nBuckets rows)"),
       "operators/Similarity.scala" -> (1,
         "the ANN training sample: at most Similarity.sampleRows (65,536) rows of " +
           "(id, vector, norm, draw), collected once per corpus"),
@@ -170,9 +169,7 @@ class SourceHygieneSpec extends AnyFunSuite {
     // caller in a query, the ETL or perfbench.
     val allowlist = Map(
       "EventStreams.memoSizes" ->
-        "test probe: StreamingSpec checks the watermark memo is released",
-      "EventStreams.healMemoSize" ->
-        "test probe: StreamingSpec checks the marker-absent memo is filled and evicted")
+        "test probe: StreamingSpec checks the watermark memo is released")
     val packages = Set("operators", "sources", "streaming", "functions", "etl")
     val perfbench = repo.resolve("perfbench/src")
     assert(java.nio.file.Files.isDirectory(perfbench), s"perfbench sources not found at $perfbench")

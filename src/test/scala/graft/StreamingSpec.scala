@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
+import graft.sources.Tables
 import graft.streaming.EventStreams
 
 /** Structured Streaming: the stateless operators run unchanged on a
   * stream, and every maintained state folded through
   * `EventStreams.maintain` equals its from-scratch batch result,
-  * exactly once under replay and across crash windows.
+  * exactly once under replay and after a crash at any publish step.
   */
 class StreamingSpec extends SparkSpec {
 
@@ -338,7 +339,7 @@ class StreamingSpec extends SparkSpec {
     import sqlImplicits._
     implicit val sqlCtx = spark.sqlContext
     val state = "stream_cdc_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     val stream = MemoryStream[(Long, String, String, Long)]
     val q = EventStreams.maintain(stream.toDF().toDF("k", "v", "op", "ord"))(
       EventStreams.foldSnapshotBatch(_, _, state, Seq("k"), "op", Seq("ord")))
@@ -364,126 +365,163 @@ class StreamingSpec extends SparkSpec {
     EventStreams.foldSnapshotBatch(
       Seq((2L, "b", "D", 1L)).toDF("k", "v", "op", "ord"), 7L, state, Seq("k"), "op", Seq("ord"))
     assert(snap() == Seq((1L, "a2"), (3L, "c")))
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    assert(!spark.catalog.tableExists(state), "a CDC snapshot has no catalog table")
+    Tables.dropManaged(spark, state)
   }
+
+  test("CDC fold keeps Cdc.applyLog's NULL-key and op-check semantics") {
+    import sqlImplicits._
+    val state = "stream_cdc_nulls_state"
+    Tables.dropManaged(spark, state)
+    def log(rows: (Option[Long], String, String, Long)*) = rows.toDF("k", "v", "op", "ord")
+    def fold(id: Long, rows: (Option[Long], String, String, Long)*): Unit =
+      EventStreams.foldSnapshotBatch(log(rows: _*), id, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
+    def snap() = EventStreams.snapshot(spark, state).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSet
+    def reference(batches: Seq[(Option[Long], String, String, Long)]*) = {
+      val empty = Seq.empty[(Option[Long], String)].toDF("k", "v")
+      batches.foldLeft(empty)((base, b) => graft.operators.Cdc.applyLog(base, log(b: _*), Seq("k"), "op", Seq("ord")))
+        .collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSet
+    }
+    val b0 = Seq((Option.empty[Long], "n0", "I", 1L), (Some(1L), "a", "I", 1L))
+    val b1 = Seq((Option.empty[Long], "n1", "U", 1L), (Some(2L), "b", "I", 1L))
+    val b2 = Seq((Option.empty[Long], "n1", "D", 1L), (Some(1L), "a2", "U", 1L))
+    fold(0L, b0: _*)
+    fold(1L, b1: _*)
+    assert(snap() == reference(b0, b1) && snap().count(_._1.isEmpty) == 1,
+      "a NULL-key upsert replaces the NULL-key row, never duplicates it")
+    fold(2L, b2: _*)
+    assert(snap() == reference(b0, b1, b2) && !snap().exists(_._1.isEmpty),
+      "a NULL-key tombstone deletes the NULL-key row")
+    // a null op fails loudly even when a newer valid row supersedes it,
+    // and the failed batch commits nothing
+    val err = intercept[Exception](fold(3L, (Option(3L), "c", null, 1L), (Option(3L), "c2", "I", 2L)))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("must be I/U/D")), err.toString)
+    assert(snap() == reference(b0, b1, b2))
+    Tables.dropManaged(spark, state)
+  }
+
+  /** The parquet files under the snapshot directory, relative to it. */
+  private def filesOnDisk(state: String): Set[String] = {
+    val root = java.nio.file.Paths.get(Tables.managedPath(spark, state).toUri)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p).toString).toSet
+    finally walk.close()
+  }
+
+  private def bucketOf(k: Long, n: Int): Int =
+    spark.sql(s"SELECT CAST(pmod(xxhash64(CAST($k AS BIGINT)), $n) AS INT)").head().getInt(0)
 
   test("bucketed CDC fold: delta touches only its buckets; crash windows replay per bucket") {
     import sqlImplicits._
     val state = "stream_cdcb_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     def fold(rows: Seq[(Long, String, String, Long)], id: Long): Unit =
       EventStreams.foldSnapshotBatch(
         rows.toDF("k", "v", "op", "ord"), id, state, Seq("k"), "op", Seq("ord"), nBuckets = 8)
     def snap() = EventStreams.snapshot(spark, state)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    // batch 0 bootstraps the bucket-partitioned table over 100 keys
+    // batch 0 bootstraps the snapshot over 100 keys: one file per bucket
     fold((1L to 100L).map(i => (i, s"v$i", "I", 1L)), 0L)
     assert(snap().size == 100)
-    assert(spark.table(state).columns.contains("__bucket"), "state must be bucket-partitioned")
+    val before = EventStreams.bucketFiles(spark, state)
+    assert(before.size == 8 && before.values.forall(_.size == 1))
     // a 2-key delta must rewrite ONLY the buckets those keys hash to:
-    // every parquet file in an untouched bucket survives byte-for-byte
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $state")
-      .filter(col("col_name") === "Location").head().getString(1).stripPrefix("file:")
-    def bucketFiles(): Map[String, Set[String]] = {
-      val root = new java.io.File(loc)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("__bucket=")).map { d =>
-        d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => f.getName + ":" + f.lastModified()).toSet
-      }.toMap
-    }
-    val before = bucketFiles()
+    // every other bucket keeps its very files, unmodified on disk
+    val root = new java.io.File(Tables.managedPath(spark, state).toUri)
+    def stamp(f: String) = new java.io.File(root, f).lastModified()
+    val stamps = before.values.flatten.map(f => f -> stamp(f)).toMap
     fold(Seq((5L, "v5x", "U", 2L), (42L, "v42", "D", 2L)), 1L)
-    val after = bucketFiles()
-    val touched = Seq(5L, 42L).map(k =>
-      "__bucket=" + spark.sql(s"SELECT CAST(pmod(xxhash64(CAST($k AS BIGINT)), 8) AS INT)")
-        .head().getInt(0)).toSet
+    val after = EventStreams.bucketFiles(spark, state)
+    val touched = Seq(5L, 42L).map(bucketOf(_, 8)).toSet
     before.keySet.filterNot(touched).foreach { b =>
-      assert(after(b) == before(b), s"untouched bucket $b was rewritten")
+      assert(after(b) == before(b) && after(b).forall(f => stamp(f) == stamps(f)),
+        s"untouched bucket $b was rewritten")
     }
+    touched.foreach(b => assert(after(b) != before(b), s"touched bucket $b was not rewritten"))
     assert(snap().size == 99)
     assert(snap().find(_._1 == 5L).get._2 == "v5x")
-    // crash window: staging published but watermark + drop never ran —
-    // the next fold must replay the idempotent bucket copy, then the
-    // replayed batch id must still be a no-op
-    val stagingContent = Seq((7L, "v7crash", "U", 3L)).toDF("k", "v", "op", "ord")
-    EventStreams.foldSnapshotBatch(stagingContent, 2L, state, Seq("k"), "op", Seq("ord"), 8)
+    // crash windows: a fold that dies before its data write, before its
+    // manifest write or before the manifest rename leaves the previous
+    // version in force — and the retry under the same id folds it
+    val s1 = snap()
+    (0 to 2).foreach { n =>
+      intercept[Tables.InjectedCrash] {
+        Tables.stepsLeft.withValue(n)(fold(Seq((7L, "v7crash", "U", 3L)), 2L))
+      }
+      assert(snap() == s1, s"a fold that crashed after $n steps must not show")
+    }
+    // a crash after the rename, before the cleanup: the batch is in,
+    // only superseded files are left, and the replayed id is a no-op
+    intercept[Tables.InjectedCrash] {
+      Tables.stepsLeft.withValue(3)(fold(Seq((7L, "v7crash", "U", 3L)), 2L))
+    }
     val s2 = snap()
     assert(s2.find(_._1 == 7L).get._2 == "v7crash")
-    // simulate the partial state: rebuild staging as the crash left it
-    // — the COMPLETE content of the touched bucket (the fold's
-    // contract), not just the delta row
-    val b7 = spark.sql("SELECT CAST(pmod(xxhash64(CAST(7 AS BIGINT)), 8) AS INT)").head().getInt(0)
-    spark.table(state).filter(col("__bucket") === b7)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state + "__staging")
-    EventStreams.foldSnapshotBatch(
-      Seq((9999L, "never", "I", 1L)).toDF("k", "v", "op", "ord"),
-      2L, state, Seq("k"), "op", Seq("ord"), 8)
-    assert(snap() == s2, "orphaned staging must replay idempotently; replayed id must not apply")
-    assert(!spark.catalog.tableExists(state + "__staging"), "recovery must drop staging")
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    assert(filesOnDisk(state) != EventStreams.bucketFiles(spark, state).values.flatten.toSet,
+      "the crash must leave superseded files behind")
+    fold(Seq((9999L, "never", "I", 1L)), 2L)
+    assert(snap() == s2, "the replayed id must not apply")
+    // the next commit deletes everything its version does not list
+    fold(Seq((7L, "v7", "U", 4L)), 3L)
+    assert(filesOnDisk(state) == EventStreams.bucketFiles(spark, state).values.flatten.toSet)
+    Tables.dropManaged(spark, state)
   }
 
   test("bucketed CDC fold: full-bucket delete drops the partition; crash window replays the drop; empty batch is watermark-only") {
     import sqlImplicits._
     val state = "stream_cdcdel_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     def fold(rows: Seq[(Long, String, String, Long)], id: Long): Unit =
       EventStreams.foldSnapshotBatch(
         rows.toDF("k", "v", "op", "ord"), id, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    def parts() = spark.sql(s"SHOW PARTITIONS $state").collect().map(_.getString(0)).toSet
+    def buckets() = EventStreams.bucketFiles(spark, state).keySet
     def snap() = EventStreams.snapshot(spark, state)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     fold((1L to 40L).map(i => (i, s"v$i", "I", 1L)), 0L)
-    assert(parts().size == 4, "40 xxhash64-spread keys must populate all 4 buckets")
-    // delete EVERY key in key-1's bucket: the publish must drop the
-    // now-empty partition, not silently leave its old rows in place
-    val b1 = spark.sql("SELECT CAST(pmod(xxhash64(CAST(1 AS BIGINT)), 4) AS INT)").head().getInt(0)
-    val victims = spark.table(state).filter(col("__bucket") === b1)
-      .select("k").collect().map(_.getLong(0)).toSeq
+    assert(buckets().size == 4, "40 xxhash64-spread keys must populate all 4 buckets")
+    // delete EVERY key in key-1's bucket: the commit must drop the
+    // emptied bucket from the list, not leave its old file in place
+    val b1 = bucketOf(1L, 4)
+    val victims = (1L to 40L).filter(bucketOf(_, 4) == b1)
     fold(victims.map(k => (k, "x", "D", 2L)), 1L)
-    assert(!parts().contains(s"__bucket=$b1"), "emptied bucket's partition must be dropped")
+    assert(!buckets().contains(b1), "the emptied bucket must leave the manifest")
     assert(snap().map(_._1).toSet == (1L to 40L).toSet -- victims)
-    // crash window for the SAME shape: bucket re-filled, then a crash
-    // after staging+touched were written (staging has NO partition for
-    // the re-emptied bucket) but before the publish — recovery must
-    // replay the drop from the persisted touched list
+    // crash window for the SAME shape: bucket re-filled, then emptied
+    // again by a fold that dies after its data write (which wrote no
+    // file for the bucket) but before its commit — the previous
+    // version stays in force, and the retry drops the bucket
     fold(victims.map(k => (k, s"back$k", "I", 3L)), 2L)
-    assert(parts().contains(s"__bucket=$b1"))
-    Seq(b1).toDF("bucket").coalesce(1)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(state + "__touched")
-    spark.table(state).filter(lit(false))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state + "__staging")
-    // a replayed batch id: recovery replays the orphaned publish
-    // (dropping the bucket), the fold itself is a watermark no-op
-    fold(Seq((9999L, "never", "I", 1L)), 2L)
-    assert(!parts().contains(s"__bucket=$b1"),
-      "recovery must replay the emptied-bucket drop from the touched list")
+    assert(buckets().contains(b1))
+    intercept[Tables.InjectedCrash] {
+      Tables.stepsLeft.withValue(1)(fold(victims.map(k => (k, "x", "D", 4L)), 3L))
+    }
+    assert(buckets().contains(b1) && snap().size == 40)
+    fold(victims.map(k => (k, "x", "D", 4L)), 3L)
+    assert(!buckets().contains(b1), "the retried fold must drop the emptied bucket")
     assert(snap().map(_._1).toSet == (1L to 40L).toSet -- victims)
     // empty micro-batch (restart replay / availableNow tick): advances
-    // the watermark, touches nothing else — the old UNION ALL
-    // construction threw a ParseException here and killed the query
+    // the batch id, touches no file
     val before = snap()
+    val files = EventStreams.bucketFiles(spark, state)
     fold(Seq.empty, 5L)
-    assert(snap() == before)
-    assert(spark.table(state + "__wm").head().getLong(0) == 5L,
-      "empty batch must still advance the watermark")
-    assert(!spark.catalog.tableExists(state + "__staging"))
-    assert(!spark.catalog.tableExists(state + "__touched"))
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    assert(snap() == before && EventStreams.bucketFiles(spark, state) == files)
+    fold(Seq((9999L, "never", "I", 1L)), 5L)
+    assert(snap() == before, "the empty batch must still advance the committed batch id")
+    Tables.dropManaged(spark, state)
   }
 
   test("bucketed CDC fold: an nBuckets mismatch fails loudly instead of corrupting the snapshot") {
     import sqlImplicits._
     val state = "stream_cdcnb_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     EventStreams.foldSnapshotBatch(
       (1L to 20L).map(i => (i, s"v$i", "I", 1L)).toDF("k", "v", "op", "ord"),
       0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    // folding with a different modulus would prune against the wrong
-    // layout, miss the keys' existing rows and silently duplicate them
+    // folding with a different modulus would read the wrong buckets,
+    // miss the keys' existing rows and silently duplicate them
     val e = intercept[IllegalArgumentException] {
       EventStreams.foldSnapshotBatch(
         Seq((5L, "x", "U", 2L)).toDF("k", "v", "op", "ord"),
@@ -496,111 +534,16 @@ class StreamingSpec extends SparkSpec {
       1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
     assert(EventStreams.snapshot(spark, state).filter(col("k") === 5L)
       .head().getString(1) == "x")
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-  }
-
-  test("bucketed CDC fold: a stale touched list is dropped at entry, before any staging can pair with it") {
-    import sqlImplicits._
-    val state = "stream_cdcstale_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    def fold(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      EventStreams.foldSnapshotBatch(df, id, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    fold((1L to 40L).map(i => (i, s"v$i", "I", 1L)).toDF("k", "v", "op", "ord"), 0L)
-    // Residue of a crash that left ONLY the touched list behind (the
-    // shape the old staging-first drop ordering could produce). If it
-    // survived to sit next to a LATER delete-free batch's staging —
-    // such a batch skips the touched-write — recovery would read these
-    // buckets as "touched but absent from staging", i.e. emptied, and
-    // DROP them: silent loss of untouched data. Planted through the
-    // production writer so the probe's negative cache re-arms, exactly
-    // as the fold's own touched-write does.
-    graft.sources.Tables.overwriteTable(
-      Seq(0, 1, 2, 3).toDF("bucket").coalesce(1), state + "__touched")
-    // A delete-free batch whose STAGING WRITE fails (the payload
-    // column raises on evaluation — first forced during the staging
-    // write; the touched-bucket aggregation never reads it): the fold
-    // dies before its end-of-batch drops, so only the ENTRY cleanup
-    // can have removed the stale list.
-    val poison = Seq((41L, "I", 1L)).toDF("k", "op", "ord")
-      .withColumn("v", raise_error(lit("staging-write crash simulation")))
-      .select("k", "v", "op", "ord")
-    intercept[Exception] { fold(poison, 1L) }
-    assert(!spark.catalog.tableExists(state + "__touched"),
-      "a lone stale touched list must be dropped at fold entry, not at the end of " +
-        "a batch that may never get there")
-    assert(!spark.catalog.tableExists(state + "__staging"))
-    // the stream then proceeds: a real delete-free batch folds cleanly
-    // and every bootstrap bucket survives
-    fold(Seq((41L, "v41", "I", 2L)).toDF("k", "v", "op", "ord"), 2L)
-    assert(EventStreams.snapshot(spark, state).count() == 41L)
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-  }
-
-  test("bucketed CDC fold: an unpinned table is re-pinned on first contact; a wrong modulus still fails loudly") {
-    import sqlImplicits._
-    val state = "stream_cdcrepin_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    def fold(df: org.apache.spark.sql.DataFrame, id: Long, n: Int): Unit =
-      EventStreams.foldSnapshotBatch(df, id, state, Seq("k"), "op", Seq("ord"), nBuckets = n)
-    def declared(): Option[String] = spark.sessionState.catalog
-      .getTableMetadata(spark.sessionState.sqlParser.parseTableIdentifier(state))
-      .properties.get("graft.nbuckets")
-    fold((1L to 40L).map(i => (i, s"v$i", "I", 1L)).toDF("k", "v", "op", "ord"), 0L, 4)
-    assert(declared().contains("4"))
-    // simulate a bootstrap that crashed between its saveAsTable and
-    // the property pin: data present, property missing. Previously the
-    // guard was then disabled for the table's whole remaining life —
-    // a redeploy with a different modulus would prune against the
-    // wrong layout and silently duplicate rows.
-    spark.sql(s"ALTER TABLE $state UNSET TBLPROPERTIES ('graft.nbuckets')")
-    graft.operators.OpCache.clear() // memos too — a fresh process sees the bare table
-    assert(declared().isEmpty)
-    // wrong modulus against the unpinned table: the partition layout
-    // itself betrays it (an existing __bucket id >= nBuckets)
-    val e = intercept[IllegalArgumentException] {
-      fold(Seq((5L, "x", "U", 2L)).toDF("k", "v", "op", "ord"), 1L, 2)
-    }
-    assert(e.getMessage.contains("different modulus"))
-    // LARGER modulus against the unpinned mod-4 layout: every existing
-    // partition id is < 8, so the directory disproof alone PASSED and
-    // the fold would have pruned mod-8 against mod-4 data, silently
-    // duplicating every updated key — the one-time key re-hash must
-    // refuse (40 keys mod 8 cannot all equal their mod-4 bucket)
-    val e8 = intercept[IllegalArgumentException] {
-      fold(Seq((5L, "x", "U", 2L)).toDF("k", "v", "op", "ord"), 1L, 8)
-    }
-    assert(e8.getMessage.contains("different modulus"), e8.getMessage)
-    // matching modulus: folds AND re-pins
-    fold(Seq((5L, "x", "U", 2L)).toDF("k", "v", "op", "ord"), 1L, 4)
-    assert(declared().contains("4"), "first contact with an unpinned table must re-pin it")
-    assert(EventStreams.snapshot(spark, state).filter(col("k") === 5L).head().getString(1) == "x")
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-  }
-
-  test("bucketed CDC fold: an orphaned watermark (state dropped, wm kept) refolds the batch") {
-    import sqlImplicits._
-    val state = "stream_cdcorphanwm_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    def fold(df: org.apache.spark.sql.DataFrame, id: Long): Unit =
-      EventStreams.foldSnapshotBatch(df, id, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    fold(Seq((1L, "a", "I", 1L), (2L, "b", "I", 1L)).toDF("k", "v", "op", "ord"), 0L)
-    // partial cleanup: the state table is dropped but its __wm sibling
-    // survives with last_batch = 0. Trusting it would discard the
-    // replayed batch 0 as "already applied" and the next batch would
-    // bootstrap the snapshot from LATER data — batch 0 lost silently.
-    spark.sql(s"DROP TABLE $state")
-    fold(Seq((1L, "a", "I", 1L), (2L, "b", "I", 1L)).toDF("k", "v", "op", "ord"), 0L)
-    assert(EventStreams.snapshot(spark, state).count() == 2L,
-      "the replayed batch must rebuild the snapshot, not vanish behind the stale wm")
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
   }
 
   test("fold memos are catalog-qualified: one unqualified state name in two databases cannot collide") {
     import sqlImplicits._
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_cross_a")
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_cross_b")
-    Seq("a", "b").foreach(d => Seq("", "__staging").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cross_$d.cross_state$x")))
+    Seq("a", "b").foreach { d =>
+      Seq("cross_state", "cross_snap").foreach(t => Tables.dropManaged(spark, s"graft_cross_$d.$t"))
+    }
     val sa = spark.newSession(); sa.catalog.setCurrentDatabase("graft_cross_a")
     val sb = spark.newSession(); sb.catalog.setCurrentDatabase("graft_cross_b")
     def batch(ss: org.apache.spark.sql.SparkSession, v: Double) = {
@@ -622,127 +565,63 @@ class StreamingSpec extends SparkSpec {
     assert(sumOf("graft_cross_b.cross_state") == 30.0,
       "stream B's batch must fold into B's table — a raw-string memo key would have " +
         "read stream A's watermark and skipped it")
-    Seq("a", "b").foreach(d => Seq("", "__staging").foreach(x =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cross_$d.cross_state$x")))
+    // The CDC snapshot resolves the same name to its database's
+    // directory: B's batch 2 must not be read against A's manifest
+    // (committed at batch 40)
+    def cdc(ss: org.apache.spark.sql.SparkSession, k: Long, v: String) = {
+      import ss.implicits._
+      Seq((k, v, "I", 1L)).toDF("k", "v", "op", "ord")
+    }
+    def fold(ss: org.apache.spark.sql.SparkSession, k: Long, v: String, id: Long): Unit =
+      EventStreams.foldSnapshotBatch(cdc(ss, k, v), id, "cross_snap", Seq("k"), "op", Seq("ord"), 2)
+    fold(sa, 1L, "a1", 0L); fold(sa, 2L, "a2", 40L)
+    fold(sb, 1L, "b1", 0L); fold(sb, 3L, "b3", 2L)
+    def rows(ss: org.apache.spark.sql.SparkSession) = EventStreams.snapshot(ss, "cross_snap")
+      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(Tables.managedPath(sa, "cross_snap") != Tables.managedPath(sb, "cross_snap"))
+    assert(rows(sa) == Seq((1L, "a1"), (2L, "a2")))
+    assert(rows(sb) == Seq((1L, "b1"), (3L, "b3")),
+      "stream B's batch must fold into B's directory, not be skipped behind A's manifest")
+    Seq("a", "b").foreach { d =>
+      Seq("cross_state", "cross_snap").foreach(t => Tables.dropManaged(spark, s"graft_cross_$d.$t"))
+    }
   }
 
   test("compactSnapshot: per-bucket file count returns to 1, content and partition layout unchanged") {
     import sqlImplicits._
     val state = "stream_cdccomp_state"
-    Seq("", "__staging", "__wm", "__touched", "__fragsrc")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     EventStreams.foldSnapshotBatch(
       (1L to 60L).map(i => (i, s"v$i", "I", 1L)).toDF("k", "v", "op", "ord"),
       0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
     def content() = EventStreams.snapshot(spark, state)
       .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val expected = content()
-    // fragment: rewrite the state through a round-robin repartition so
-    // every task sprays files into every bucket directory (the layout
-    // an old un-repartitioned writer or append-heavy history leaves)
-    spark.table(state).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").saveAsTable(state + "__fragsrc")
-    spark.table(state + "__fragsrc").repartition(6)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state)
-    val nBuckets = spark.sql(s"SHOW PARTITIONS $state").count().toInt
+    val layout = EventStreams.bucketFiles(spark, state).keySet
+    // fragment: rewrite every bucket through a round-robin repartition,
+    // so every task writes a file into every bucket (the layout an old
+    // un-repartitioned writer or an append-heavy history leaves)
+    EventStreams.rewriteBuckets(spark, state)(_.keys, (df, _) => df.repartition(6))
+    assert(content() == expected)
+    val nBuckets = EventStreams.bucketFiles(spark, state).size
     val (before, after) = EventStreams.compactSnapshot(spark, state)
     assert(before > nBuckets, s"fixture must be fragmented (got $before files over $nBuckets buckets)")
     assert(after == nBuckets, s"compaction must leave exactly one file per bucket (got $after)")
     assert(content() == expected, "compaction must preserve the snapshot bit-for-bit")
-    assert(spark.sql(s"SHOW PARTITIONS $state").count().toInt == nBuckets)
-    assert(!spark.catalog.tableExists(state + "__staging"))
-    // crash window of the compaction swap: state dropped, staging holds
-    // the COMPLETE compacted table — the next fold must restore it by
-    // rename before folding its own batch
-    spark.table(state).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state + "__staging")
-    spark.sql(s"DROP TABLE $state")
-    EventStreams.foldSnapshotBatch(
-      Seq((999L, "after", "I", 1L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    assert(content() == (expected :+ (999L, "after")).sortBy(_._1),
-      "compaction crash window must heal to the complete table, then fold")
-    assert(!spark.catalog.tableExists(state + "__staging"))
-    Seq("", "__staging", "__wm", "__touched", "__fragsrc")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-  }
-
-  test("compaction swap crash between RENAME and MSCK heals at the next fold") {
-    import sqlImplicits._
-    val state = "stream_cdcmsck_state"
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    EventStreams.foldSnapshotBatch(
-      (1L to 60L).map(i => (i, s"v$i", "I", 1L)).toDF("k", "v", "op", "ord"),
-      0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    def content() = EventStreams.snapshot(spark, state)
-      .orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    val expected = content()
-    // simulate compactSnapshot dying between its RENAME and its MSCK:
-    // staging written, marker written, state dropped, staging renamed —
-    // and NOTHING after (no repair, no refresh, no property re-pin).
-    // The table EXISTS, staging is GONE: neither staged-recovery path
-    // can fire — only the marker betrays the unfinished swap.
-    spark.table(state).repartition(4, col("__bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state + "__staging")
-    graft.sources.Tables.overwriteTable(
-      Seq("4").toDF("nbuckets").coalesce(1), state + "__compacting")
-    spark.sql(s"DROP TABLE $state")
-    spark.sql(s"ALTER TABLE ${state}__staging RENAME TO $state")
-    // the simulated crash is the real thing: partition metadata still
-    // points at the moved-away staging paths
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(state)
-    val staleLocs = spark.sessionState.catalog.listPartitions(ident)
-      .flatMap(_.storage.locationUri).map(_.toString)
-    assert(staleLocs.exists(_.contains("__staging")),
-      s"fixture must reproduce the stale-metadata window (got $staleLocs)")
-    // next fold heals: repairs metadata, re-pins nbuckets, folds its batch
-    EventStreams.foldSnapshotBatch(
-      Seq((999L, "after", "I", 2L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 4)
-    assert(content() == (expected :+ (999L, "after")).sortBy(_._1),
-      "fold after the RENAME->MSCK crash window must heal and apply its delta")
-    val healedLocs = spark.sessionState.catalog.listPartitions(ident)
-      .flatMap(_.storage.locationUri).map(_.toString)
-    assert(!healedLocs.exists(_.contains("__staging")),
-      "heal must re-point partition metadata at the renamed table")
-    assert(!spark.catalog.tableExists(state + "__compacting"), "heal must clear the marker")
-    assert(spark.sessionState.catalog.getTableMetadata(ident)
-      .properties.get("graft.nbuckets").contains("4"),
-      "heal must re-pin the nbuckets property the RENAME lost")
-    // ... which keeps the mismatch guard loud
-    intercept[IllegalArgumentException] {
-      EventStreams.foldSnapshotBatch(
-        Seq((5L, "x", "U", 3L)).toDF("k", "v", "op", "ord"),
-        2L, state, Seq("k"), "op", Seq("ord"), nBuckets = 8)
-    }
-    // the full compaction still runs clean on the healed table
-    val (_, after) = EventStreams.compactSnapshot(spark, state)
-    assert(after == 4 && content() == (expected :+ (999L, "after")).sortBy(_._1))
-    // a maintenance-only schedule (no fold between compactions): crash
-    // between DROP and RENAME, then call compactSnapshot DIRECTLY — it
-    // must restore from staging, finish the marker heal, and compact
-    val healed = content()
-    spark.table(state).repartition(4, col("__bucket"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .format("parquet").partitionBy("__bucket").saveAsTable(state + "__staging")
-    graft.sources.Tables.overwriteTable(
-      Seq("4").toDF("nbuckets").coalesce(1), state + "__compacting")
-    spark.sql(s"DROP TABLE $state")
-    val (_, after2) = EventStreams.compactSnapshot(spark, state)
-    assert(after2 == 4 && content() == healed,
-      "compactSnapshot entry must restore a DROP->RENAME crash before compacting")
-    assert(!spark.catalog.tableExists(state + "__compacting"))
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    val files = EventStreams.bucketFiles(spark, state)
+    assert(files.keySet == layout && files.values.forall(_.size == 1))
+    assert(filesOnDisk(state) == files.values.flatten.toSet,
+      "the commit must delete the superseded fragments")
+    // a compact snapshot commits nothing: same version, same files
+    assert(EventStreams.compactSnapshot(spark, state) == ((nBuckets, nBuckets)))
+    assert(EventStreams.bucketFiles(spark, state) == files)
+    Tables.dropManaged(spark, state)
   }
 
   test("fold memos: recovery invalidates a stale watermark memo instead of double-merging") {
     import sqlImplicits._
     val state = "stream_memoinv_state"
-    Seq("", "__staging").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     def fin() = graft.operators.IncrementalAgg
       .finalizeState(spark.table(state).drop("__last_batch"), Seq("k"), Seq("v"))
       .orderBy("k").collect()
@@ -773,137 +652,150 @@ class StreamingSpec extends SparkSpec {
     EventStreams.foldRollupBatch(
       Seq(("c", 5.0)).toDF("k", "v"), 3L, state, Seq("k"), Seq("v"))
     assert(fin() == (expected2 :+ (("c", 1L, 5.0))))
-    Seq("", "__staging").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
   }
 
   test("fold memos are evicted by OpCache.clear and rebuild from their tables") {
     import sqlImplicits._
     val state = "stream_memoclear_state"
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    EventStreams.foldSnapshotBatch(
-      Seq((1L, "v1", "I", 1L)).toDF("k", "v", "op", "ord"),
-      0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    EventStreams.foldSnapshotBatch(
-      Seq((2L, "v2", "I", 2L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
+    Tables.dropManaged(spark, state)
+    def fold(k: String, id: Long): Unit =
+      EventStreams.foldRollupBatch(Seq((k, 1.0)).toDF("k", "v"), id, state, Seq("k"), Seq("v"))
+    fold("a", 0L); fold("b", 1L)
     val wms = EventStreams.memoSizes
     assert(wms >= 1, s"folds must populate the watermark memo (got $wms)")
     graft.operators.OpCache.clear()
     assert(EventStreams.memoSizes == 0,
-      "OpCache.clear must evict the session-keyed fold memos")
+      "OpCache.clear must evict the context-keyed fold memo")
     // correctness after eviction: the watermark re-reads from its
     // table — a replayed id is still a no-op, a new id still folds
-    EventStreams.foldSnapshotBatch(
-      Seq((999L, "never", "I", 9L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(EventStreams.snapshot(spark, state).count() == 2L)
-    EventStreams.foldSnapshotBatch(
-      Seq((3L, "v3", "I", 3L)).toDF("k", "v", "op", "ord"),
-      2L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(EventStreams.snapshot(spark, state).count() == 3L)
-    Seq("", "__staging", "__wm", "__touched").foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-  }
-
-  test("compaction-marker probe is negative-cached on the steady fold path and invalidated by marker writes") {
-    import sqlImplicits._
-    val state = "stream_healmemo_state"
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    graft.operators.OpCache.clear()
-    assert(EventStreams.healMemoSize == 0)
-    EventStreams.foldSnapshotBatch(
-      Seq((1L, "v1", "I", 1L)).toDF("k", "v", "op", "ord"),
-      0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    // the first fold probed once and memoized "marker absent" — the
-    // steady-state fold path now skips the per-batch catalog RPC
-    assert(EventStreams.healMemoSize >= 1,
-      "a clean fold must negative-cache the marker probe")
-    EventStreams.foldSnapshotBatch(
-      Seq((2L, "v2", "I", 2L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(EventStreams.snapshot(spark, state).count() == 2L)
-    // an in-JVM marker write (the crash-simulation path writes markers
-    // through the generic sink) must drop the negative cache, or the
-    // next fold would trust it and skip the heal
-    val before = EventStreams.healMemoSize
-    graft.sources.Tables.overwriteTable(
-      Seq("2").toDF("nbuckets").coalesce(1), state + "__compacting")
-    assert(EventStreams.healMemoSize < before || before == 0,
-      "a marker write must invalidate the marker-absent memo")
-    // ... and the next fold probes again, heals (drops the marker),
-    // and re-memoizes absent
-    EventStreams.foldSnapshotBatch(
-      Seq((3L, "v3", "I", 3L)).toDF("k", "v", "op", "ord"),
-      2L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(!spark.catalog.tableExists(state + "__compacting"),
-      "the post-invalidation fold must probe and heal the marker")
-    assert(EventStreams.snapshot(spark, state).count() == 3L)
-    // the OpCache teardown clears this memo with its siblings
-    graft.operators.OpCache.clear()
-    assert(EventStreams.healMemoSize == 0, "OpCache.clear must evict the heal memo")
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    fold("never", 1L)
+    assert(spark.table(state).count() == 2L)
+    fold("c", 2L)
+    assert(spark.table(state).count() == 3L)
+    Tables.dropManaged(spark, state)
   }
 
   test("watermark memo is context-wide: a replay arriving on a different session clone is recognized as applied") {
     import sqlImplicits._
     val state = "stream_wmxs_state"
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    Tables.dropManaged(spark, state)
     graft.operators.OpCache.clear()
     // batches 0 and 1 applied on the ROOT session
-    EventStreams.foldSnapshotBatch(
-      Seq((1L, "v1", "I", 1L)).toDF("k", "v", "op", "ord"),
-      0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    EventStreams.foldSnapshotBatch(
-      Seq((1L, "v2", "U", 2L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
+    EventStreams.foldRollupBatch(Seq(("a", 1.0)).toDF("k", "v"), 0L, state, Seq("k"), Seq("v"))
+    EventStreams.foldRollupBatch(Seq(("a", 2.0)).toDF("k", "v"), 1L, state, Seq("k"), Seq("v"))
     // the stream-restart shape: batch 1 REPLAYED on a fresh clone.
     // A per-session watermark memo would miss here; worse, a stale
-    // OLDER memo on another live clone could re-apply the delta.
+    // OLDER memo on another live clone would re-merge the delta.
     // Context-wide keying makes every clone share one watermark.
     val clone = spark.newSession()
-    EventStreams.foldSnapshotBatch(
-      clone.sql("SELECT 1 AS k, 'v3-must-not-apply' AS v, 'U' AS op, 2 AS ord")
-        .selectExpr("CAST(k AS LONG) k", "v", "op", "CAST(ord AS LONG) ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    val row = EventStreams.snapshot(spark, state).filter(col("k") === 1L).head()
-    assert(row.getString(1) == "v2",
-      "a replayed batch id on a clone session must be a no-op, not a re-merge")
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    EventStreams.foldRollupBatch(
+      clone.sql("SELECT 'a' AS k, CAST(100.0 AS DOUBLE) AS v"), 1L, state, Seq("k"), Seq("v"))
+    val total = spark.table(state).agg(sum(col("sum_v"))).head().getDecimal(0).doubleValue
+    assert(total == 3.0, "a replayed batch id on a clone session must be a no-op, not a re-merge")
+    Tables.dropManaged(spark, state)
   }
 
-  test("marker-absent memo is context-wide: a marker appended from a newSession clone invalidates the root session's memo") {
+  /** Runs `sequence` once per crash point, ALICE-style (every crash
+    * state, not a sample): run n lets n side-effecting publish steps
+    * through and crashes before the next ([[Tables.stepsLeft]]);
+    * `afterCrash` inspects the state the crash left on a new session;
+    * then the sequence runs again to completion on another new session
+    * with every memo cleared, and `check` compares the result with the
+    * from-scratch state. Stops at the first run no step of which
+    * crashes; returns the number of crash points.
+    */
+  private def everyCrash(reset: () => Unit, sequence: org.apache.spark.sql.SparkSession => Unit)(
+      afterCrash: (org.apache.spark.sql.SparkSession, Int) => Unit,
+      check: org.apache.spark.sql.SparkSession => Unit): Int = {
+    def fresh() = { graft.operators.OpCache.clear(); spark.newSession() }
+    var n = 0
+    var crashed = true
+    while (crashed) {
+      reset()
+      crashed =
+        try { Tables.stepsLeft.withValue(n)(sequence(fresh())); false }
+        catch { case _: Tables.InjectedCrash => true }
+      if (crashed) {
+        afterCrash(fresh(), n)
+        sequence(fresh())
+      }
+      check(fresh())
+      n += 1
+    }
+    reset()
+    n - 1
+  }
+
+  test("CDC snapshot: a crash before any step of fold → fold → fragment → compact → fold recovers to the from-scratch log") {
     import sqlImplicits._
-    val state = "stream_healxs_state"
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
-    graft.operators.OpCache.clear()
-    // populate the memo with a clean fold on the ROOT session
-    EventStreams.foldSnapshotBatch(
-      Seq((1L, "v1", "I", 1L)).toDF("k", "v", "op", "ord"),
-      0L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(EventStreams.healMemoSize >= 1)
-    val before = EventStreams.healMemoSize
-    // write the marker from a DIFFERENT session object sharing the
-    // same context/catalog: a per-session memo key would miss this
-    // invalidation and the root session's next fold would skip the heal
-    val clone = spark.newSession()
-    graft.sources.Tables.overwriteTable(
-      clone.sql("SELECT '2' AS nbuckets"), state + "__compacting")
-    assert(clone ne spark)
-    assert(EventStreams.healMemoSize < before,
-      "a clone-session write of the marker must drop the root session's marker-absent memo")
-    // the root session's next fold must probe again, heal the marker,
-    // and apply the batch through repaired partition metadata
-    EventStreams.foldSnapshotBatch(
-      Seq((2L, "v2", "I", 2L)).toDF("k", "v", "op", "ord"),
-      1L, state, Seq("k"), "op", Seq("ord"), nBuckets = 2)
-    assert(!spark.catalog.tableExists(state + "__compacting"),
-      "the post-invalidation fold on the root session must heal the clone-written marker")
-    assert(EventStreams.snapshot(spark, state).count() == 2L)
-    Seq("", "__staging", "__wm", "__touched", "__compacting")
-      .foreach(x => spark.sql(s"DROP TABLE IF EXISTS $state$x"))
+    val state = "stream_cdccrash_state"
+    val keys = 1L to 24L
+    // the replay of batch 1 after batch 2 would revert keys 1, 3, 7
+    // and 12: only the batch-id skip keeps it out
+    val batches = Seq(
+      keys.map(k => (k, s"a$k", "I", 1L)),
+      keys.filter(_ % 2 == 1).map(k => (k, s"b$k", "U", 2L)) ++
+        keys.filter(_ % 6 == 0).map(k => (k, "", "D", 2L)),
+      Seq((1L, "c1", "U", 3L), (7L, "c7", "U", 3L), (12L, "c12", "I", 3L), (3L, "", "D", 3L)))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    // the from-scratch snapshot after each batch: Cdc.applyLog over the
+    // log up to it (the ord values grow with the batch)
+    val committed = batches.indices.map { i =>
+      rows(graft.operators.Cdc.applyLog(Seq.empty[(Long, String)].toDF("k", "v"),
+        batches.take(i + 1).flatten.toDF("k", "v", "op", "ord"), Seq("k"), "op", Seq("ord")))
+    }
+    def sequence(s: org.apache.spark.sql.SparkSession): Unit = {
+      import s.implicits._
+      def fold(i: Int): Unit = EventStreams.foldSnapshotBatch(
+        batches(i).toDF("k", "v", "op", "ord"), i.toLong, state, Seq("k"), "op", Seq("ord"), 4)
+      fold(0); fold(1)
+      EventStreams.rewriteBuckets(s, state)(_.keys, (df, _) => df.repartition(2))
+      EventStreams.compactSnapshot(s, state)
+      fold(2)
+      fold(1) // the restart replay of batch 1: a no-op
+    }
+    val points = everyCrash(() => Tables.dropManaged(spark, state), sequence)(
+      (s, n) => {
+        // the crash left a committed version (none before the first
+        // fold's manifest rename, its 3rd step) — never a mix
+        val left = scala.util.Try(rows(EventStreams.snapshot(s, state)))
+        assert(left.toOption.forall(committed.contains) && (left.isSuccess || n < 3),
+          s"a crash after $n steps left $left")
+      },
+      s => {
+        assert(rows(EventStreams.snapshot(s, state)) == committed.last)
+        assert(filesOnDisk(state) == EventStreams.bucketFiles(s, state).values.flatten.toSet)
+      })
+    info(s"$points crash points")
+    assert(points >= 20, s"only $points crash points enumerated")
+  }
+
+  test("rollup fold: a crash before any publish step of three batches and a replay recovers to the from-scratch rollup") {
+    import sqlImplicits._
+    import graft.operators.IncrementalAgg
+    val state = "stream_rollcrash_state"
+    val batches = Seq(
+      Seq(("a", 1.0), ("b", 2.0)), Seq(("a", 10.0), ("c", 3.0)), Seq(("b", 100.0), ("d", 4.0)))
+    def fin(df: org.apache.spark.sql.DataFrame) =
+      IncrementalAgg.finalizeState(df, Seq("k"), Seq("v")).orderBy("k").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
+    val scratch = fin(IncrementalAgg.rollup(batches.flatten.toDF("k", "v"), Seq("k"), Seq("v")))
+    def sequence(s: org.apache.spark.sql.SparkSession): Unit = {
+      import s.implicits._
+      def fold(i: Int): Unit = EventStreams.foldRollupBatch(
+        batches(i).toDF("k", "v"), i.toLong, state, Seq("k"), Seq("v"))
+      fold(0); fold(1); fold(2)
+      fold(1) // the restart replay of batch 1: a no-op
+    }
+    val points = everyCrash(() => Tables.dropManaged(spark, state), sequence)(
+      // a second crash, at the recovery's first step: a recovery
+      // rename (after a crash between DROP and RENAME) or the staging
+      // write of the re-folded batch
+      (s, _) => intercept[Tables.InjectedCrash](Tables.stepsLeft.withValue(0)(sequence(s))),
+      s => assert(fin(s.table(state).drop("__last_batch")) == scratch))
+    info(s"$points crash points")
+    assert(points == 9, s"3 publishes of 3 steps each, got $points crash points")
   }
 }

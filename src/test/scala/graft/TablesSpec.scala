@@ -57,38 +57,6 @@ class TablesSpec extends SparkSpec {
     assert(kStats.distinctCount.exists(_.toInt > 900), kStats.toString)
   }
 
-  test("every catalog sink notifies write listeners — the invariant is structural, not per-sink convention") {
-    import sqlImplicits._
-    // JVM-level caches over catalog state (the fold path's
-    // compaction-marker negative cache) rely on "any in-JVM catalog
-    // write of X notifies for X" holding for EVERY sink in this
-    // object, including the crash-recovery rename. Registration is
-    // permanent by design; the listener filters on this test's table
-    // prefix so it stays inert for the rest of the session.
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    Tables.registerWriteListener((_, t) => if (t.startsWith("tl_notify_")) seen.add(t))
-    def fired(t: String): Boolean = seen.contains(t)
-    val df = Seq((1L, "a")).toDF("k", "v")
-    def cleanup(): Unit = Seq("ow", "st", "stp", "rec")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS tl_notify_$s"))
-    cleanup()
-    try {
-      Tables.overwriteTable(df, "tl_notify_ow")
-      Tables.stagedOverwrite(df, "tl_notify_st")
-      // the partition-preserving staging path writes outside overwriteTable
-      Tables.stagedOverwrite(df, "tl_notify_stp", Seq("v"))
-      // crash-recovery rename materializes the table — must notify too
-      Tables.overwriteTable(df, "tl_notify_rec__staging")
-      spark.sql("DROP TABLE IF EXISTS tl_notify_rec")
-      seen.remove("tl_notify_rec") // ignore any earlier notification
-      assert(Tables.recoverStaged(spark, "tl_notify_rec"))
-      val expected = Seq("ow", "st", "stp__staging", "stp", "rec")
-        .map(s => s"tl_notify_$s")
-      val missing = expected.filterNot(fired)
-      assert(missing.isEmpty, s"sinks that bypassed the write listener: $missing")
-    } finally cleanup()
-  }
-
   test("dropManaged under a non-default current database deletes the right directory") {
     import sqlImplicits._
     spark.sql("CREATE DATABASE IF NOT EXISTS graft_dm_db")

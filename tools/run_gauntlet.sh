@@ -34,10 +34,13 @@ echo "== benchmark, uncorrupted and traced: every workload passes its checks and
 # wall time, so a change that adds a Spark job, a task, a SQL execution
 # or a written byte fails here. tools/work_counters.json holds the
 # recorded values (warehouse_queries: per-query averages over the 12
-# queries a seed-1 run draws). corpus_curation is the exception:
-# identical runs give either 83 jobs / 290 tasks or 85 / 292 (two AQE
-# stage jobs inside the ivfPqTopK collect come and go), so the file
-# holds the higher pair.
+# queries a seed-1 run draws). Two workloads are the exception, and
+# the file holds their higher values: in corpus_curation identical
+# runs give either 83 jobs / 290 tasks or 85 / 292 (two AQE stage jobs
+# inside the ivfPqTopK collect come and go); event_fold folds one or
+# two batches in its 2 s window, and its bytes-written and shuffle
+# means per batch depend on which (114,109 / 335,696 for one batch,
+# 125,059.5 / 371,040 for two).
 # A change that lowers a counter lowers its recorded value; one that
 # raises a counter says why.
 for w in citybike_load warehouse_queries corpus_curation event_fold; do
